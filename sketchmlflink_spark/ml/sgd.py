@@ -4,24 +4,27 @@ Spark's execution model (SURVEY.md §3.2 translation):
 
   cache training DataFrame once; per epoch:
     broadcast (w, b)
-    → ONE Arrow-batched mapInPandas pass per partition computes the
-      partition-local gradient sum in numpy AND compresses it
-      (fuses T2+T3+T4+partial-A1 of SURVEY.md §2 — the reference runs
-      these as separate Flink maps)
-    → partials (one tiny row per partition: sketch bytes + counters)
-      merge up a binary tree with re-sketch per combine ("reduce" mode,
-      SGD:256-281) or in one decompress-and-sum pass ("reduce_group",
-      SGD:238-253)
+    → ONE pass per partition over cached numpy blocks computes the
+      partition-local gradient sum AND compresses it (fuses
+      T2+T3+T4+partial-A1 of SURVEY.md §2 — the reference runs these as
+      separate Flink maps)
+    → partials (one small record per partition: sketch bytes + counters)
+      merge in an RDD ``treeReduce(depth=solver.tree_depth)`` with
+      re-sketch per combine ("reduce" mode, SGD:256-281): executors
+      merge every level but the last, which the driver merges (6
+      partitions at the default depth 2: 6 → 2 on executors, 2 → 1 on
+      the driver); or, in "reduce_group" mode (SGD:238-253), the driver
+      decompresses and sums every partial in one pass
     → driver applies 1/count scaling, eta_t = eta0/sqrt(t) schedule,
       regularization step, separate intercept update (SGD:283-313)
 
 Scale notes: the per-epoch network cost is (#partitions × sketch bytes)
 — the compression applies exactly where the reference applies it, before
-anything crosses a partition boundary. At cluster scale with very large
-#partitions × dim, swap the driver-side tree for an RDD ``treeAggregate``
-over the same merge fn; the combOp is already associative-with-resketch.
-Loss is fused into the gradient pass (the reference pays a full extra
-pass per epoch when convergence checking — SGD:125; we get it free).
+anything crosses a partition boundary, and every treeReduce hop ships a
+re-sketched partial, so the combOp stays associative-with-resketch at
+any depth. Loss is fused into the gradient pass (the reference pays a
+full extra pass per epoch when convergence checking — SGD:125; we get it
+free).
 """
 
 from __future__ import annotations

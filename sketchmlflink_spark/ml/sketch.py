@@ -11,7 +11,10 @@ SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
     cols — min-update on insert, max-over-rows on query, so collisions
     bias the estimate only within a group's value range;
   * delta key coding: sorted nonzero indices stored as ``key_bits`` (8)
-    -bit deltas with a 4-byte escape;
+    -bit deltas with a 4-byte escape. The byte format is fixed (one byte
+    per delta; a delta ≥ 0xFF is 0xFF + little-endian uint32) and both
+    directions are vectorized numpy; the golden-digest and spec tests in
+    tests/test_sketch_codec_properties.py pin it byte for byte;
   * ZeroGradient elision: all-zero gradients never reach the codec
     (SGD:203, SGD:223 — P8 in SURVEY.md §4);
   * ``compression_type="None"``: identity path — exact values flow
@@ -72,6 +75,10 @@ class MinMaxSketch:
         return np.clip(est, 0, self.sentinel - 1)
 
 
+_ESC = 0xFF  # escape marker: the next 4 bytes hold the delta as <u4
+_ESC_OFFSETS = np.arange(1, 5)
+
+
 def encode_keys(keys: np.ndarray, key_bits: int = 8) -> bytes:
     """Delta-encode sorted int keys at ``key_bits`` resolution; deltas
     ≥ escape are stored as escape marker + uint32 (SGD:346 keyBits=8)."""
@@ -79,28 +86,42 @@ def encode_keys(keys: np.ndarray, key_bits: int = 8) -> bytes:
     if keys.size == 0:
         return b""
     deltas = np.diff(keys, prepend=0).astype(np.int64)
-    out = bytearray()
-    for d in deltas:
-        if d < 255:
-            out.append(int(d))
-        else:
-            out.append(255)
-            out.extend(int(d).to_bytes(4, "little"))
-    return bytes(out)
+    if deltas.min() < 0:
+        raise ValueError("encode_keys: keys must be sorted ascending and non-negative")
+    if deltas.max() > 0xFFFFFFFF:
+        raise ValueError("encode_keys: a key gap >= 2^32 does not fit the 4-byte escape")
+    esc = deltas >= _ESC
+    if not esc.any():
+        return deltas.astype(np.uint8).tobytes()
+    # each delta takes 1 byte, an escaped one 5: start = index + 4 * (escapes before it)
+    starts = np.arange(deltas.size) + 4 * (np.cumsum(esc) - esc)
+    out = np.empty(deltas.size + 4 * int(esc.sum()), dtype=np.uint8)
+    out[starts] = np.minimum(deltas, _ESC)
+    out[starts[esc, None] + _ESC_OFFSETS] = deltas[esc].astype("<u4").view(np.uint8).reshape(-1, 4)
+    return out.tobytes()
 
 
 def decode_keys(buf: bytes) -> np.ndarray:
-    keys, acc, i = [], 0, 0
-    n = len(buf)
-    while i < n:
-        d = buf[i]
-        i += 1
-        if d == 255:
-            d = int.from_bytes(buf[i : i + 4], "little")
-            i += 4
-        acc += d
-        keys.append(acc)
-    return np.asarray(keys, dtype=np.int64)
+    b = np.frombuffer(buf, dtype=np.uint8)
+    cand = np.flatnonzero(b == _ESC)
+    if cand.size == 0:
+        return np.cumsum(b, dtype=np.int64)
+    # 0xFF can also sit inside an escape's payload: walk the candidates
+    # in order, skipping those covered by the previous marker's 4 bytes
+    markers, nxt = [], 0
+    for p in cand.tolist():
+        if p >= nxt:
+            markers.append(p)
+            nxt = p + 5
+    if nxt > b.size:
+        raise ValueError("decode_keys: truncated escape at the end of the key buffer")
+    m = np.asarray(markers, dtype=np.int64)
+    payload = m[:, None] + _ESC_OFFSETS
+    keep = np.ones(b.size, dtype=bool)
+    keep[payload.ravel()] = False
+    deltas = b[keep].astype(np.int64)
+    deltas[m - 4 * np.arange(m.size)] = b[payload].view("<u4").ravel()
+    return np.cumsum(deltas)
 
 
 @dataclass
@@ -159,9 +180,15 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     # (the reference's 8-bit quantization flag, SGD:343-346)
     bins = min(cfg.bin_num, 255)
     qs = np.linspace(0.0, 1.0, bins + 1)
-    splits = np.quantile(vals, qs)
+    # one sort serves both the quantiles (a function of the order
+    # statistics only) and the bucket search, which runs far faster
+    # over ascending values than over values in key order
+    order = np.argsort(vals)
+    sorted_vals = vals[order]
+    splits = np.quantile(sorted_vals, qs)
     # bucket i covers [splits[i], splits[i+1])
-    buckets = np.clip(np.searchsorted(splits, vals, side="right") - 1, 0, bins - 1).astype(np.int16)
+    buckets = np.empty(vals.shape[0], dtype=np.int16)
+    buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, bins - 1)
     # group by bucket range: similar-magnitude values share a grid so a
     # collision costs at most the group's value range
     group_ids = (buckets.astype(np.int64) * cfg.group_num // bins).astype(np.int8)
@@ -220,9 +247,14 @@ def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchCon
         return a
     ka, va = decompress_kv(a)
     kb, vb = decompress_kv(b)
+    # both key lists are sorted, so a stable sort of their concatenation
+    # is a linear merge; a key present in both sums as va + vb
     keys = np.concatenate([ka, kb])
-    uk, inv = np.unique(keys, return_inverse=True)
-    vals = np.bincount(inv, weights=np.concatenate([va, vb]), minlength=uk.shape[0])
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
+    uk = keys[starts]
+    vals = np.add.reduceat(np.concatenate([va, vb])[order], starts)
     if not resketch:
         identity = cfg.with_(compression_type="None")
         return compress_kv(uk, vals, identity, dim)

@@ -464,8 +464,11 @@ def _census_ledger_write(path: str, value) -> None:
     restart into a crash loop."""
     import json
     import os
+    import threading
 
-    tmp = f"{path}.tmp.{os.getpid()}"
+    # unique per thread too: two writer threads sharing one temp file
+    # would race the second os.replace into FileNotFoundError
+    tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
     with open(tmp, "w") as f:
         json.dump(value, f)
     os.replace(tmp, path)

@@ -7,7 +7,10 @@ observable contract; SketchGradientDescent.scala:220-282 call sites).
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra import numpy as hnp
@@ -104,3 +107,87 @@ def test_key_coding_roundtrip_any_gaps(keys):
     """Delta coding with the 4-byte escape must survive arbitrary gaps
     (feature indices at 100 TB are sparse and highly irregular)."""
     np.testing.assert_array_equal(SK.decode_keys(SK.encode_keys(keys)), keys)
+
+
+def _spec_encode_keys(keys: np.ndarray) -> bytes:
+    """The key format's executable spec: the original per-key encoder.
+    One byte per delta; a delta >= 255 is 0xFF + little-endian uint32."""
+    out = bytearray()
+    for d in np.diff(keys, prepend=0).astype(np.int64):
+        if d < 255:
+            out.append(int(d))
+        else:
+            out.append(255)
+            out.extend(int(d).to_bytes(4, "little"))
+    return bytes(out)
+
+
+# gaps at and around the escape threshold, and escapes whose 4 payload
+# bytes themselves contain 0xFF (0xFF00FF + 1 = 0xFF0100, 2^32 - 1 = ff ff ff ff)
+EDGE_GAPS = [0, 1, 254, 255, 256, 0xFF00FF + 1, 2**32 - 1]
+
+
+@given(
+    st.lists(
+        st.one_of(st.integers(0, 300), st.sampled_from(EDGE_GAPS), st.integers(0, 2**32 - 1)),
+        max_size=200,
+    ).map(lambda gaps: np.cumsum(np.array(gaps, dtype=np.int64)))
+)
+@settings(max_examples=300, deadline=None)
+def test_key_coding_byte_identical_to_spec(keys):
+    buf = SK.encode_keys(keys)
+    assert buf == _spec_encode_keys(keys)
+    np.testing.assert_array_equal(SK.decode_keys(buf), keys)
+
+
+def test_key_coding_escape_payloads_holding_0xff():
+    keys = np.cumsum(np.array([255, 0xFF00FF + 1, 2**32 - 1, 3, 256, 254], dtype=np.int64))
+    buf = SK.encode_keys(keys)
+    assert buf == bytes.fromhex("ff ff000000 ff 0001ff00 ff ffffffff 03 ff 00010000 fe")
+    np.testing.assert_array_equal(SK.decode_keys(buf), keys)
+
+
+def test_encode_keys_rejects_unsorted_keys():
+    with pytest.raises(ValueError, match="sorted"):
+        SK.encode_keys(np.array([5, 9, 3], dtype=np.int64))
+
+
+def test_encode_keys_rejects_gap_beyond_uint32():
+    with pytest.raises(ValueError, match="2\\^32"):
+        SK.encode_keys(np.array([7, 7 + 2**32], dtype=np.int64))
+
+
+def test_decode_keys_rejects_truncated_escape():
+    with pytest.raises(ValueError, match="truncated"):
+        SK.decode_keys(bytes.fromhex("01 ff 0001"))
+
+
+def _wide_partition_gradient(seed: int, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """~44k sorted keys in 2^20 dims, like one partition's gradient in
+    the wide sketch benchmark; the cut before dim - 1 forces escapes."""
+    rng = np.random.default_rng(seed)
+    keys = np.unique(rng.integers(0, dim, size=45_000))
+    keys = np.concatenate([keys[keys < dim - 4096], [dim - 1]])
+    return keys, rng.standard_normal(keys.size)
+
+
+def test_wire_bytes_match_golden_digests():
+    """Pins the shipped bytes of a compressed partition gradient and of
+    a 6 -> 2 -> 1 re-sketching merge tree (treeReduce's shape on the
+    wide benchmark). The digests cover the pickled envelope, so they
+    hold for this repository's pinned numpy/Python versions."""
+    dim = 1 << 20
+    leaves = [SK.compress_kv(*_wide_partition_gradient(s, dim), CFG, dim) for s in range(6)]
+
+    def digest(sg):
+        return hashlib.sha256(SK.to_bytes(sg)).hexdigest()
+
+    def fold(parts):
+        acc = parts[0]
+        for sg in parts[1:]:
+            acc = SK.merge(acc, sg, CFG, dim)
+        return acc
+
+    root = SK.merge(fold(leaves[:3]), fold(leaves[3:]), CFG, dim)
+    assert digest(leaves[0]) == "71eabb790dd1e73f1234fcf5a781305137fe293b8792abb298015110782c0103"
+    assert digest(root) == "71df381b0f432681aaa8c8faab66140dccfbafd67f8a9d41042da38775f182d4"
