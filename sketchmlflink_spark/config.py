@@ -20,7 +20,8 @@ class SketchConfig:
     Defaults mirror the reference's MLConf construction
     (SketchGradientDescent.scala:340-348, SketchConfig.scala:15):
     quantile bins = 256 (Quantizer.DEFAULT_BIN_NUM), groups = 2
-    (SKETCH_GROUP_NO), minmax rows = 3, col ratio = 0.3, key bits = 8.
+    (SKETCH_GROUP_NO), minmax rows = 3, col ratio = 0.3. The 8-bit
+    delta key format is fixed (see ml/sketch.py).
     """
 
     compression_type: str = "Sketch"  # {"Sketch", "None"} — Test.scala:30
@@ -28,7 +29,6 @@ class SketchConfig:
     group_num: int = 2
     sketch_rows: int = 3
     col_ratio: float = 0.3
-    key_bits: int = 8
     # Below this nnz the quantile-splits + grid overhead exceeds exact
     # float64 values, so ship exact (SketchML targets very wide sparse
     # gradients; tiny ones would *inflate*). 0 = always sketch.

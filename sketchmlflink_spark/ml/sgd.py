@@ -144,10 +144,34 @@ def _loss_grad(name: str):
     return f
 
 
+def _partial_record_fn():
+    """The builder of one partition's contribution to the treeReduce:
+    the serialized sketch plus the scalars the combiner sums. Returned
+    nested so cloudpickle ships it by value inside the partial fns; a
+    reference to a module-level function would make every task's fresh
+    Python worker import this module (pandas, pyspark.sql)."""
+
+    def partial_record(sg, isum: float, n: int, loss: float) -> dict:
+        payload = SK.to_bytes(sg)
+        return {
+            "payload": payload,
+            "intercept_sum": isum,
+            "n": n,
+            # "reduce"-mode averaging denominator: partitions whose
+            # gradient was all-zero are excluded (SGD:261-270)
+            "live_n": n if sg is not None else 0,
+            "loss": loss,
+            "bytes": len(payload),
+        }
+
+    return partial_record
+
+
 def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
     """Per-partition gradient pass over cached numpy blocks. Nested so
     cloudpickle ships it by value; touches only numpy + sketch codec."""
     loss_fn = _loss_grad(loss_name)
+    partial_record = _partial_record_fn()
 
     def fn(blocks):
         w, b = bc.value
@@ -164,17 +188,7 @@ def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "s
         # ZeroGradient elision (P8): an all-zero partition gradient ships
         # a null payload and is skipped by the combiner (SGD:261-270)
         sg = SK.compress(grad, sketch_cfg, dim) if n > 0 else None
-        payload = SK.to_bytes(sg)
-        yield {
-            "payload": payload,
-            "intercept_sum": isum,
-            "n": n,
-            # "reduce"-mode averaging denominator: partitions whose
-            # gradient was all-zero are excluded (SGD:261-270)
-            "live_n": n if sg is not None else 0,
-            "loss": loss,
-            "bytes": len(payload),
-        }
+        yield partial_record(sg, isum, n, loss)
 
     return fn
 
@@ -189,6 +203,7 @@ def _make_partial_fn_sparse(bc, dim: int, sketch_cfg: SketchConfig, loss_name: s
     runtest.sh:34-36)."""
 
     loss_fn = _loss_grad(loss_name)
+    partial_record = _partial_record_fn()
 
     def fn(blocks):
         w, b = bc.value
@@ -211,15 +226,7 @@ def _make_partial_fn_sparse(bc, dim: int, sketch_cfg: SketchConfig, loss_name: s
             uk, inv = np.unique(idx_cat, return_inverse=True)
             gv = np.bincount(inv, weights=np.concatenate(contrib_parts), minlength=uk.shape[0])
             sg = SK.compress_kv(uk, gv, sketch_cfg, dim)  # None if all-zero (P8)
-        payload = SK.to_bytes(sg)
-        yield {
-            "payload": payload,
-            "intercept_sum": isum,
-            "n": n,
-            "live_n": n if sg is not None else 0,
-            "loss": loss,
-            "bytes": len(payload),
-        }
+        yield partial_record(sg, isum, n, loss)
 
     return fn
 

@@ -10,11 +10,11 @@ SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
     hash grids of ``sketch_rows`` (3) rows × ``col_ratio`` (0.3) · nnz
     cols — min-update on insert, max-over-rows on query, so collisions
     bias the estimate only within a group's value range;
-  * delta key coding: sorted nonzero indices stored as ``key_bits`` (8)
-    -bit deltas with a 4-byte escape. The byte format is fixed (one byte
-    per delta; a delta ≥ 0xFF is 0xFF + little-endian uint32) and both
-    directions are vectorized numpy; the golden-digest and spec tests in
-    tests/test_sketch_codec_properties.py pin it byte for byte;
+  * delta key coding: sorted nonzero indices stored as 8-bit deltas
+    (SGD:346 keyBits=8) with a 4-byte escape. The byte format is fixed
+    (one byte per delta; a delta ≥ 0xFF is 0xFF + little-endian uint32)
+    and both directions are vectorized numpy; the golden-digest and spec
+    tests in tests/test_sketch_codec_properties.py pin it byte for byte;
   * ZeroGradient elision: all-zero gradients never reach the codec
     (SGD:203, SGD:223 — P8 in SURVEY.md §4);
   * ``compression_type="None"``: identity path — exact values flow
@@ -22,8 +22,8 @@ SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
 
 Observable contract (SURVEY.md §2.6 table): ``decompress(compress(g))``
 ≈ g with error bounded by the containing group's value range;
-``merge`` = decompress + dense add (+ optional re-sketch, mirroring the
-in-combiner re-sketch of SGD:274).
+``merge`` = decompress + sparse add + re-sketch, mirroring the
+in-combiner re-sketch of SGD:274.
 """
 
 from __future__ import annotations
@@ -79,10 +79,9 @@ _ESC = 0xFF  # escape marker: the next 4 bytes hold the delta as <u4
 _ESC_OFFSETS = np.arange(1, 5)
 
 
-def encode_keys(keys: np.ndarray, key_bits: int = 8) -> bytes:
-    """Delta-encode sorted int keys at ``key_bits`` resolution; deltas
-    ≥ escape are stored as escape marker + uint32 (SGD:346 keyBits=8)."""
-    assert key_bits == 8, "reference uses 8-bit delta keys"
+def encode_keys(keys: np.ndarray) -> bytes:
+    """Delta-encode sorted int keys as one byte each; deltas ≥ escape
+    are stored as escape marker + uint32 (SGD:346 keyBits=8)."""
     if keys.size == 0:
         return b""
     deltas = np.diff(keys, prepend=0).astype(np.int64)
@@ -232,9 +231,9 @@ def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarra
     return out
 
 
-def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchConfig, dim: int, resketch: bool = True) -> SketchedGradient | None:
-    """Combine two in-transit gradients: decompress → add → (optionally)
-    re-compress, so every hop of the reduce tree ships a sketch — the
+def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
+    """Combine two in-transit gradients: decompress → add → re-compress,
+    so every hop of the reduce tree ships a sketch — the
     in-combiner re-sketch of SGD:274 (P1 in SURVEY.md §4).
 
     The add runs in sparse kv form (concat + unique-sum), so a combine
@@ -255,15 +254,7 @@ def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchCon
     starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
     uk = keys[starts]
     vals = np.add.reduceat(np.concatenate([va, vb])[order], starts)
-    if not resketch:
-        identity = cfg.with_(compression_type="None")
-        return compress_kv(uk, vals, identity, dim)
     return compress_kv(uk, vals, cfg, dim)
-
-
-def count_nnz(values: np.ndarray) -> int:
-    """countNNZ analog (SGD:356-362)."""
-    return int((np.abs(values) > EPS).sum())
 
 
 def to_bytes(sg: SketchedGradient | None) -> bytes:

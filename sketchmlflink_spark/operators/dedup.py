@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sketchmlflink_spark.functions import text as T
+from sketchmlflink_spark.operators.kernels import fold_dot
 from sketchmlflink_spark.operators.relational import t
 from sketchmlflink_spark.registry import register
 
@@ -238,10 +239,10 @@ def lsh_candidate_pairs(
     candidate pairs. The only shuffle is on (band, band_hash).
     ``distinct=False`` exposes the raw per-band join output (one row
     per band collision, pre-dedup) — the stage whose task distribution
-    the clump probe measures: a (band, band_hash) join KEY cannot split
-    across tasks, so a near-dup clump's quadratic pair production lands
-    on one task per band (share capped at 1/MINHASH_BANDS by banding
-    itself, per-bucket work uncapped — see bin/d04_clump_probe.py)."""
+    PROBE_r10_d04_clump.txt records: a (band, band_hash) join KEY cannot
+    split across tasks, so a near-dup clump's quadratic pair production
+    lands on one task per band (share capped at 1/MINHASH_BANDS by
+    banding itself, per-bucket work uncapped)."""
     bands = F.array(
         *[
             F.struct(
@@ -305,56 +306,13 @@ def _adaptive_tile(size_col, tile: int):
     )
 
 
-def _minhash_tile_pairs(
-    exploded: DataFrame, id_col: str, tile: int
-) -> DataFrame:
-    """The tile-pair frame of lsh_candidate_pairs_tiled, pre-expansion:
-    one row per (band, band_hash, ta, tb) with the packed sorted id
-    lists of both tiles, repartitioned on the full tile-pair key.
-    Extracted so bin/d21_adaptive_probe.py can measure the per-task
-    emission geometry (|ia|·|ib| / triangular) without materializing
-    the quadratic expansion at probe scales."""
-    w_all = Window.partitionBy("band", "band_hash")
-    size = F.count(F.lit(1)).over(w_all)
-    tiled = exploded.withColumn(
-        "m", F.ceil(size / _adaptive_tile(size, tile)).cast("bigint")
-    ).withColumn("t", F.pmod(F.xxhash64(F.col(id_col)), F.col("m")).cast("int"))
-    # localCheckpoint: the packed groups feed BOTH sides of the tile-pair
-    # self-join (the d18 discipline — otherwise the signature banding +
-    # window run twice)
-    groups = (
-        tiled.groupBy("band", "band_hash", "t")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .localCheckpoint()
-    )
-    a, b = groups.alias("a"), groups.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.t") <= F.col("b.t")),
-        )
-        .select(
-            F.col("a.band").alias("band"),
-            F.col("a.band_hash").alias("band_hash"),
-            F.col("a.t").alias("ta"),
-            F.col("b.t").alias("tb"),
-            (F.col("a.t") == F.col("b.t")).alias("same_tile"),
-            F.col("a.ids").alias("ia"),
-            F.col("b.ids").alias("ib"),
-        )
-        .repartition("band", "band_hash", "ta", "tb")
-    )
-
-
 def lsh_candidate_pairs_tiled(
     sig_df: DataFrame, id_col: str = "doc_id", tile: int = D21_TILE,
     distinct: bool = True,
 ) -> DataFrame:
     """lsh_candidate_pairs' EXACT pair set with the per-bucket quadratic
     expansion made cluster-parallel — d18's tiling recipe applied to the
-    minhash family (VERDICT r9 item 5; bin/d04_clump_probe.py measured a
+    minhash family (VERDICT r9 item 5; PROBE_r10_d04_clump.txt records a
     30%-near-dup doc clump putting 24% of the plain shuffle join's output
     in ONE task, two indivisible band-keys on one reducer, per-key work
     growing quadratically with clump size).
@@ -393,7 +351,38 @@ def lsh_candidate_pairs_tiled(
     exploded = sig_df.select(id_col, F.explode(bands).alias("bb")).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
     )
-    tp = _minhash_tile_pairs(exploded, id_col, tile)
+    w_all = Window.partitionBy("band", "band_hash")
+    size = F.count(F.lit(1)).over(w_all)
+    tiled = exploded.withColumn(
+        "m", F.ceil(size / _adaptive_tile(size, tile)).cast("bigint")
+    ).withColumn("t", F.pmod(F.xxhash64(F.col(id_col)), F.col("m")).cast("int"))
+    # localCheckpoint: the packed groups feed BOTH sides of the tile-pair
+    # self-join (the d18 discipline — otherwise the signature banding +
+    # window run twice)
+    groups = (
+        tiled.groupBy("band", "band_hash", "t")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .localCheckpoint()
+    )
+    a, b = groups.alias("a"), groups.alias("b")
+    tp = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.t") <= F.col("b.t")),
+        )
+        .select(
+            F.col("a.band").alias("band"),
+            F.col("a.band_hash").alias("band_hash"),
+            F.col("a.t").alias("ta"),
+            F.col("b.t").alias("tb"),
+            (F.col("a.t") == F.col("b.t")).alias("same_tile"),
+            F.col("a.ids").alias("ia"),
+            F.col("b.ids").alias("ib"),
+        )
+        .repartition("band", "band_hash", "ta", "tb")
+    )
 
     def expand(batches):
         for pdf in batches:
@@ -486,8 +475,8 @@ def d21_minhash_tiled_neardup(
     lsh_candidate_pairs_tiled): the per-(band, band_hash) pair
     explosion is spread across tile-pair tasks with a tile² output cap
     instead of one indivisible join key per band — the 100-TB shape for
-    clumped corpora, mirroring d18 beside d07. bin/d04_clump_probe.py
-    carries the measured before/after task shares."""
+    clumped corpora, mirroring d18 beside d07. PROBE_r10_d04_clump.txt
+    records the measured before/after task shares."""
     return minhash_near_duplicates(
         t(spark, sf_dir, "documents"),
         cand_fn=lambda s: lsh_candidate_pairs_tiled(s, tile=tile),
@@ -982,11 +971,8 @@ def _d07_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-element boxing, and the expression tree repeated every bit
     column in both ``sig`` and the band array — measured 2.5 s of d18's
     3.3 s at sf0.1 (~500 µs/row for what is 2k flops). The kernel is
-    BIT-EXACT with the old fold (and with DuckDB's sequential
-    list_dot_product, which d19's oracle replays): it accumulates over
-    dimensions in ascending index order, one rounded multiply + one
-    rounded add per step from a 0.0 start — the identical IEEE op
-    sequence per (row, plane), just vectorized across rows."""
+    BIT-EXACT with the old fold and with d19's oracle: the dots are
+    kernels.fold_dot (the argument is in kernels.py)."""
     import numpy as np
     import pandas as pd
 
@@ -998,7 +984,6 @@ def _d07_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double_array("embedding").alias("v")
     )
     P = _d07_planes(64)  # (30, 64)
-    n_planes = D07_BANDS * D07_BITS
 
     def sign_explode(batches):
         band_ids = np.arange(D07_BANDS, dtype=np.int32)
@@ -1007,11 +992,7 @@ def _d07_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not n:
                 continue
             vcol = pdf["v"].to_numpy()
-            V = np.stack(vcol)
-            acc = np.zeros((n, n_planes))
-            for d in range(min(V.shape[1], P.shape[1])):
-                acc = acc + V[:, d : d + 1] * P[:, d]
-            bits = (acc >= 0).astype(np.int64)
+            bits = (fold_dot(np.stack(vcol), P) >= 0).astype(np.int64)
             buckets = np.zeros((n, D07_BANDS), dtype=np.int64)
             for b in range(D07_BANDS):
                 for j in range(D07_BITS):
@@ -1074,8 +1055,8 @@ def d07_embed_lsh_candidate_verify(
     Θ(matching pairs) = Θ(n²·density); production dedup runs this
     operator at 0.9+, where buckets shrink exponentially in bits and
     the listing is sparse. ``threshold`` is exposed for exactly that
-    production operating point (bin/d07_threshold_probe.py measures the
-    sf1→sf3 exponent at 0.9; BASELINE.md records the numbers).
+    production operating point (BASELINE.md, "d07 at the production
+    threshold", records the sf1→sf3 exponent at 0.9).
     """
     import numpy as np
     import pandas as pd

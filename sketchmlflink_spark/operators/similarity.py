@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from sketchmlflink_spark.functions import zround
 from sketchmlflink_spark.functions.vector import as_double_array, cosine, dot, norm2
+from sketchmlflink_spark.operators.kernels import fold_dot, fold_sqnorm, top_mask
 from sketchmlflink_spark.operators.relational import t
 from sketchmlflink_spark.registry import register
 
@@ -153,14 +154,10 @@ def _hyperplane_buckets(emb: DataFrame) -> DataFrame:
     ``aggregate(zip_with(...))`` higher-order dot folds per row — at sf1
     that is 120k interpreted 64-dim folds for what is ~7.7M flops.
 
-    BIT-EXACT with the expression form (and with DuckDB's sequential
-    list_dot_product, which the s03/s14 oracles replay from the same
-    hyperplane literals): the kernel accumulates over dimensions in
-    ascending index order, one rounded multiply + one rounded add per
-    step from a 0.0 start — the identical IEEE op sequence per
-    (row, plane), vectorized across rows. Signs (and therefore buckets)
-    can never differ; pinned by
-    tests/test_kernel_parity.py::test_hyperplane_bucket_kernel_matches_expression."""
+    BIT-EXACT with the expression form and with the s03/s14 oracles,
+    which replay the same hyperplane literals: the dots are
+    kernels.fold_dot (the argument is in kernels.py), so signs and
+    buckets can never differ."""
     import numpy as np
     import pandas as pd
 
@@ -172,15 +169,10 @@ def _hyperplane_buckets(emb: DataFrame) -> DataFrame:
 
     def sign_buckets(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if len(pdf) == 0:
                 continue
             vcol = pdf["v"].to_numpy()
-            V = np.stack(vcol)
-            acc = np.zeros((n, LSH_PLANES))
-            for d in range(min(V.shape[1], P.shape[1])):
-                acc = acc + V[:, d : d + 1] * P[:, d]
-            bucket = ((acc >= 0) @ weights).astype(np.int32)
+            bucket = ((fold_dot(np.stack(vcol), P) >= 0) @ weights).astype(np.int32)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "v": vcol, "bucket": bucket}
             )
@@ -820,26 +812,15 @@ def ivf_pq_topk(
             sub_scores = np.zeros((len(ids), nq), dtype=np.int64)
             for mi in range(PQ_M):
                 sub_scores += luts_[:, mi, codes[:, mi]].T  # (n, nq)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                mask = np.isin(lst, probes_[qi]) & (ids != q_ids_[qi])
-                if not mask.any():
-                    continue
-                score = qc_[qi, lst[mask]] + sub_scores[mask, qi]
-                # (score desc, n_id asc) — identical to the global
-                # window's ordering, so the block-local cut is lossless
-                idx = np.lexsort((ids[mask], -score))[:cand]
-                out_q.append(np.full(len(idx), q_ids_[qi], dtype=np.int64))
-                out_n.append(ids[mask][idx])
-                out_s.append(score[idx])
-            if not out_q:
-                continue
+            score = qc_[:, lst].T + sub_scores
+            # a row is a candidate for the queries that probe its list
+            probed = (lst[:, None, None] == probes_[None, :, :]).any(axis=2)
+            valid = probed & (ids[:, None] != q_ids_[None, :])
+            # (score desc, n_id asc) — identical to the global window's
+            # ordering, so the block-local cut is lossless
+            ii, jj = np.nonzero(top_mask(score, ids, valid, cand))
             yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "n_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
+                {"q_id": q_ids_[jj], "n_id": ids[ii], "adc": score[ii, jj]}
             )
 
     adc = code_table.mapInPandas(adc_scan, "q_id long, n_id long, adc long")
@@ -1035,19 +1016,16 @@ def _query_cosine_scan(
     The Catalyst form evaluated ``cosine()`` — THREE interpreted
     ``aggregate(zip_with(...))`` 64-dim folds — per (query, row) pair:
     200k interpreted folds at sf1 for s08 (profiled r12). The kernel is
-    BIT-EXACT with that expression (and with DuckDB's sequential
-    list_dot_product, which the s08/s13 oracles replay): each dot
-    accumulates over dimensions in ascending index order, one rounded
-    multiply + one rounded add per step from 0.0 (the d07 kernel
-    precedent, dedup.py:973), and the cosine is dot/(norm_q · norm_c)
-    with the same operand order. Threshold compare (>=) and the
-    (cos DESC, n_id ASC) per-batch truncation are order-free.
+    BIT-EXACT with that expression and with the s08/s13 oracles: the
+    dots and self-dots are kernels.fold_dot/fold_sqnorm, and the cosine
+    is dot/(norm_q · norm_c) with the same operand order. Threshold
+    compare (>=) and the (cos DESC, n_id ASC) per-batch truncation are
+    order-free.
 
     ``per_batch_top``: emit only each batch's top-N rows PER QUERY under
-    (cos DESC, n_id ASC) — batches partition the corpus, so any row in
-    the global top-N ranks ≤ N inside its own batch and a downstream
-    orderBy/limit (or row_number ≤ N) returns exactly the rows the full
-    stream would (the s02 per-group-top containment argument).
+    (cos DESC, n_id ASC) via kernels.top_mask; a downstream
+    orderBy/limit (or row_number ≤ N) then returns exactly the rows the
+    full stream would.
 
     ``carry_v``: also emit the corpus row's vector (s13's pool carries
     its vectors into the bounded pairwise stage)."""
@@ -1059,37 +1037,20 @@ def _query_cosine_scan(
     ensure_workers_can_import(emb.sparkSession)
     q_ids = np.asarray([r[0] for r in query_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
-    nq, dim = Q.shape
-    # query self-dots: the same ascending-dim one-mul-one-add sequence
-    qacc = np.zeros(nq)
-    for d in range(dim):
-        qacc = qacc + Q[:, d] * Q[:, d]
-    q_norm = np.sqrt(qacc)
+    q_norm = np.sqrt(fold_sqnorm(Q))
 
     def scan(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if len(pdf) == 0:
                 continue
             V = np.stack(pdf["v"].to_numpy())
-            acc = np.zeros((n, nq))
-            cacc = np.zeros(n)
-            for d in range(min(V.shape[1], dim)):
-                acc = acc + V[:, d : d + 1] * Q[:, d]
-                cacc = cacc + V[:, d] * V[:, d]
-            cos = acc / (q_norm[None, :] * np.sqrt(cacc)[:, None])
+            cos = fold_dot(V, Q) / (q_norm[None, :] * np.sqrt(fold_sqnorm(V))[:, None])
             n_ids = pdf["vec_id"].to_numpy()
             valid = n_ids[:, None] != q_ids[None, :]
             if threshold is not None:
                 valid &= cos >= threshold
-            if per_batch_top is not None and valid.any():
-                # rank within (batch, query) under (cos DESC, n_id ASC);
-                # ranks > per_batch_top can never reach the global top-N
-                neg = np.where(valid, -cos, np.inf)
-                order = np.lexsort((n_ids[:, None].repeat(nq, 1), neg), axis=0)
-                rank = np.empty_like(order)
-                np.put_along_axis(rank, order, np.arange(n)[:, None], axis=0)
-                valid &= rank < per_batch_top
+            if per_batch_top is not None:
+                valid = top_mask(cos, n_ids, valid, per_batch_top)
             ii, jj = np.nonzero(valid)
             out = {"q_id": q_ids[jj], "n_id": n_ids[ii], "cos": cos[ii, jj]}
             if carry_v:
@@ -1185,18 +1146,12 @@ def s09_knn_blocked_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             X = np.stack(pdf["v"].to_numpy())
             Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            cos = Qb @ Xn.T  # (nq, nb)
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(ids_q)):
-                mask = n_ids != ids_q[qi]
-                cand_n, cand_c = n_ids[mask], cos[qi][mask]
-                # deterministic (cos desc, n_id asc) — identical to the
-                # global merge window, so local pruning is lossless
-                order = np.lexsort((cand_n, -cand_c))[:KNN_K]
-                out_q.extend([ids_q[qi]] * len(order))
-                out_n.extend(cand_n[order])
-                out_c.extend(cand_c[order])
-            yield pd.DataFrame({"q_id": out_q, "n_id": out_n, "cos": out_c})
+            cos = (Qb @ Xn.T).T  # (nb, nq)
+            # (cos desc, n_id asc) — identical to the global merge
+            # window, so local pruning is lossless
+            keep = top_mask(cos, n_ids, n_ids[:, None] != ids_q[None, :], KNN_K)
+            ii, jj = np.nonzero(keep)
+            yield pd.DataFrame({"q_id": ids_q[jj], "n_id": n_ids[ii], "cos": cos[ii, jj]})
 
     cand = emb.mapInPandas(block_topk, "q_id long, n_id long, cos double")
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
@@ -1402,20 +1357,14 @@ def s11_sq8_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def idot_scan(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if len(pdf) == 0:
                 continue
             C = np.stack(pdf["code"].to_numpy()).astype(np.int64)
             dots = C @ Qc.T                      # (n, nq) exact int64
             cc = (C * C).sum(axis=1)             # (n,) exact int64
             acos = dots / np.sqrt(qq[None, :] * cc[:, None])
             n_ids = pdf["vec_id"].to_numpy()
-            valid = n_ids[:, None] != q_ids[None, :]
-            neg = np.where(valid, -acos, np.inf)
-            order = np.lexsort((np.broadcast_to(n_ids[:, None], neg.shape), neg), axis=0)
-            rank = np.empty_like(order)
-            np.put_along_axis(rank, order, np.arange(n)[:, None], axis=0)
-            valid &= rank < S11_CANDIDATES
+            valid = top_mask(acos, n_ids, n_ids[:, None] != q_ids[None, :], S11_CANDIDATES)
             ii, jj = np.nonzero(valid)
             yield pd.DataFrame(
                 {"q_id": q_ids[jj], "n_id": n_ids[ii], "acos": acos[ii, jj]}

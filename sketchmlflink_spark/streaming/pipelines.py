@@ -778,7 +778,6 @@ def run_to_batch(
                     f"streaming replay {name!r} still running after {timeout_s}s — "
                     "refusing to return a partial result; raise timeout_s"
                 )
-            _dump_progress(q, name)
         finally:
             q.stop()
             _unload_state_stores(spark)
@@ -799,29 +798,6 @@ def _unload_state_stores(spark: SparkSession) -> None:
     try:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception:  # noqa: BLE001 — cleanup must never fail a query
-        pass
-
-
-def _dump_progress(q, name: str) -> None:
-    """Measurement hook (optimization guide §1): when
-    $SPARK_GRAFT_STREAM_PROGRESS_DIR is set, append every micro-batch's
-    StreamingQueryProgress (durationMs breakdown: addBatch /
-    getBatch / commitOffsets / walCommit ..., stateOperators commit
-    times) to one JSONL file per query so replay wall time can be
-    attributed to engine phases instead of guessed at. No-op (and
-    exception-proof) in normal runs."""
-    import json
-
-    out_dir = os.environ.get("SPARK_GRAFT_STREAM_PROGRESS_DIR")
-    if not out_dir:
-        return
-    try:
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, f"{name}.jsonl"), "a") as f:
-            for p in q.recentProgress or []:
-                d = p.json if isinstance(getattr(p, "json", None), str) else json.dumps(p)
-                f.write(d + "\n")
-    except Exception:  # noqa: BLE001 — a broken probe must not fail the query
         pass
 
 
@@ -976,7 +952,6 @@ def run_foreach_batch(
         )
         try:
             q.awaitTermination(timeout_s)
-            _dump_progress(q, "feb_" + uuid.uuid4().hex[:8])
         finally:
             q.stop()
             _unload_state_stores(result.sparkSession)

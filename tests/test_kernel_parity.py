@@ -1,16 +1,103 @@
-"""Round-12 kernel parity: every numpy partition kernel that replaced an
-interpreted higher-order-function site must return EXACTLY (bit-for-bit /
+"""Kernel parity, in two layers.
+
+Spark-free: the shared recipes in sketchmlflink_spark/operators/kernels.py
+against scalar specs kept here — ``fold_dot``/``fold_sqnorm`` bit-equal
+to a plain Python ascending-dimension loop, ``top_mask`` equal to a
+sort-per-column.
+
+Spark: every numpy partition kernel that replaced an interpreted
+higher-order-function site must return EXACTLY (bit-for-bit /
 multiset-identical) what the Catalyst expression form returned. The
 expression forms are rebuilt here as the reference — they are the
 semantics the DuckDB oracles replay."""
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from sketchmlflink_spark.functions.vector import as_double_array, cosine
+from sketchmlflink_spark.operators import similarity as S
+from sketchmlflink_spark.operators.kernels import fold_dot, fold_sqnorm, top_mask
 from sketchmlflink_spark.operators.relational import t
 from tests.conftest import SF_SMALL
+
+# --------------------------------------------------------------------------
+# Spark-free: kernels.py against scalar specs
+# --------------------------------------------------------------------------
+
+
+def _spec_dot(v, p) -> float:
+    """The DuckDB list_dot_product / Catalyst aggregate order."""
+    acc = 0.0
+    for d in range(min(len(v), len(p))):
+        acc = acc + float(v[d]) * float(p[d])
+    return acc
+
+
+def _spec_top_mask(score, ids, valid, n):
+    out = np.zeros(score.shape, dtype=bool)
+    for j in range(score.shape[1]):
+        rows = [i for i in range(score.shape[0]) if valid[i, j]]
+        rows.sort(key=lambda i: (-score[i, j], ids[i]))
+        out[rows[:n], j] = True
+    return out
+
+
+def _mixed(rng, shape):
+    """Values spanning magnitudes, so a reordered sum would round differently."""
+    return rng.standard_normal(shape) * 10.0 ** rng.integers(-6, 7, shape)
+
+
+@pytest.mark.parametrize(
+    "rows,v_dims,planes,p_dims",
+    [(50, 64, 6, 64), (40, 64, 30, 64), (30, 12, 5, 20), (30, 20, 5, 12), (1, 3, 1, 3)],
+    ids=["s03", "d07", "v-narrower", "v-wider", "single"],
+)
+def test_fold_dot_is_the_scalar_fold(rows, v_dims, planes, p_dims):
+    rng = np.random.default_rng(rows * 100 + v_dims)
+    V, P = _mixed(rng, (rows, v_dims)), _mixed(rng, (planes, p_dims))
+    want = np.array([[_spec_dot(v, p) for p in P] for v in V])
+    got = fold_dot(V, P)
+    assert got.shape == (rows, planes)
+    assert np.array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_fold_sqnorm_is_the_scalar_fold():
+    rng = np.random.default_rng(3)
+    V = _mixed(rng, (40, 64))
+    want = np.array([_spec_dot(v, v) for v in V])
+    assert np.array_equal(fold_sqnorm(V).view(np.int64), want.view(np.int64))
+
+
+def _top_case(seed: int, kind: str):
+    """Scores drawn from few values (many ties), ~30% invalid cells."""
+    rng = np.random.default_rng(seed)
+    rows, cols = int(rng.integers(1, 40)), int(rng.integers(1, 6))
+    if kind == "int64":
+        score = rng.integers(-(1 << 40), 1 << 40, (rows, cols)) // (1 << 38)
+    else:
+        score = rng.integers(-4, 5, (rows, cols)) / 4.0
+    ids = rng.permutation(10 * rows)[:rows].astype(np.int64)
+    return score, ids, rng.random((rows, cols)) < 0.7
+
+
+@pytest.mark.parametrize("kind", ["float", "int64"])
+@pytest.mark.parametrize("seed", range(20))
+def test_top_mask_is_a_sort_per_column(seed, kind):
+    score, ids, valid = _top_case(seed, kind)
+    for n in (1, 3, len(ids), len(ids) + 5):  # n ≥ the column length keeps every valid row
+        got = top_mask(score, ids, valid, n)
+        assert np.array_equal(got, _spec_top_mask(score, ids, valid, n)), n
+
+
+# --------------------------------------------------------------------------
+# Spark: each registry entry's kernel against its Catalyst expression
+# --------------------------------------------------------------------------
 
 
 def _emb(spark):
@@ -19,92 +106,75 @@ def _emb(spark):
     )
 
 
-def test_hyperplane_bucket_kernel_matches_expression(spark):
-    """s03/s14 signing kernel: identical bucket per row (bit-exact signs —
-    the kernel replays the ascending-dim one-mul-one-add fold)."""
-    from sketchmlflink_spark.operators.similarity import (
-        _hyperplane_buckets,
-        hyperplane_bucket,
+def _s03_kernel(spark):
+    return sorted(
+        (r["vec_id"], r["bucket"])
+        for r in S._hyperplane_buckets(_emb(spark)).select("vec_id", "bucket").collect()
     )
 
+
+def _s03_expression(spark):
+    """Identical bucket per row (bit-exact signs); every row present."""
     emb = _emb(spark)
-    kern = {
-        r["vec_id"]: r["bucket"]
-        for r in _hyperplane_buckets(emb).select("vec_id", "bucket").collect()
-    }
-    expr = {
-        r["vec_id"]: r["bucket"]
-        for r in emb.select(
-            "vec_id", hyperplane_bucket(F.col("v")).alias("bucket")
-        ).collect()
-    }
-    assert kern == expr and len(kern) == emb.count()
-
-
-def test_query_cosine_scan_matches_expression(spark):
-    """s08 kernel: same (q_id, n_id) match set, bit-identical raw cosines
-    vs the broadcast-join cosine() expression form."""
-    from sketchmlflink_spark.operators.similarity import (
-        N_QUERIES,
-        RANGE_TAU,
-        _query_cosine_scan,
+    rows = sorted(
+        (r["vec_id"], r["bucket"])
+        for r in emb.select("vec_id", S.hyperplane_bucket(F.col("v")).alias("bucket")).collect()
     )
+    assert len(rows) == emb.count()
+    return rows
 
+
+def _s08_kernel(spark):
     emb = _emb(spark)
-    qrows = [
-        (r["vec_id"], r["v"]) for r in emb.where(F.col("vec_id") < N_QUERIES).collect()
-    ]
-    kern = {
-        (r["q_id"], r["n_id"]): r["cos"]
-        for r in _query_cosine_scan(emb, qrows, threshold=RANGE_TAU).collect()
-    }
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
+    qrows = [(r["vec_id"], r["v"]) for r in emb.where(F.col("vec_id") < S.N_QUERIES).collect()]
+    scan = S._query_cosine_scan(emb, qrows, threshold=S.RANGE_TAU)
+    return sorted((r["q_id"], r["n_id"], r["cos"]) for r in scan.collect())
+
+
+def _s08_expression(spark):
+    """Same (q_id, n_id) match set with bit-identical raw cosines (float
+    ==, as the tuples compare) vs the broadcast-join cosine() form."""
+    emb = _emb(spark)
+    q = emb.where(F.col("vec_id") < S.N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     c = emb.select(F.col("vec_id").alias("n_id"), F.col("v").alias("cv"))
     cos = cosine(F.col("qv"), F.col("cv"))
-    expr = {
-        (r["q_id"], r["n_id"]): r["cos"]
+    return sorted(
+        (r["q_id"], r["n_id"], r["cos"])
         for r in F.broadcast(q)
         .join(c, F.col("n_id") != F.col("q_id"))
-        .where(cos >= RANGE_TAU)
+        .where(cos >= S.RANGE_TAU)
         .select("q_id", "n_id", cos.alias("cos"))
         .collect()
-    }
-    assert set(kern) == set(expr)
-    for k, v in expr.items():
-        assert kern[k] == v, f"cosine differs at {k} (not bit-exact)"
+    )
 
 
-def test_query_cosine_scan_per_batch_top_containment(spark):
-    """s13 pool select: per-batch top-POOL truncation + global limit must
-    return exactly the full stream's top-POOL — forced multi-batch so the
+def _s13_pool(spark, per_batch_top):
+    """s13 pool select from query 0, forced multi-batch so the per-batch
     containment argument is actually exercised."""
-    from sketchmlflink_spark.operators.similarity import S13_POOL, _query_cosine_scan
-
     emb = _emb(spark).repartition(8)  # several batches
     qrow = emb.where(F.col("vec_id") == 0).collect()[0]
-    qarg = [(qrow["vec_id"], qrow["v"])]
-
-    def topn(df):
-        return [
-            (r["n_id"], r["cos"])
-            for r in df.orderBy(F.desc("cos"), F.asc("n_id")).limit(S13_POOL).collect()
-        ]
-
-    full = topn(_query_cosine_scan(emb, qarg))
-    truncated = topn(_query_cosine_scan(emb, qarg, per_batch_top=S13_POOL))
-    assert truncated == full
+    scan = S._query_cosine_scan(emb, [(qrow["vec_id"], qrow["v"])], per_batch_top=per_batch_top)
+    return [
+        (r["n_id"], r["cos"])
+        for r in scan.orderBy(F.desc("cos"), F.asc("n_id")).limit(S.S13_POOL).collect()
+    ]
 
 
-def test_s11_idot_kernel_matches_expression(spark):
-    """s11 approximate scan: the kernel's integer dots / acos and its
-    per-batch top-C truncation must reproduce the Catalyst idot window's
-    candidate set and values exactly."""
-    from pyspark.sql.window import Window
+def _s11_kernel(spark):
+    """The full s11 query, whose candidate stage is the idot kernel."""
+    rows = sorted(
+        (r["q_id"], r["n_id"], r["rank"], r["cosine"])
+        for r in S.s11_sq8_ann_cosine(spark, SF_SMALL).collect()
+    )
+    assert all(not math.isnan(r[3]) for r in rows)
+    return rows
 
-    from sketchmlflink_spark.operators import similarity as S
 
+def _s11_expression(spark):
+    """The pre-kernel broadcast-join idot window picks the candidate set;
+    its exact cosine re-rank gives the top-k s11 must return."""
     emb = _emb(spark)
     scales_rows = (
         emb.select(F.posexplode("v").alias("pos", "x"))
@@ -120,7 +190,6 @@ def test_s11_idot_kernel_matches_expression(spark):
             "code"
         ),
     )
-    # Catalyst reference: the pre-round-12 broadcast-join idot window
     q = coded.where(F.col("vec_id") < S.N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("code").alias("qc")
     )
@@ -145,19 +214,12 @@ def test_s11_idot_kernel_matches_expression(spark):
         )
     )
     wq = Window.partitionBy("q_id").orderBy(F.desc("acos"), F.asc("n_id"))
-    want = {
-        (r["q_id"], r["n_id"]): r["acos"]
+    candidates = {
+        (r["q_id"], r["n_id"])
         for r in approx.withColumn("crk", F.row_number().over(wq))
         .where(F.col("crk") <= S.S11_CANDIDATES)
         .collect()
     }
-    # the round-12 s11 output embeds the kernel; rebuild its candidate
-    # stage by running the full query and checking the emitted (q, n)
-    # pairs carry the exact re-ranked cosines of the reference pairs
-    got_rows = S.s11_sq8_ann_cosine(spark, SF_SMALL).collect()
-    # final top-k must be a subset of the reference candidate set
-    assert all((r["q_id"], r["n_id"]) in want for r in got_rows)
-    # and the reference candidate top-k (re-ranked exactly) equals the output
     exact = {
         (r["q_id"], r["n_id"]): r["cos"]
         for r in emb.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
@@ -169,24 +231,34 @@ def test_s11_idot_kernel_matches_expression(spark):
         .select("q_id", "n_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
         .collect()
     }
-    import math
-
+    want = []
     for qid in range(S.N_QUERIES):
-        cand = [(n, exact[(q2, n)]) for (q2, n) in want if q2 == qid]
-        cand.sort(key=lambda t: (-t[1], t[0]))
-        expect = [
-            (qid, n, rk + 1, round(c, 6)) for rk, (n, c) in enumerate(cand[: S.KNN_K])
-        ]
-        got = sorted(
-            (
-                (r["q_id"], r["n_id"], r["rank"], r["cosine"])
-                for r in got_rows
-                if r["q_id"] == qid
-            ),
-            key=lambda t: t[2],
-        )
-        assert got == expect, f"q{qid}: {got} != {expect}"
-        assert all(not math.isnan(c) for _, _, _, c in got)
+        cand = sorted(((exact[(q2, n)], n) for q2, n in candidates if q2 == qid),
+                      key=lambda cn: (-cn[0], cn[1]))
+        want += [(qid, n, rk + 1, round(c, 6)) for rk, (c, n) in enumerate(cand[: S.KNN_K])]
+    return sorted(want)
+
+
+# (entry, kernels.py recipe, kernel path, Catalyst reference)
+PARITY = [
+    ("s03", "fold_dot", _s03_kernel, _s03_expression),
+    ("s08", "fold_dot+fold_sqnorm", _s08_kernel, _s08_expression),
+    (
+        "s13",
+        "top_mask",
+        lambda spark: _s13_pool(spark, S.S13_POOL),
+        lambda spark: _s13_pool(spark, None),
+    ),
+    ("s11", "top_mask", _s11_kernel, _s11_expression),
+]
+
+
+@pytest.mark.parametrize(
+    "kernel_path,reference", [(k, r) for _, _, k, r in PARITY],
+    ids=[f"{entry}-{recipe}" for entry, recipe, _, _ in PARITY],
+)
+def test_kernel_matches_expression(spark, kernel_path, reference):
+    assert kernel_path(spark) == reference(spark)
 
 
 def test_q35_pair_kernel_matches_hof(spark):

@@ -126,10 +126,6 @@ def test_serialization_roundtrip():
     assert SK.from_bytes(SK.to_bytes(None)) is None
 
 
-def test_count_nnz():
-    assert SK.count_nnz(np.array([0.0, 1e-12, 3.0, -2.0])) == 2
-
-
 def test_kv_codec_at_physically_impossible_dim():
     """compress_kv / merge / decompress_kv at dim 2^33: a dense buffer
     would be 64 GiB, so the mere fact this runs proves the kv path
