@@ -17,18 +17,12 @@ from dataclasses import dataclass, replace
 class SketchConfig:
     """Sketch-compression parameters.
 
-    Defaults mirror the reference's MLConf construction
-    (SketchGradientDescent.scala:340-348, SketchConfig.scala:15):
-    quantile bins = 256 (Quantizer.DEFAULT_BIN_NUM), groups = 2
-    (SKETCH_GROUP_NO), minmax rows = 3, col ratio = 0.3. The 8-bit
-    delta key format is fixed (see ml/sketch.py).
+    The reference's fixed MLConf parameters (bins, groups, MinMaxSketch
+    rows and col ratio; SketchGradientDescent.scala:340-348) and the
+    8-bit delta key format are constants of the codec (ml/sketch.py).
     """
 
     compression_type: str = "Sketch"  # {"Sketch", "None"} — Test.scala:30
-    bin_num: int = 256
-    group_num: int = 2
-    sketch_rows: int = 3
-    col_ratio: float = 0.3
     # Below this nnz the quantile-splits + grid overhead exceeds exact
     # float64 values, so ship exact (SketchML targets very wide sparse
     # gradients; tiny ones would *inflate*). 0 = always sketch.
@@ -65,5 +59,4 @@ class SolverConfig:
     # (SketchConfig.scala:17): "reduce" = tree aggregation with
     # re-sketch-per-combine; "reduce_group" = single-reducer sum.
     aggregation: str = "reduce"
-    tree_depth: int = 2
     seed: int = 42

@@ -65,15 +65,17 @@ def build_arg_parser() -> argparse.ArgumentParser:
 def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     """Ingest → split → fit → evaluate → one metrics dict (CSV_Line schema)."""
     from sketchmlflink_spark.ml.regression import MultipleLinearRegression
-    from sketchmlflink_spark.sources.libsvm import read_libsvm, to_dense_features
+    from sketchmlflink_spark.sources.libsvm import read_libsvm
 
     max_dim = args.maxDim if args.maxDim and args.maxDim > 0 else None
     # cache=True: the parsed COO frame is materialized during the dim
     # agg and reused by the blockify + eval scans — one text parse for
     # the whole experiment instead of three (guide §1.2); unpersisted
-    # before returning
+    # before returning. It trains as COO rows, never densified, like
+    # Test.scala's SparseVector.fromCOO rows (Test:171): a repeated
+    # index in a row sums, and a wide --maxDim costs O(nnz) per row.
     data = read_libsvm(spark, args.inputTrain, max_dim=max_dim, cache=True)
-    features = to_dense_features(data)
+    features = data.df
 
     # --parallelism governs actual training parallelism, like the
     # reference's env.setParallelism (Test:24-25): the SGD loop builds
@@ -101,6 +103,7 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             features,
             input_file=args.inputTrain,
             max_dim=args.maxDim,
+            dim=data.dim,
         )
         row = report.first().asDict()
     finally:

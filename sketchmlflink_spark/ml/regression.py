@@ -88,11 +88,8 @@ class MultipleLinearRegression:
     def predict(self, df: DataFrame, out_col: str = "prediction") -> DataFrame:
         if self.weights_ is None:
             raise NotFittedError("call fit() before predict() (SMLR:154-165)")
-        if "features" not in df.columns:  # sparse COO schema (SGD:198-217 dual repr)
-            udf = SGD.predict_udf_sparse_factory(df.sparkSession, self.weights_, self.intercept_)
-            return df.withColumn(out_col, udf(F.col("indices"), F.col("values")))
         udf = SGD.predict_udf_factory(df.sparkSession, self.weights_, self.intercept_)
-        return df.withColumn(out_col, udf(F.col("features")))
+        return df.withColumn(out_col, udf(*SGD._coo_columns(df)))
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         """(truth, prediction) pairs (M7, Test.scala:52)."""

@@ -9,12 +9,12 @@ Spark's execution model (SURVEY.md §3.2 translation):
       T2+T3+T4+partial-A1 of SURVEY.md §2 — the reference runs these as
       separate Flink maps)
     → partials (one small record per partition: sketch bytes + counters)
-      merge in an RDD ``treeReduce(depth=solver.tree_depth)`` with
-      re-sketch per combine ("reduce" mode, SGD:256-281): executors
-      merge every level but the last, which the driver merges (6
-      partitions at the default depth 2: 6 → 2 on executors, 2 → 1 on
-      the driver); or, in "reduce_group" mode (SGD:238-253), the driver
-      decompresses and sums every partial in one pass
+      merge in an RDD ``treeReduce(depth=2)`` with re-sketch per
+      combine ("reduce" mode, SGD:256-281): executors merge every level
+      but the last, which the driver merges (6 partitions: 6 → 2 on
+      executors, 2 → 1 on the driver); or, in "reduce_group" mode
+      (SGD:238-253), the driver decompresses and sums every partial in
+      one pass
     → driver applies 1/count scaling, eta_t = eta0/sqrt(t) schedule,
       regularization step, separate intercept update (SGD:283-313)
 
@@ -54,40 +54,19 @@ class TrainResult:
 
 
 def _blockify(batches):
-    """(features, label) Arrow batches → ONE pickled (X, y) numpy block
-    per partition.
+    """(indices, values, label) Arrow batches → ONE pickled COO block per
+    partition: (row_ids, idx, val, y) flat numpy arrays.
 
     Iterating mapInPandas over a cached *DataFrame* re-pays
     InternalRow→Arrow→pandas conversion every epoch; caching the
     deserialized numpy block instead makes each epoch a pure
     numpy-on-cached-block pass (the same reason MLlib caches
-    deserialized vectors, and the honest Spark analog of Flink keeping
-    iteration state in memory — SURVEY.md P5). Arrow does the per-row
-    JVM→Python crossing vectorized; the .rdd hop afterwards only ever
-    sees one blob row per partition."""
-    import pickle
-
-    feats = []
-    labels = []
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        feats.append(np.stack(pdf["features"].to_numpy()))
-        labels.append(pdf["label"].to_numpy(dtype=np.float64))
-    if feats:
-        X = np.concatenate(feats)
-        y = np.concatenate(labels)
-        yield pd.DataFrame({"blob": [pickle.dumps((X, y), protocol=5)]})
-
-
-def _blockify_sparse(batches):
-    """(indices, values, label) Arrow batches → ONE pickled COO block per
-    partition: (row_ids, idx, val, y) flat numpy arrays. The sparse
-    analog of ``_blockify`` — never materializes a dim-wide row, so a
-    partition's memory is O(nnz), matching the reference's SparseVector
-    path (SketchGradientDescent.scala:198-217; SparseVector.fromCOO,
-    Test.scala:171). Duplicate indices within a row are legal (their
-    contributions sum — a multiset feature map)."""
+    deserialized vectors, and the Spark analog of Flink keeping
+    iteration state in memory — SURVEY.md P5). A block never holds a
+    dim-wide row, so a partition's memory is O(nnz), matching the
+    reference's SparseVector rows (SketchGradientDescent.scala:198-217;
+    SparseVector.fromCOO, Test.scala:171). Duplicate indices within a
+    row are legal (their contributions sum — a multiset feature map)."""
     import pickle
 
     rid_parts, idx_parts, val_parts, y_parts = [], [], [], []
@@ -97,11 +76,7 @@ def _blockify_sparse(batches):
             continue
         lens = np.fromiter((len(a) for a in pdf["indices"]), dtype=np.int64, count=len(pdf))
         rid_parts.append(np.repeat(np.arange(row_base, row_base + len(pdf)), lens))
-        idx_parts.append(
-            np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["indices"]])
-            if len(pdf)
-            else np.empty(0, dtype=np.int64)
-        )
+        idx_parts.append(np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["indices"]]))
         val_parts.append(
             np.concatenate([np.asarray(a, dtype=np.float64) for a in pdf["values"]])
         )
@@ -168,39 +143,13 @@ def _partial_record_fn():
 
 
 def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
-    """Per-partition gradient pass over cached numpy blocks. Nested so
-    cloudpickle ships it by value; touches only numpy + sketch codec."""
-    loss_fn = _loss_grad(loss_name)
-    partial_record = _partial_record_fn()
-
-    def fn(blocks):
-        w, b = bc.value
-        grad = np.zeros(dim, dtype=np.float64)
-        isum = 0.0
-        loss = 0.0
-        n = 0
-        for X, y in blocks:
-            g, l = loss_fn(X @ w + b, y)  # g = dloss/dprediction per example
-            grad += g @ X
-            isum += float(g.sum())
-            loss += l
-            n += len(y)
-        # ZeroGradient elision (P8): an all-zero partition gradient ships
-        # a null payload and is skipped by the combiner (SGD:261-270)
-        sg = SK.compress(grad, sketch_cfg, dim) if n > 0 else None
-        yield partial_record(sg, isum, n, loss)
-
-    return fn
-
-
-def _make_partial_fn_sparse(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
-    """Per-partition gradient pass over cached COO blocks. The gradient
-    sum is accumulated SPARSELY (unique feature keys seen in this
-    partition only) and compressed via the codec's kv path — no
-    dim-sized buffer is ever allocated on an executor, so the arm holds
-    at dim 10^5-10^7 where the dense path's np.stack would blow memory
-    (the reference's actual workload: wide LibSVM swept over --maxDim,
-    runtest.sh:34-36)."""
+    """Per-partition gradient pass over cached COO blocks. Nested so
+    cloudpickle ships it by value; touches only numpy + sketch codec.
+    The gradient sum is accumulated SPARSELY (unique feature keys seen
+    in this partition only) and compressed via the codec's kv path — no
+    dim-sized buffer is ever allocated on an executor, so training holds
+    at dim 10^5-10^7 (the reference's actual workload: wide LibSVM
+    swept over --maxDim, runtest.sh:34-36)."""
 
     loss_fn = _loss_grad(loss_name)
     partial_record = _partial_record_fn()
@@ -314,11 +263,6 @@ def _learning_rate(cfg: SolverConfig, t: int) -> float:
     return eta0 / math.sqrt(t)  # FlinkML Default (FMLR:46)
 
 
-def infer_dim(df: DataFrame) -> int:
-    """S3 analog: global max feature count (Test.scala:157-160)."""
-    return df.agg(F.max(F.size("features")).alias("d")).first()["d"]
-
-
 class PreparedBlocks:
     """Blockified training input (one cached numpy block per partition)
     plus the stats the epoch loop needs — factored out of ``train`` so
@@ -329,49 +273,50 @@ class PreparedBlocks:
     given input frame, so sharing is result-identical to re-preparing.
     """
 
-    def __init__(self, blocks, n_total: int, inferred_dim: int, sparse: bool):
+    def __init__(self, blocks, n_total: int, inferred_dim: int):
         self.blocks = blocks
         self.n_total = n_total
         self.inferred_dim = inferred_dim
-        self.sparse = sparse
 
     def unpersist(self) -> None:
         self.blocks.unpersist()
 
 
+def _coo_columns(df: DataFrame):
+    """The (indices, values) Column pair of either training schema: the
+    COO pair itself, or — for a dense ``features array<double>`` — the
+    array as the values and its element positions as the indices (one
+    Catalyst projection; the reference's SparseVector.fromCOO rows,
+    Test.scala:171)."""
+    if "features" in df.columns:
+        return F.transform("features", lambda _, i: i), F.col("features")
+    return F.col("indices"), F.col("values")
+
+
 def prepare_blocks(df: DataFrame) -> PreparedBlocks:
-    """Blockify ``df`` (dense ``features`` or sparse COO schema — the
-    dual representation of SGD:198-217) into a persisted RDD of numpy
-    blocks; one job materializes the cache AND yields row count +
-    dimension (S3 dimension inference, Test.scala:157-160, fused)."""
+    """Blockify ``df`` (dense ``features`` or COO schema, projected to
+    COO by ``_coo_columns``) into a persisted RDD of numpy blocks; one
+    job materializes the cache AND yields row count + dimension (S3
+    dimension inference, Test.scala:157-160, fused)."""
     from pyspark import StorageLevel
 
     import pickle
 
-    sparse = "features" not in df.columns
+    indices, values = _coo_columns(df)
     # one numpy block per partition, cached deserialized (P5)
-    if sparse:
-        blocks = (
-            df.select("indices", "values", "label")
-            .mapInPandas(_blockify_sparse, "blob binary")
-            .rdd.map(lambda r: pickle.loads(r["blob"]))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # (row count, local max index + 1) per partition
-        stats = blocks.map(
-            lambda blk: (len(blk[3]), int(blk[1].max()) + 1 if blk[1].size else 0)
-        ).collect()
-    else:
-        blocks = (
-            df.select("features", "label")
-            .mapInPandas(_blockify, "blob binary")
-            .rdd.map(lambda r: pickle.loads(r["blob"]))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        stats = blocks.map(lambda blk: (len(blk[1]), blk[0].shape[1])).collect()
+    blocks = (
+        df.select(indices.alias("indices"), values.alias("values"), "label")
+        .mapInPandas(_blockify, "blob binary")
+        .rdd.map(lambda r: pickle.loads(r["blob"]))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # (row count, local max index + 1) per partition
+    stats = blocks.map(
+        lambda blk: (len(blk[3]), int(blk[1].max()) + 1 if blk[1].size else 0)
+    ).collect()
     n_total = sum(s[0] for s in stats)
     inferred_dim = max(s[1] for s in stats) if stats else 0
-    return PreparedBlocks(blocks, n_total, inferred_dim, sparse)
+    return PreparedBlocks(blocks, n_total, inferred_dim)
 
 
 def train(
@@ -384,12 +329,11 @@ def train(
     epoch_offset: int = 0,
     prepared: PreparedBlocks | None = None,
 ) -> TrainResult:
-    """Run the SGD loop. ``df`` needs ``label double`` plus EITHER a
-    dense ``features array<double>`` column OR the sparse COO pair
-    ``indices array<int>`` + ``values array<double>`` (the LibSVM parse
-    output, FIXTURES.md §1) — the dual dense/sparse representation the
-    reference pattern-matches on (SGD:198-217). Returns
-    weights/intercept + per-epoch metrics.
+    """Run the SGD loop. ``df`` needs ``label double`` plus EITHER the
+    COO pair ``indices array<int>`` + ``values array<double>`` (the
+    LibSVM parse output, FIXTURES.md §1) OR a dense ``features
+    array<double>`` column, which trains as COO rows over its element
+    positions. Returns weights/intercept + per-epoch metrics.
 
     ``init_weights``/``init_intercept`` warm-start the model and
     ``epoch_offset`` shifts the eta0/sqrt(t) schedule — used by the
@@ -410,7 +354,7 @@ def train(
     owns_blocks = prepared is None
     if prepared is None:
         prepared = prepare_blocks(df)
-    blocks, n_total, sparse = prepared.blocks, prepared.n_total, prepared.sparse
+    blocks, n_total = prepared.blocks, prepared.n_total
     if n_total == 0:
         if owns_blocks:
             blocks.unpersist()
@@ -430,15 +374,12 @@ def train(
         t0 = time.monotonic()
         bc = sc.broadcast((w, b))
         try:
-            mk = _make_partial_fn_sparse if sparse else _make_partial_fn
-            partial_rdd = blocks.mapPartitions(mk(bc, dim, sketch_cfg, solver.loss))
+            partial_rdd = blocks.mapPartitions(_make_partial_fn(bc, dim, sketch_cfg, solver.loss))
             if solver.aggregation == "reduce":
                 # distributed tree reduction; every combine hop ships a
                 # re-sketched partial (SGD:256-281 "Reduce" mode) — the
                 # shape that holds at 1000 executors
-                merged = partial_rdd.treeReduce(
-                    _make_combine_fn(dim, sketch_cfg), depth=solver.tree_depth
-                )
+                merged = partial_rdd.treeReduce(_make_combine_fn(dim, sketch_cfg), depth=2)
                 grad_sum = SK.decompress(SK.from_bytes(merged["payload"]), dim)
                 isum, loss = merged["intercept_sum"], merged["loss"]
                 count = merged["live_n"]
@@ -474,26 +415,11 @@ def train(
 
 
 def predict_udf_factory(spark, weights: np.ndarray, intercept: float):
-    """prediction = x·w + b (M6, SMLR:166-171) as an Arrow-batched
-    pandas UDF with broadcast weights (WEIGHTVECTOR_BROADCAST analog,
-    SMLR:83)."""
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    bc = spark.sparkContext.broadcast((np.asarray(weights, dtype=np.float64), float(intercept)))
-
-    def _predict(series: pd.Series) -> pd.Series:
-        w, b = bc.value
-        X = np.stack(series.to_numpy())
-        return pd.Series(X @ w + b)
-
-    return F.pandas_udf(_predict, "double")
-
-
-def predict_udf_sparse_factory(spark, weights: np.ndarray, intercept: float):
-    """Sparse-features prediction: x·w + b over (indices, values) COO
-    columns, vectorized per Arrow batch via one concat + scatter-sum —
-    no densified rows (the SparseVector dot of SMLR:166-171)."""
+    """prediction = x·w + b (M6, SMLR:166-171) over the (indices, values)
+    COO columns as an Arrow-batched pandas UDF with broadcast weights
+    (WEIGHTVECTOR_BROADCAST analog, SMLR:83), vectorized per batch via
+    one concat + scatter-sum — no densified rows (the SparseVector dot
+    of SMLR:166-171)."""
     from sketchmlflink_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)

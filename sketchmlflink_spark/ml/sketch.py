@@ -5,11 +5,11 @@ external ``org.dma.sketchml:sketchml`` jar (SURVEY.md §2.6; imports
 SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
 
   * quantile quantization: bucket each nonzero gradient value into one of
-    ``bin_num`` (256) quantile bins → uint8 bucket ids;
-  * grouped MinMaxSketch: bucket ids stored in ``group_num`` (2)
-    hash grids of ``sketch_rows`` (3) rows × ``col_ratio`` (0.3) · nnz
-    cols — min-update on insert, max-over-rows on query, so collisions
-    bias the estimate only within a group's value range;
+    ``BINS`` (255) quantile bins → uint8 bucket ids;
+  * grouped MinMaxSketch: bucket ids stored in ``GROUPS`` (2) hash
+    grids of ``SKETCH_ROWS`` (3) rows × ``COL_RATIO`` (0.3) · nnz cols —
+    min-update on insert, max-over-rows on query, so collisions bias
+    the estimate only within a group's value range;
   * delta key coding: sorted nonzero indices stored as 8-bit deltas
     (SGD:346 keyBits=8) with a 4-byte escape. The byte format is fixed
     (one byte per delta; a delta ≥ 0xFF is 0xFF + little-endian uint32)
@@ -38,6 +38,16 @@ from sketchmlflink_spark.config import SketchConfig
 
 EPS = 1e-10  # Maths.EPS analog (SGD:359 nnz test)
 
+# The reference's fixed sketch parameters, library constants in its
+# MLConf call (SketchGradientDescent.scala:343-346). BINS is its 256
+# quantile bins (Quantizer.DEFAULT_BIN_NUM) less one: the empty-cell
+# sentinel takes the id BINS, so bucket ids and sentinel fit uint8
+# (the reference's 8-bit quantization flag).
+BINS = 255
+GROUPS = 2  # SKETCH_GROUP_NO
+SKETCH_ROWS = 3  # MinMaxSketch hash rows
+COL_RATIO = 0.3  # MinMaxSketch columns per nonzero
+
 _HASH_P = 2147483647
 # fixed per-row hash coefficients (deterministic across processes)
 _ROW_A = np.array([1103515245, 214013, 69069, 1664525, 22695477, 1013904223], dtype=np.int64)
@@ -54,16 +64,15 @@ class MinMaxSketch:
     take the MAX over rows — collisions can only pull an estimate down,
     max-over-rows takes the least-damaged row."""
 
-    grid: np.ndarray  # (rows, width) uint8; sentinel = bin_num (empty)
+    grid: np.ndarray  # (rows, width) uint8; sentinel = BINS (empty)
     sentinel: int
 
     @classmethod
-    def build(cls, keys: np.ndarray, buckets: np.ndarray, rows: int, width: int, bin_num: int) -> "MinMaxSketch":
-        assert bin_num <= 255, "bucket ids + sentinel must fit uint8 (8-bit flag, SGD:343-346)"
-        grid = np.full((rows, width), bin_num, dtype=np.uint8)
-        for r in range(rows):
+    def build(cls, keys: np.ndarray, buckets: np.ndarray, width: int) -> "MinMaxSketch":
+        grid = np.full((SKETCH_ROWS, width), BINS, dtype=np.uint8)
+        for r in range(SKETCH_ROWS):
             np.minimum.at(grid[r], _positions(keys, r, width), buckets.astype(np.uint8))
-        return cls(grid=grid, sentinel=bin_num)
+        return cls(grid=grid, sentinel=BINS)
 
     def query(self, keys: np.ndarray) -> np.ndarray:
         rows, width = self.grid.shape
@@ -133,20 +142,11 @@ class SketchedGradient:
     nnz: int
     # identity path ("None" compression): exact values; else None
     exact_values: np.ndarray | None
-    # sketch path: quantile splits, per-key group ids (packed bits when
-    # group_num==2), one MinMaxSketch per group
+    # sketch path: quantile splits, per-key group ids (one int8 each),
+    # one MinMaxSketch per group; the wire size is len(to_bytes(sg))
     splits: np.ndarray | None
     group_ids: np.ndarray | None
     sketches: list[MinMaxSketch] | None
-
-    def payload_bytes(self) -> int:
-        """Honest transport size — what a shuffle hop would carry."""
-        n = len(self.key_buf) + 16
-        if self.exact_values is not None:
-            n += self.exact_values.nbytes
-        if self.splits is not None:
-            n += self.splits.nbytes + self.group_ids.nbytes // 8 + sum(s.grid.nbytes for s in self.sketches)
-        return n
 
 
 def compress(values: np.ndarray, cfg: SketchConfig, dim: int | None = None) -> SketchedGradient | None:
@@ -175,10 +175,7 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     if cfg.compression_type == "None" or keys.size < cfg.auto_fallback_nnz:
         return SketchedGradient(dim, key_buf, keys.size, vals.copy(), None, None, None)
 
-    # 255 effective bins so bucket ids + the empty sentinel share uint8
-    # (the reference's 8-bit quantization flag, SGD:343-346)
-    bins = min(cfg.bin_num, 255)
-    qs = np.linspace(0.0, 1.0, bins + 1)
+    qs = np.linspace(0.0, 1.0, BINS + 1)
     # one sort serves both the quantiles (a function of the order
     # statistics only) and the bucket search, which runs far faster
     # over ascending values than over values in key order
@@ -187,16 +184,16 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     splits = np.quantile(sorted_vals, qs)
     # bucket i covers [splits[i], splits[i+1])
     buckets = np.empty(vals.shape[0], dtype=np.int16)
-    buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, bins - 1)
+    buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, BINS - 1)
     # group by bucket range: similar-magnitude values share a grid so a
     # collision costs at most the group's value range
-    group_ids = (buckets.astype(np.int64) * cfg.group_num // bins).astype(np.int8)
+    group_ids = (buckets.astype(np.int64) * GROUPS // BINS).astype(np.int8)
     sketches = []
-    for g in range(cfg.group_num):
+    for g in range(GROUPS):
         mask = group_ids == g
         n_g = int(mask.sum())
-        width = max(1, int(np.ceil(cfg.col_ratio * max(n_g, 1))))
-        sketches.append(MinMaxSketch.build(keys[mask], buckets[mask], cfg.sketch_rows, width, bins))
+        width = max(1, int(np.ceil(COL_RATIO * max(n_g, 1))))
+        sketches.append(MinMaxSketch.build(keys[mask], buckets[mask], width))
     return SketchedGradient(dim, key_buf, keys.size, None, splits, group_ids, sketches)
 
 

@@ -272,8 +272,8 @@ def _sparse_training_df(
     vec_id-free 'noise', so the regression is learnable and the whole
     construction is reproducible with no RNG.
 
-    Catalyst-only feature extraction; the sparse arm (ml/sgd.py
-    _blockify_sparse) consumes it without densifying — the reference's
+    Catalyst-only feature extraction; the SGD core (ml/sgd.py
+    _blockify) consumes it without densifying — the reference's
     wide-LibSVM workload shape (runtest.sh:34-36)."""
     docs = t(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")

@@ -104,10 +104,11 @@ def read_libsvm(
 
 
 def to_dense_features(data: LibSVMData) -> DataFrame:
-    """S4 analog: COO → dense features array (for the SGD loop, which
-    accumulates dense — P9). Catalyst: scatter via array construction.
-    For very wide sparse data keep the COO form and use the sparse
-    seqOp path instead of densifying."""
+    """S4 analog: COO → dense ``features`` array, for callers that want
+    dense rows. Catalyst: scatter via array construction. The SGD loop
+    does not need it: it trains on the COO columns directly. A row with a
+    repeated index fails here under Spark's default map-key policy
+    (DUPLICATED_MAP_KEY), where SGD sums the repeat."""
     dim = data.dim
     m = F.map_from_arrays("indices", "values")
     dense = F.transform(

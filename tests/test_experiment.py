@@ -80,3 +80,33 @@ def test_parallelism_governs_training_partitions(spark, libsvm_file, monkeypatch
         row = run_experiment(spark, args)
         assert row["parallelism"] == par
     assert seen == [2, 5], f"training partitions {seen}"
+
+
+@pytest.mark.parametrize("arm", ["Flink", "Sketch"])
+def test_repeated_index_in_a_row_sums(spark, tmp_path, arm):
+    """A LibSVM row may repeat a feature index; the CLI trains on COO
+    rows, where the repeat sums (FlinkML's SparseVector.fromCOO, which
+    Test.scala:171 builds rows with). A densified frame would fail on
+    the repeat with DUPLICATED_MAP_KEY instead. The run must match one
+    on the same file with the repeat written as a single summed entry."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for _ in range(120):
+        x1, x2 = rng.uniform(-1, 1, 2)
+        rows.append((2.0 * x1 + 1.0 * x2, x1, x2))
+    repeated = [f"{y:.6f} 1:{x1:.6f} 2:{x2:.6f}" for y, x1, x2 in rows]
+    summed = list(repeated)
+    repeated[0] = "2.5 1:0.5 1:0.25 2:1.0"  # y = 2*x1 + x2 at x1 = 0.75
+    summed[0] = "2.5 1:0.75 2:1.0"
+    got = {}
+    for name, lines in (("repeated", repeated), ("summed", summed)):
+        path = tmp_path / f"{name}.libsvm"
+        path.write_text("\n".join(lines) + "\n")
+        args = build_arg_parser().parse_args(
+            ["--inputTrain", str(path), "--iterations", "30", "--stepSize", "0.5",
+             "--sketchOrFlink", arm]
+        )
+        got[name] = run_experiment(spark, args)
+    assert got["repeated"]["n_test"] == got["summed"]["n_test"]
+    assert got["repeated"]["avg_error"] == pytest.approx(got["summed"]["avg_error"], abs=1e-6)
+    assert got["repeated"]["avg_error"] < 0.35, got["repeated"]

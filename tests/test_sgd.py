@@ -134,9 +134,10 @@ def _to_sparse_rows(X):
 
 
 def test_sparse_path_matches_dense_exactly(spark, training_df):
-    """The sparse COO arm computes the SAME gradient sum as the dense
-    arm (compression None ⇒ bit-identical reduction), mirroring the
-    reference's Dense/SparseVector dual handling (SGD:198-217)."""
+    """A dense ``features`` frame, projected to COO inside the SGD core,
+    trains the SAME model as explicit COO rows over the same positions
+    (compression None), like the reference's SparseVector.fromCOO rows
+    (Test.scala:171)."""
     rows = training_df.collect()
     sparse_rows = [
         (r["label"], list(range(DIM)), list(r["features"])) for r in rows
@@ -155,8 +156,8 @@ def test_sparse_path_matches_dense_exactly(spark, training_df):
 
 def test_sparse_wide_libsvm_converges(spark, tmp_path):
     """Wide sparse LibSVM fixture (dim ≥ 1e5) trains end-to-end on the
-    COO path — no densified rows anywhere (the np.stack of the dense
-    path would need n·dim·8 bytes) — and converges toward the
+    COO path — no densified rows anywhere (dense rows would need
+    n·dim·8 bytes) — and converges toward the
     generating model (the reference's actual workload: wide LibSVM
     swept over --maxDim, runtest.sh:34-36)."""
     from sketchmlflink_spark.sources.libsvm import read_libsvm
@@ -405,8 +406,9 @@ def test_logistic_sketch_arm_tracks_exact(classification_df):
 
 
 def test_logistic_sparse_path_matches_dense(spark, classification_df):
-    """COO logistic gradients equal the dense path's (same loss plugin
-    reached through _make_partial_fn_sparse)."""
+    """A dense frame's projection to COO trains the same logistic model
+    as explicit COO rows (one loss plugin, reached through
+    _make_partial_fn)."""
     from pyspark.sql import functions as F
 
     coo = classification_df.select(

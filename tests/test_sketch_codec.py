@@ -17,11 +17,11 @@ CFG = SketchConfig(auto_fallback_nnz=0)
 IDENTITY = SketchConfig(compression_type="None")
 
 
-def group_error_bound(values: np.ndarray, cfg: SketchConfig) -> float:
+def group_error_bound(values: np.ndarray) -> float:
     """Worst-case codec error: a MinMaxSketch collision stays within the
     value range of one quantile group (SURVEY.md §2.6)."""
     nz = values[np.abs(values) > SK.EPS]
-    qs = np.linspace(0, 1, cfg.group_num + 1)
+    qs = np.linspace(0, 1, SK.GROUPS + 1)
     edges = np.quantile(nz, qs)
     widths = np.diff(edges)
     return float(widths.max()) + 1e-12
@@ -38,7 +38,7 @@ def test_roundtrip_bounded_error(dim):
     ghat = SK.decompress(sg, dim)
     # nnz key set preserved exactly (keys are delta-coded, not sketched)
     assert set(np.nonzero(ghat)[0]) == set(np.nonzero(np.abs(g) > SK.EPS)[0])
-    bound = group_error_bound(g, CFG)
+    bound = group_error_bound(g)
     err = np.max(np.abs(ghat - g))
     assert err <= bound, f"round-trip error {err} exceeds group bound {bound}"
 
@@ -86,7 +86,7 @@ def test_merge_approximates_sum_and_is_commutative():
     m2 = SK.decompress(SK.merge(sb, sa, CFG, 500), 500)
     # commutative within tolerance (both arms re-sketch the same sum)
     np.testing.assert_allclose(m1, m2, atol=1e-9)
-    bound = group_error_bound(a, CFG) + group_error_bound(b, CFG) + group_error_bound(a + b, CFG)
+    bound = group_error_bound(a) + group_error_bound(b) + group_error_bound(a + b)
     assert np.max(np.abs(m1 - (a + b))) <= bound
 
 
@@ -112,8 +112,8 @@ def test_payload_smaller_than_dense():
     g = np.where(rng.random(dim) < 0.9, rng.standard_normal(dim), 0.0)
     sg = SK.compress(g, CFG)
     dense_bytes = dim * 8
-    assert sg.payload_bytes() < dense_bytes / 4, (
-        f"sketch {sg.payload_bytes()}B vs dense {dense_bytes}B"
+    assert len(SK.to_bytes(sg)) < dense_bytes / 4, (
+        f"sketch {len(SK.to_bytes(sg))}B vs dense {dense_bytes}B"
     )
 
 
@@ -144,10 +144,10 @@ def test_kv_codec_at_physically_impossible_dim():
     kb = np.unique(rng.integers(0, dim, 1500))
     a = SK.compress_kv(ka, rng.normal(size=ka.size), cfg, dim)
     b = SK.compress_kv(kb, rng.normal(size=kb.size), cfg, dim)
-    assert a.payload_bytes() < 200_000 and b.payload_bytes() < 200_000
+    assert len(SK.to_bytes(a)) < 200_000 and len(SK.to_bytes(b)) < 200_000
 
     m = SK.merge(a, b, cfg, dim)
-    assert m.payload_bytes() < 400_000
+    assert len(SK.to_bytes(m)) < 400_000
     keys, vals = SK.decompress_kv(m)
     assert set(keys) == set(np.concatenate([ka, kb]))
     assert vals.shape == keys.shape

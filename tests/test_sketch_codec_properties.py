@@ -32,11 +32,11 @@ grad = hnp.arrays(
 SETTLE = settings(max_examples=60, deadline=None)
 
 
-def _group_error_bound(g: np.ndarray, cfg: SketchConfig) -> float:
+def _group_error_bound(g: np.ndarray) -> float:
     """A decompressed value is the midpoint of some bucket in its
     GROUP, so the worst error is the widest group's value range."""
     nz = g[np.abs(g) > SK.EPS]
-    edges = np.quantile(nz, np.linspace(0.0, 1.0, cfg.group_num + 1))
+    edges = np.quantile(nz, np.linspace(0.0, 1.0, SK.GROUPS + 1))
     return float(np.diff(edges).max() + 1e-9 * max(1.0, np.abs(nz).max()))
 
 
@@ -52,7 +52,7 @@ def test_roundtrip_keys_exact_and_error_bounded(g):
     # keys are delta-coded, never sketched: the support is exact
     assert set(np.nonzero(ghat)[0]) <= set(nz)
     assert set(nz) <= set(np.nonzero(np.abs(ghat) > 0)[0]) | {i for i in nz if abs(g[i]) <= SK.EPS}
-    assert np.max(np.abs(ghat - g)) <= _group_error_bound(g, CFG)
+    assert np.max(np.abs(ghat - g)) <= _group_error_bound(g)
 
 
 @given(grad)
