@@ -77,12 +77,16 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     data = read_libsvm(spark, args.inputTrain, max_dim=max_dim, cache=True)
     features = data.df
 
-    # --parallelism governs actual training parallelism, like the
+    # --parallelism sets the training frame's partition count P, like the
     # reference's env.setParallelism (Test:24-25): the SGD loop builds
-    # one gradient block per partition, so repartitioning the training
-    # frame IS the data-parallelism axis; shuffle partitions follow for
-    # the split/evaluate stages. (ADVICE r1: previously only main() set
-    # the conf, so sweep.py's parallelism loop changed nothing.)
+    # one gradient per partition, so P is the number of partition
+    # gradients, i.e. the leaves of the merge tree whose shape sets the
+    # shipped bytes and the sketch error. An epoch runs them in
+    # sgd._tree_groups(P) (about sqrt(P)) tasks, not P, so P does not
+    # set how many tasks run at once (ml/sgd.py). Shuffle partitions
+    # follow for the split/evaluate stages. (ADVICE r1: previously only
+    # main() set the conf, so sweep.py's parallelism loop changed
+    # nothing.)
     if args.parallelism and args.parallelism > 0:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.parallelism))
         features = features.repartition(args.parallelism)

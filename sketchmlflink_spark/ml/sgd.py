@@ -2,33 +2,53 @@
 core dataflow (SketchGradientDescent.scala:183-314) re-expressed in
 Spark's execution model (SURVEY.md §3.2 translation):
 
-  cache training DataFrame once; per epoch:
+  cache training DataFrame once, each partition's numpy block moved to
+  its merge-tree group (``prepare_blocks``); per epoch, ONE Spark stage:
     broadcast (w, b)
-    → ONE pass per partition over cached numpy blocks computes the
+    → each task owns one level-1 group of PySpark's depth-2
+      ``treeReduce`` schedule (``_tree_groups``; 6 partitions: {0,2,4}
+      and {1,3,5}). For each partition of its group, in partition
+      order, ONE pass over the cached numpy block computes the
       partition-local gradient sum AND compresses it (fuses
       T2+T3+T4+partial-A1 of SURVEY.md §2 — the reference runs these as
-      separate Flink maps)
-    → partials (one small record per partition: sketch bytes + counters)
-      merge in an RDD ``treeReduce(depth=2)`` with re-sketch per
-      combine ("reduce" mode, SGD:256-281): executors merge every level
-      but the last, which the driver merges (6 partitions: 6 → 2 on
-      executors, 2 → 1 on the driver); or, in "reduce_group" mode
-      (SGD:238-253), the driver decompresses and sums every partial in
-      one pass
+      separate Flink maps); in "reduce" mode (SGD:256-281) the task
+      left-folds these leaf records with a re-sketch per combine
+    → the driver left-folds the group records, as ``treeReduce`` does;
+      or, in "reduce_group" mode (SGD:238-253), the tasks return the
+      leaf records and the driver decompresses and sums every one in
+      partition order
     → driver applies 1/count scaling, eta_t = eta0/sqrt(t) schedule,
       regularization step, separate intercept update (SGD:283-313)
 
-Scale notes: the per-epoch network cost is (#partitions × sketch bytes)
-— the compression applies exactly where the reference applies it, before
-anything crosses a partition boundary, and every treeReduce hop ships a
-re-sketched partial, so the combOp stays associative-with-resketch at
-any depth. Loss is fused into the gradient pass (the reference pays a
-full extra pass per epoch when convergence checking — SGD:125; we get it
-free).
+The merge tree is the one ``treeReduce(depth=2)`` builds, so every
+re-sketch sees the same operands in the same order and the model is
+bit-identical to it; only the shuffle stage between the leaves and the
+level-1 merges is gone (the regroup happens once, in
+``prepare_blocks``).
+
+Scale notes: the compression applies exactly where the reference
+applies it, before a partition's gradient enters the merge tree, and every
+hop of the merge tree ships a re-sketched partial, so the combOp stays
+associative-with-resketch at any depth; ``bytes`` counts every leaf
+and hop payload of that tree. An epoch runs L = ``_tree_groups(P)``
+(about sqrt(P)) tasks for P partitions, and only their group records
+reach the driver. Each task computes its group's P/L leaf gradients one
+after another, beside the P/L - 1 merges a level-1 reducer already ran
+in series; so the epoch gives up leaf parallelism for the shuffle stage
+and the P task launches it saves (0.4-0.6 s per epoch, measured on 4
+local cores). It is a win while the P/L - 1 extra serial leaf gradients cost
+less than that: measured on 4 cores at P = 6 with 250 wide rows
+(dim 2^20, Sketch) per partition (leaf 17 ms, merge 82 ms; the wide
+benchmark), 4000 wide rows (leaf 218 ms, merge 545 ms) and 10000 dense
+64-feature rows (leaf 59 ms, merge 0.4 ms). Heavier leaves were not
+measured; there the epoch can slow by up to P/L - 1 leaf times. Loss is
+fused into the gradient pass (the reference pays a full extra pass per
+epoch when convergence checking — SGD:125; we get it free).
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import time
 from dataclasses import dataclass, field
@@ -120,8 +140,9 @@ def _loss_grad(name: str):
 
 
 def _partial_record_fn():
-    """The builder of one partition's contribution to the treeReduce:
-    the serialized sketch plus the scalars the combiner sums. Returned
+    """The builder of one partition's leaf record in the merge tree:
+    the serialized sketch plus the scalars the combiner sums. ``bytes``
+    starts at the leaf's own payload. Returned
     nested so cloudpickle ships it by value inside the partial fns; a
     reference to a module-level function would make every task's fresh
     Python worker import this module (pandas, pyspark.sql)."""
@@ -181,12 +202,13 @@ def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "s
 
 
 def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
-    """treeReduce combiner: decompress both sides, dense-add, RE-SKETCH
+    """Merge-tree combiner: decompress both sides, dense-add, RE-SKETCH
     the partial sum (SGD:274) — so every hop of the distributed reduce
     tree ships a sketch, which is the system's raison d'être (P1).
-    ``bytes`` accumulates every combine-hop payload (leaf payloads +
-    each re-sketched partial) — an upper bound on cross-executor
-    traffic, since treeReduce also counts partition-local merges."""
+    ``bytes`` accumulates every hop's payload (leaf payloads + each
+    re-sketched partial) of the reference's tree, whether or not the
+    hop crosses a process: a group's merges run inside one task, yet
+    count as the reference's pairwise reduce ships them."""
 
     def combine(p: dict, q: dict) -> dict:
         merged = SK.merge(SK.from_bytes(p["payload"]), SK.from_bytes(q["payload"]), sketch_cfg, dim)
@@ -201,6 +223,29 @@ def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
         }
 
     return combine
+
+
+def _run_epoch(groups, leaf, combine=None):
+    """One epoch as ONE Spark stage over ``PreparedBlocks.groups``: each
+    task computes the ``leaf`` record of every partition of its tree
+    group, in partition order. With ``combine`` ("reduce") the task
+    left-folds them (the level-1 reducer of ``treeReduce``) and the
+    driver left-folds the group records into the root record, which is
+    ``leaves.treeReduce(combine, depth=2)`` hop for hop. Without it
+    ("reduce_group") the leaf records come back in partition order.
+    ``task`` is nested so cloudpickle ships it by value."""
+
+    def task(records):
+        leaves = ((i, next(leaf(blks))) for i, blks in records)
+        if combine is None:
+            yield from leaves
+        else:
+            yield functools.reduce(combine, (rec for _, rec in leaves))
+
+    out = groups.mapPartitions(task).collect()
+    if combine is None:
+        return [rec for _, rec in sorted(out, key=lambda t: t[0])]
+    return functools.reduce(combine, out)
 
 
 def _sum_partials_group(partials, dim: int):
@@ -263,23 +308,52 @@ def _learning_rate(cfg: SolverConfig, t: int) -> float:
     return eta0 / math.sqrt(t)  # FlinkML Default (FMLR:46)
 
 
+def _tree_groups(n_parts: int) -> int:
+    """The level-1 group count of the merge tree of PySpark's
+    ``RDD.treeReduce(f, depth=2)`` over ``n_parts`` partitions
+    (``treeAggregate``, PySpark 4.1.2): partition ``i`` is merged into
+    group ``i % groups`` in partition order, and the driver left-folds
+    the groups in order. Each partition is its own group when PySpark
+    has no level-1 round (``n_parts <= 4``) and when its round has a
+    single group (``n_parts == 5``): both trees are one left fold over
+    every partition, and singleton groups keep each leaf gradient in
+    its own task. ``n_parts / scale <= scale``, so there is never a
+    second level-1 round."""
+    scale = max(int(math.ceil(pow(n_parts, 1.0 / 2))), 2)
+    groups = int(n_parts / scale)
+    if n_parts > scale + n_parts / scale and groups > 1:
+        return groups
+    return n_parts
+
+
 class PreparedBlocks:
-    """Blockified training input (one cached numpy block per partition)
-    plus the stats the epoch loop needs — factored out of ``train`` so
-    multi-arm queries (m07's five schedule arms, m08's exact-vs-sketch
-    A/B) blockify the corpus ONCE and share the cache instead of paying
-    a full scan + Arrow crossing + pickle per arm (optimization guide
-    §1.2: don't compute things twice). Content is deterministic for a
-    given input frame, so sharing is result-identical to re-preparing.
+    """Blockified training input plus the stats the epoch loop needs —
+    factored out of ``train`` so multi-arm queries (m07's five schedule
+    arms, m08's exact-vs-sketch A/B) blockify the corpus ONCE and share
+    the cache instead of paying a full scan + Arrow crossing + pickle
+    per arm (optimization guide §1.2: don't compute things twice).
+    Content is deterministic for a given input frame, so sharing is
+    result-identical to re-preparing.
+
+    ``blocks``: the P-partition RDD of numpy blocks (at most one per
+    partition; the leaves of the merge tree). It is lineage only and not
+    persisted, so a job over it re-reads and re-blockifies the whole
+    input: read its partition count, run no compute on it.
+    ``groups``: the persisted RDD an epoch runs on — partition ``g``
+    holds ``(i, blocks of partition i)`` for every ``i`` of tree group
+    ``g`` (``_tree_groups``), in ascending ``i``. While it is referenced,
+    the regroup's shuffle output keeps a second copy of every block on
+    local disk beside the MEMORY_AND_DISK cache.
     """
 
-    def __init__(self, blocks, n_total: int, inferred_dim: int):
+    def __init__(self, blocks, groups, n_total: int, inferred_dim: int):
         self.blocks = blocks
+        self.groups = groups
         self.n_total = n_total
         self.inferred_dim = inferred_dim
 
     def unpersist(self) -> None:
-        self.blocks.unpersist()
+        self.groups.unpersist()
 
 
 def _coo_columns(df: DataFrame):
@@ -295,28 +369,43 @@ def _coo_columns(df: DataFrame):
 
 def prepare_blocks(df: DataFrame) -> PreparedBlocks:
     """Blockify ``df`` (dense ``features`` or COO schema, projected to
-    COO by ``_coo_columns``) into a persisted RDD of numpy blocks; one
-    job materializes the cache AND yields row count + dimension (S3
+    COO by ``_coo_columns``) into numpy blocks, move each partition's
+    block to its merge-tree group (``_tree_groups``; one shuffle, here
+    instead of in every epoch) and persist the grouped RDD; one job
+    materializes the cache AND yields row count + dimension (S3
     dimension inference, Test.scala:157-160, fused)."""
     from pyspark import StorageLevel
 
     import pickle
 
     indices, values = _coo_columns(df)
-    # one numpy block per partition, cached deserialized (P5)
+    # one numpy block per non-empty partition (P5)
     blocks = (
         df.select(indices.alias("indices"), values.alias("values"), "label")
         .mapInPandas(_blockify, "blob binary")
         .rdd.map(lambda r: pickle.loads(r["blob"]))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    n_parts = blocks.getNumPartitions()
+    n_groups = _tree_groups(n_parts)
+    # an empty partition keeps its record: its leaf still takes its
+    # place in the fold
+    groups = blocks.mapPartitionsWithIndex(lambda i, it: [(i, list(it))])
+    if n_groups < n_parts:
+        # partitionBy sends key i to partition i % n_groups
+        groups = groups.partitionBy(n_groups, lambda i: i).mapPartitions(
+            lambda recs: sorted(recs, key=lambda rec: rec[0]), preservesPartitioning=True
+        )
+    groups = groups.persist(StorageLevel.MEMORY_AND_DISK)  # cached deserialized (P5)
     # (row count, local max index + 1) per partition
-    stats = blocks.map(
-        lambda blk: (len(blk[3]), int(blk[1].max()) + 1 if blk[1].size else 0)
+    stats = groups.map(
+        lambda rec: (
+            sum(len(blk[3]) for blk in rec[1]),
+            max((int(blk[1].max()) + 1 for blk in rec[1] if blk[1].size), default=0),
+        )
     ).collect()
     n_total = sum(s[0] for s in stats)
-    inferred_dim = max(s[1] for s in stats) if stats else 0
-    return PreparedBlocks(blocks, n_total, inferred_dim)
+    inferred_dim = max((s[1] for s in stats), default=0)
+    return PreparedBlocks(blocks, groups, n_total, inferred_dim)
 
 
 def train(
@@ -354,13 +443,16 @@ def train(
     owns_blocks = prepared is None
     if prepared is None:
         prepared = prepare_blocks(df)
-    blocks, n_total = prepared.blocks, prepared.n_total
-    if n_total == 0:
-        if owns_blocks:
-            blocks.unpersist()
-        raise ValueError("empty training set")
+    n_total = prepared.n_total
     if dim is None:
         dim = prepared.inferred_dim
+    if n_total == 0 or dim < prepared.inferred_dim:
+        if owns_blocks:
+            prepared.unpersist()
+        raise ValueError(
+            "empty training set" if n_total == 0 else
+            f"dim={dim} is below the data's dimension {prepared.inferred_dim} (largest index + 1)"
+        )
 
     if init_weights is not None:
         w = np.asarray(init_weights, dtype=np.float64).copy()
@@ -374,18 +466,17 @@ def train(
         t0 = time.monotonic()
         bc = sc.broadcast((w, b))
         try:
-            partial_rdd = blocks.mapPartitions(_make_partial_fn(bc, dim, sketch_cfg, solver.loss))
+            leaf = _make_partial_fn(bc, dim, sketch_cfg, solver.loss)
             if solver.aggregation == "reduce":
-                # distributed tree reduction; every combine hop ships a
-                # re-sketched partial (SGD:256-281 "Reduce" mode) — the
-                # shape that holds at 1000 executors
-                merged = partial_rdd.treeReduce(_make_combine_fn(dim, sketch_cfg), depth=2)
+                # every combine hop ships a re-sketched partial
+                # (SGD:256-281 "Reduce" mode)
+                merged = _run_epoch(prepared.groups, leaf, _make_combine_fn(dim, sketch_cfg))
                 grad_sum = SK.decompress(SK.from_bytes(merged["payload"]), dim)
                 isum, loss = merged["intercept_sum"], merged["loss"]
                 count = merged["live_n"]
                 result.shuffle_bytes += merged["bytes"]
             else:  # "reduce_group"
-                partials = partial_rdd.collect()
+                partials = _run_epoch(prepared.groups, leaf)
                 grad_sum, isum, count, loss, shipped = _sum_partials_group(partials, dim)
                 result.shuffle_bytes += shipped
         finally:
@@ -408,7 +499,7 @@ def train(
         prev_loss = result.losses[-1]
 
     if owns_blocks:
-        blocks.unpersist()
+        prepared.unpersist()
     result.weights = w
     result.intercept = b
     return result

@@ -402,8 +402,9 @@ def m07_lr_schedule_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closed forms in SQL (the losses the sweep also produces are
     float-aggregation-order-sensitive, so their comparison lives in
     tests/test_sgd.py, not the hash check). Scale shape: each arm is
-    the m03 treeReduce epoch loop; arms run sequentially sharing the
-    cached training blocks, so the corpus is blockified once."""
+    the m03 epoch loop (one Spark stage per epoch folding the
+    treeReduce merge tree); arms run sequentially sharing the cached
+    training blocks, so the corpus is blockified once."""
     from sketchmlflink_spark.config import SketchConfig, SolverConfig
     from sketchmlflink_spark.ml import sgd as SGD
 
@@ -474,7 +475,7 @@ def m10_logistic_sgd_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-compressed LOGISTIC SGD: ±1 labels = sign of the m03
     margin, trained with SolverConfig(loss='logistic') — every other
     moving part (numpy block cache, per-partition gradient, codec
-    compress, treeReduce re-sketch, schedules, takeStep) is the
+    compress, merge-tree re-sketch, schedules, takeStep) is the
     loss-agnostic machinery m03/m04 use, which is the M1 pluggability
     claim made executable. Separability/accuracy pinned in
     tests/test_sgd.py::test_logistic_*."""

@@ -421,3 +421,116 @@ def test_logistic_sparse_path_matches_dense(spark, classification_df):
     sparse = SGD.train(coo, solver, SketchConfig(compression_type="None"), dim=DIM)
     assert np.allclose(dense.weights, sparse.weights, atol=1e-9)
     assert abs(dense.intercept - sparse.intercept) < 1e-9
+
+
+# --------------------------------------------------------------------------
+# the epoch's merge tree: one Spark stage, treeReduce's schedule
+# --------------------------------------------------------------------------
+def test_undersized_dim_fails_on_the_driver(spark):
+    """A dim below the data's largest index + 1 is a ValueError on the
+    driver, not an IndexError inside an executor; the blocks train
+    prepared for itself are released."""
+    df = spark.createDataFrame(
+        [([0, 9], [1.0, 2.0], 1.0), ([3], [1.0], 0.5)],
+        "indices array<int>, values array<double>, label double",
+    )
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="dim=4 .* dimension 10"):
+        SGD.train(df, SolverConfig(iterations=1), SketchConfig(compression_type="None"), dim=4)
+    assert jsc.getPersistentRDDs().size() == persisted
+
+
+def test_tree_groups_match_pyspark_tree_reduce(spark):
+    """Pins ``_tree_groups`` to the installed PySpark: a pairing combiner
+    makes treeReduce return its merge tree as a nested tuple, which
+    encodes both the grouping and the order of every merge."""
+    import functools
+
+    def pair(a, b):
+        return (a, b)
+
+    sc = spark.sparkContext
+    for p in range(1, 21):
+        groups = SGD._tree_groups(p)
+        expected = functools.reduce(
+            pair, [functools.reduce(pair, range(g, p, groups)) for g in range(groups)]
+        )
+        assert sc.parallelize(range(p), p).treeReduce(pair, depth=2) == expected, p
+
+
+def _wide_frame(spark, parts: int, empty_part: int | None = None):
+    """720 COO rows of 30 random indices in dim 20000, in ``parts``
+    partitions (``empty_part`` left empty), so every partition gradient
+    has more keys than the sketch codec's exact fallback."""
+    rng = np.random.default_rng(parts)
+    rows = [
+        ([int(i) for i in rng.choice(20_000, size=30, replace=False)],
+         rng.standard_normal(30).tolist(), float(rng.standard_normal()))
+        for _ in range(720)
+    ]
+    rdd = spark.sparkContext.parallelize(rows, parts).mapPartitionsWithIndex(
+        lambda i, it: iter(()) if i == empty_part else it
+    )
+    return spark.createDataFrame(rdd, "indices array<int>, values array<double>, label double")
+
+
+@pytest.mark.parametrize("parts", [4, 5, 6, 9])
+def test_one_stage_epoch_equals_tree_reduce(spark, parts):
+    """One epoch of the grouped one-stage path gives the record
+    ``treeReduce(depth=2)`` gives over the same leaves and broadcast, in
+    all six fields (payload bytes, sums, counts, hop bytes), under both
+    codecs; "reduce_group" gets the leaves in partition order. The
+    9-partition frame has an empty partition, whose leaf still takes
+    its place in the fold."""
+    from sketchmlflink_spark.ml import sketch as SK
+
+    dim = 20_000
+    prepared = SGD.prepare_blocks(_wide_frame(spark, parts, 2 if parts == 9 else None))
+    rng = np.random.default_rng(3)
+    bc = spark.sparkContext.broadcast((rng.normal(0.0, 0.01, dim), 0.1))
+    try:
+        assert prepared.blocks.getNumPartitions() == parts
+        for codec in ("None", "Sketch"):
+            cfg = SketchConfig(compression_type=codec)
+            leaf = SGD._make_partial_fn(bc, dim, cfg)
+            combine = SGD._make_combine_fn(dim, cfg)
+            reference = prepared.blocks.mapPartitions(leaf).treeReduce(combine, depth=2)
+            assert SGD._run_epoch(prepared.groups, leaf, combine) == reference, codec
+            leaves = prepared.blocks.mapPartitions(leaf).collect()
+            assert SGD._run_epoch(prepared.groups, leaf) == leaves, codec
+            assert len(leaves) == parts
+        assert SK.from_bytes(reference["payload"]).exact_values is None  # sketched
+    finally:
+        bc.destroy()
+        prepared.unpersist()
+
+
+def test_epoch_runs_one_job_and_one_stage(spark, training_df):
+    """The epoch's work counter: on 6 partitions (2 tree groups) each
+    epoch of ``train`` is one job whose one stage runs 2 tasks. The
+    regroup's shuffle map stage belongs to the job's lineage but is
+    skipped (its output is reused), so it runs no task."""
+    sc = spark.sparkContext
+    group = "test_sgd_epoch_counters"
+    df = training_df.repartition(6)
+    prepared = SGD.prepare_blocks(df)
+    try:
+        sc.setJobGroup(group, group)
+        try:
+            res = SGD.train(df, SolverConfig(iterations=2, step_size=0.1),
+                            SketchConfig(compression_type="Sketch"), prepared=prepared)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    finally:
+        prepared.unpersist()
+    assert res.epochs_run == 2
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 2
+    for job in jobs:
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        ran = [st.numTasks for st in stages if st is not None and st.numCompletedTasks > 0]
+        assert ran == [2], (job, ran)

@@ -173,9 +173,11 @@ def _wide_partition_gradient(seed: int, dim: int) -> tuple[np.ndarray, np.ndarra
 
 def test_wire_bytes_match_golden_digests():
     """Pins the shipped bytes of a compressed partition gradient and of
-    a 6 -> 2 -> 1 re-sketching merge tree (treeReduce's shape on the
-    wide benchmark). The digests cover the pickled envelope, so they
-    hold for this repository's pinned numpy/Python versions."""
+    a 6 -> 2 -> 1 re-sketching merge tree over contiguous halves
+    {0,1,2} and {3,4,5} (the wide benchmark's treeReduce groups are
+    {0,2,4} and {1,3,5}; the digests pin this fold). The digests cover
+    the pickled envelope, so they hold for this repository's pinned
+    numpy/Python versions."""
     dim = 1 << 20
     leaves = [SK.compress_kv(*_wide_partition_gradient(s, dim), CFG, dim) for s in range(6)]
 
