@@ -83,10 +83,12 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     # gradients, i.e. the leaves of the merge tree whose shape sets the
     # shipped bytes and the sketch error. An epoch runs them in
     # sgd._tree_groups(P) (about sqrt(P)) tasks, not P, so P does not
-    # set how many tasks run at once (ml/sgd.py). Shuffle partitions
-    # follow for the split/evaluate stages. (ADVICE r1: previously only
-    # main() set the conf, so sweep.py's parallelism loop changed
-    # nothing.)
+    # set how many tasks run at once (ml/sgd.py; that trade rests on the
+    # per-stage overhead it saves, about 0.2 s an epoch on 4 cores since
+    # the worker daemon stopped each task re-reading Spark's zips, down
+    # from 0.4-0.6 s). Shuffle partitions follow for the split/evaluate
+    # stages. (ADVICE r1: previously only main() set the conf, so
+    # sweep.py's parallelism loop changed nothing.)
     if args.parallelism and args.parallelism > 0:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.parallelism))
         features = features.repartition(args.parallelism)

@@ -35,12 +35,18 @@ and hop payload of that tree. An epoch runs L = ``_tree_groups(P)``
 reach the driver. Each task computes its group's P/L leaf gradients one
 after another, beside the P/L - 1 merges a level-1 reducer already ran
 in series; so the epoch gives up leaf parallelism for the shuffle stage
-and the P task launches it saves (0.4-0.6 s per epoch, measured on 4
-local cores). It is a win while the P/L - 1 extra serial leaf gradients cost
-less than that: measured on 4 cores at P = 6 with 250 wide rows
+and the P task launches it saves. On 4 local cores that saving was
+0.4-0.6 s per epoch while every Python task also re-parsed Spark's zip
+archives (about 0.28 s a task); with ``worker_daemon`` (the
+``get_spark`` daemon) a trivial 6-task Python stage takes 0.17-0.18 s
+and a 2-task one 0.14 s (0.62-0.66 s and 0.36-0.40 s before), so the
+saving is now about 0.2 s per epoch. It is a win while the P/L - 1 extra
+serial leaf gradients cost less than that. It was measured a win, with
+the larger overhead, on 4 cores at P = 6 with 250 wide rows
 (dim 2^20, Sketch) per partition (leaf 17 ms, merge 82 ms; the wide
 benchmark), 4000 wide rows (leaf 218 ms, merge 545 ms) and 10000 dense
-64-feature rows (leaf 59 ms, merge 0.4 ms). Heavier leaves were not
+64-feature rows (leaf 59 ms, merge 0.4 ms); with the smaller overhead
+the 4000-row margin was not re-measured. Heavier leaves were not
 measured; there the epoch can slow by up to P/L - 1 leaf times. Loss is
 fused into the gradient pass (the reference pays a full extra pass per
 epoch when convergence checking — SGD:125; we get it free).

@@ -48,3 +48,39 @@ def test_config_failure_warns_and_is_recorded(monkeypatch, key):
     assert spark.conf.values["spark.sql.adaptive.enabled"] == "true"
     if key != ROCKSDB_KEY:
         assert spark.conf.values[ROCKSDB_KEY].endswith("RocksDBStateStoreProvider")
+
+
+def test_get_spark_workers_do_not_reread_unchanged_zips(spark):
+    """The work counter behind ``spark.python.daemon.module``: in a
+    ``get_spark`` session no Python task re-reads an unchanged zip
+    (stock PySpark re-parses pyspark.zip and the spark-core jar, about a
+    dozen importers, on every task). The warm-up job overlaps its tasks
+    so the second job runs on workers that have each run a task."""
+    import time
+
+    def zip_reads(rows):
+        # nested, so it ships by value: the task imports nothing of the repo
+        import importlib
+        import os
+        import zipimport
+
+        reads = []
+        stock_read = zipimport._read_directory
+
+        def spy(archive):
+            reads.append(archive)
+            return stock_read(archive)
+
+        zipimport._read_directory = spy
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stock_read
+        method = zipimport.zipimporter.invalidate_caches
+        yield os.path.basename(method.__code__.co_filename), len(reads)
+
+    sc = spark.sparkContext
+    tasks = 2
+    sc.parallelize(range(tasks), tasks).foreachPartition(lambda _: time.sleep(0.5))
+    reports = sc.parallelize(range(tasks), tasks).mapPartitions(zip_reads).collect()
+    assert reports == [("worker_daemon.py", 0)] * tasks
