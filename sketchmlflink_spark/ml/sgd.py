@@ -441,9 +441,6 @@ def train(
     """
     sketch_cfg = sketch_cfg or SketchConfig()
     spark = df.sparkSession
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     sc = spark.sparkContext
 
     owns_blocks = prepared is None
@@ -517,9 +514,6 @@ def predict_udf_factory(spark, weights: np.ndarray, intercept: float):
     (WEIGHTVECTOR_BROADCAST analog, SMLR:83), vectorized per batch via
     one concat + scatter-sum — no densified rows (the SparseVector dot
     of SMLR:166-171)."""
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     bc = spark.sparkContext.broadcast((np.asarray(weights, dtype=np.float64), float(intercept)))
 
     def _predict(indices: pd.Series, values: pd.Series) -> pd.Series:

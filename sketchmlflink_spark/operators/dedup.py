@@ -195,9 +195,6 @@ def minhash_signatures(sh_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(sh_df.sparkSession)
     h = F.pmod(F.xxhash64("sh"), F.lit(1 << 32))
     exploded = sh_df.select(id_col, F.explode_outer("sh").alias("sh")).select(
         id_col, h.alias("h")
@@ -510,9 +507,6 @@ def simhash_signatures(
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(docs.sparkSession)
     h = F.xxhash64("tok") if hash_col is None else hash_col
     hs = docs.select("doc_id", F.explode(T.tokens("text")).alias("tok")).select(
         "doc_id", h.alias("h")
@@ -977,9 +971,7 @@ def _d07_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from sketchmlflink_spark.functions.vector import as_double_array
-    from sketchmlflink_spark.session import ensure_workers_can_import
 
-    ensure_workers_can_import(spark)
     emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
@@ -1192,9 +1184,6 @@ def d18_embed_lsh_tiled_pairs(
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     # localCheckpoint: the signing scan (30 Catalyst dots per row + the
     # 10-way explode) feeds TWO consumers — the bucket-size census and
     # the tiled join — and would otherwise run twice (code review,
@@ -1414,9 +1403,6 @@ def d19_embed_lsh_tiled_audit(
     import pandas as pd
     from pyspark.sql import Window
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     exploded = _d07_exploded(spark, sf_dir)
     mask = (1 << D07_BITS) - 1
 
@@ -1665,9 +1651,6 @@ def d09_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     docs = t(spark, sf_dir, "documents")
     h = docs.select(
         "doc_id",
@@ -1929,9 +1912,7 @@ def d11_semantic_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_train_centroids,
         q_quantize,
     )
-    from sketchmlflink_spark.session import ensure_workers_can_import
 
-    ensure_workers_can_import(spark)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", as_double_array("embedding").alias("v"))
     C = ivf_train_centroids(emb, k=SEMDEDUP_K)
     bc = spark.sparkContext.broadcast(C)

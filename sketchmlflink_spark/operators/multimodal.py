@@ -149,9 +149,6 @@ FROM b
     tags=("multimodal", "features"),
 )
 def mm02_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     docs = t(spark, sf_dir, "documents")
     feats = media_table(docs).mapInPandas(fake_decode_features, FEATURE_SCHEMA)
     return feats.select(
@@ -226,9 +223,6 @@ FROM f
     tags=("multimodal", "frames"),
 )
 def mm03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     docs = t(spark, sf_dir, "documents")
     frames = media_table(docs).mapInPandas(fake_frame_sample, FRAME_SCHEMA)
     return frames.select("doc_id", "frame_idx", _array_to_canon_str("resized"))

@@ -23,13 +23,10 @@ from pyspark.sql.window import Window
 
 from sketchmlflink_spark.functions import zround
 from sketchmlflink_spark.registry import register
-from sketchmlflink_spark.session import tune_for_session
 from sketchmlflink_spark.sources.tables import load_table
 
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
+t = load_table  # the short name every builder reads tables through
 
 
 def ts(date_str: str) -> F.Column:
@@ -1258,7 +1255,6 @@ def q31_bucketed_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     which would hide the property being demonstrated; at 100 TB neither
     side broadcasts and the bucket layout is exactly what you want.
     Decimal-cast sum keeps the aggregate exact vs the oracle."""
-    tune_for_session(spark)
     t_orders, t_customer = _bucketed_tables(spark, sf_dir)
     o = spark.table(t_orders)
     c = spark.table(t_customer)
@@ -1316,7 +1312,6 @@ def q32_asof_event_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned to two columns; nothing wider crosses the exchange). q22
     pins the same pattern as a self-join; this entry pins the
     two-table form a feature-store backfill uses."""
-    tune_for_session(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
         F.col("o_orderdate").alias("ts2"),
@@ -1542,9 +1537,6 @@ def q35_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — no global sort materializes the pair space.
     Ordering is total (support DESC, part1, part2) so the LIMIT is
     engine-independent under ties."""
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     part_sets = (
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")

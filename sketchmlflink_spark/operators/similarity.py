@@ -161,9 +161,6 @@ def _hyperplane_buckets(emb: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(emb.sparkSession)
     P = np.asarray(LSH_HYPERPLANES, dtype=np.float64)  # (LSH_PLANES, 64)
     weights = (1 << np.arange(LSH_PLANES)).astype(np.int64)
 
@@ -1032,9 +1029,6 @@ def _query_cosine_scan(
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(emb.sparkSession)
     q_ids = np.asarray([r[0] for r in query_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
     q_norm = np.sqrt(fold_sqnorm(Q))
@@ -1128,9 +1122,6 @@ def s09_knn_blocked_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", as_double_array("embedding").alias("v"))
     qrows = emb.where(F.col("vec_id") < N_QUERIES).collect()  # bounded: N_QUERIES rows
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
@@ -1347,9 +1338,6 @@ def s11_sq8_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     q_rows = coded.where(F.col("vec_id") < N_QUERIES).collect()
     q_ids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
     Qc = np.stack([np.asarray(r["code"], dtype=np.int64) for r in q_rows])
@@ -1742,14 +1730,12 @@ def s14_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probes), and serially those actions' tails left the cluster idle —
     # measured r12 at sf1: arm-build wall 2.4–3.2 s serial → 1.1–1.4 s
     # threaded, identical arm outputs asserted across 6 probe rounds.
-    # ensure_workers_can_import is called ONCE before the pool (its
-    # addPyFile guard is not thread-safe); the arm builders themselves
-    # set no session confs and share no mutable state.
+    # The arms are called unwrapped, so only this entry's registry door
+    # prepares the session, once, before the pool (the addPyFile guard
+    # is not thread-safe); the arm builders themselves set no session
+    # confs and share no mutable state.
     from concurrent.futures import ThreadPoolExecutor
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_exact = pool.submit(s09_knn_blocked_exact, spark, sf_dir)
         futs = {

@@ -71,20 +71,15 @@ def register(
 
         @functools.wraps(fn)
         def build(spark, sf_dir):
-            # Ship the package to Python workers BEFORE any builder
-            # runs: mapInPandas/applyInPandas closures that reference
-            # module-level helpers (the IVF int-grid kernels, the
-            # sketch codec) are pickled by REFERENCE and need the
-            # package importable on executors. Individual builders used
-            # to opt in, which worked only while the driver process ran
-            # with the repo on its own sys.path/cwd — a fresh driver
-            # process running from another directory hit
-            # ModuleNotFoundError on exactly the opted-out entries
-            # (found by the r9 contract drive of s05 from /tmp).
-            # Idempotent per SparkContext, ~ms after the first call.
-            from sketchmlflink_spark.session import ensure_workers_can_import
+            # Every query reaches its builder through here, so this is
+            # where a session built elsewhere gets the package's confs
+            # and its Python workers the package, before any builder
+            # reads a table or pickles a mapInPandas body by reference.
+            # A get_spark session is already set up: this costs a few
+            # conf sets and ships nothing.
+            from sketchmlflink_spark.session import tune_for_session
 
-            ensure_workers_can_import(spark)
+            tune_for_session(spark)
             return fn(spark, sf_dir)
 
         _REGISTRY[name] = EngineQuery(

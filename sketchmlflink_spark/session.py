@@ -1,10 +1,18 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the one place a
+session is prepared for the package.
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads);
 the same settings are what we'd ship to a 1000-executor cluster: AQE for
 runtime re-planning (skew joins, partition coalescing), Arrow for every
 Python<->JVM crossing, and shuffle partitions sized to the environment
 instead of Spark's legacy 200.
+
+A session is set up once, before any query runs. ``get_spark`` builds
+it finished. A session built elsewhere (the driver harness passes its
+own to ``entry``) is prepared by ``tune_for_session``, which
+``registry.register``'s build wrapper calls before every builder: it
+sets the same runtime confs and ships the package to the Python
+workers. No builder, loader or stream source touches session confs.
 
 Python workers start from ``worker_daemon`` instead of the stock
 ``pyspark.daemon``. Every Python task calls
@@ -30,19 +38,53 @@ CONFIG_FAILURES: list[tuple[str, str]] = []
 
 _PKG_DIR = pathlib.Path(__file__).resolve().parent
 
+# Runtime SQL confs of every session: ``get_spark`` builds them in and
+# ``tune_for_session`` sets them on a session built elsewhere.
+_SESSION_CONFS = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # events.ts was TIMESTAMP(NANOS) in older testdata generations: read
+    # it as a long, which sources.tables.normalize_event_ts floors to
+    # micros (batch and streaming alike)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Streaming state must not live on the JVM heap. The default
+    # HDFSBackedStateStoreProvider keeps every key's state in an on-heap
+    # map, so state size is capped by executor heap: the round-7 sf10
+    # probe OOM'd an 8 GiB heap on st04's session windows (9.5M sessions
+    # in one micro-batch) even in an isolated session. RocksDB keeps
+    # state off-heap/on-disk with a bounded block cache — the same
+    # switch a 100-TB/day cluster job makes — and the identical probe
+    # completes in ~38 s with identical results (state backend is
+    # semantics-neutral; the full oracle sweep re-verified after the
+    # switch).
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    # Commit-path tunings (optimization guide §1.2: per-task work), both
+    # standard for production RocksDB state: changelog checkpointing
+    # appends a small changelog per commit instead of uploading a full
+    # snapshot (snapshots move to background maintenance) — the r11
+    # phase probe measured commit time as the dominant micro-batch cost;
+    # trackTotalNumberOfRows=false drops the extra read-before-write
+    # RocksDB does per put/delete just to maintain the numRowsTotal
+    # metric (semantics-neutral, metric-only).
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
+}
+
 
 def get_spark(app_name: str = "sketchmlflink-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or return) the package's tuned session.
+    """Build (or return) the package's finished session: it needs no
+    ``tune_for_session`` and no shipped package.
 
     Two static confs start every Python worker from ``worker_daemon``,
     which stops each task from re-parsing pyspark.zip (~14 ms per
     importer, 10 importers) and the spark-core jar (~57 ms per importer,
     2 importers) on Python 3.10-3.12, 0.26-0.29 s per task on 4 local
     cores. ``spark.executorEnv.PYTHONPATH`` puts the package's parent
-    directory on the workers' path so the daemon imports before any
-    ``addPyFile``. A daemon that cannot start fails every Python task.
-    Static confs do nothing on a session that already exists, so a
-    session built elsewhere keeps the stock daemon.
+    directory on the workers' path, so the daemon imports the package
+    from the checkout before forking and every task finds it there. A
+    daemon that cannot start fails every Python task. Static confs do
+    nothing on a session that already exists, so a session built
+    elsewhere keeps the stock daemon.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -54,7 +96,6 @@ def get_spark(app_name: str = "sketchmlflink-spark", shuffle_partitions: int | N
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -62,13 +103,18 @@ def get_spark(app_name: str = "sketchmlflink-spark", shuffle_partitions: int | N
         .config("spark.python.daemon.module", "sketchmlflink_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", str(_PKG_DIR.parent))
     )
+    for key, value in _SESSION_CONFS.items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to a session we didn't build (the driver
-    harness hands us its own SparkSession in ``entry``). A conf that
-    cannot be applied warns and is appended to ``CONFIG_FAILURES``."""
+    """Prepare a session we didn't build (the driver harness hands us
+    its own SparkSession in ``entry``): set the runtime confs
+    ``get_spark`` builds in, then ``ensure_workers_can_import``.
+    ``registry.register``'s build wrapper calls it before every builder;
+    on a ``get_spark`` session it changes nothing. A conf that cannot be
+    applied warns and is appended to ``CONFIG_FAILURES``."""
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # UTC so date_trunc/date_format on instant-typed columns agree with
     # the (naive-timestamp) DuckDB oracle regardless of host timezone.
@@ -83,43 +129,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(key, str(cpus))
     except Exception as exc:
         _config_failed(key, exc)
-    _try_set(spark, "spark.sql.execution.arrow.pyspark.enabled", "true")
-    # Streaming state must not live on the JVM heap. The default
-    # HDFSBackedStateStoreProvider keeps every key's state in an on-heap
-    # map, so state size is capped by executor heap: the round-7 sf10
-    # probe OOM'd an 8 GiB heap on st04's session windows (9.5M sessions
-    # in one micro-batch) even in an isolated session. RocksDB keeps
-    # state off-heap/on-disk with a bounded block cache — the same
-    # switch a 100-TB/day cluster job makes — and the identical probe
-    # completes in ~38 s with identical results (state backend is
-    # semantics-neutral; the full oracle sweep re-verified after the
-    # switch). Override via SPARK_GRAFT_STATE_STORE=hdfs for A/B runs.
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") == "rocksdb":
-        _try_set(
-            spark,
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        # Commit-path tunings (optimization guide §1.2: per-task
-        # work), both standard for production RocksDB state:
-        # changelog checkpointing appends a small changelog per
-        # commit instead of uploading a full snapshot (snapshots
-        # move to background maintenance) — the r11 phase probe
-        # measured commit time as the dominant micro-batch cost;
-        # trackTotalNumberOfRows=false drops the extra read-before-
-        # write RocksDB does per put/delete just to maintain the
-        # numRowsTotal metric (semantics-neutral, metric-only).
-        _try_set(
-            spark,
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled", "true",
-        )
-        _try_set(
-            spark,
-            "spark.sql.streaming.stateStore.rocksdb."
-            "trackTotalNumberOfRows", "false",
-        )
+    for key, value in _SESSION_CONFS.items():
+        _try_set(spark, key, value)
+    ensure_workers_can_import(spark)
     return spark
 
 
@@ -136,16 +148,17 @@ def _try_set(spark: SparkSession, key: str, value: str) -> None:
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
-    """Ship the package to Python workers via addPyFile so functions
-    serialized by reference (mapInPandas bodies, the sketch codec)
-    resolve on executors — required on a real cluster, and in local mode
-    whenever the workers' PYTHONPATH doesn't cover the repo. A
-    ``get_spark`` session already puts the package's parent directory on
-    it, but a foreign session (the driver harness builds its own) does
-    not, so the zip is still what makes the package importable there."""
+    """Make the package importable on Python workers, once per
+    SparkContext, so functions serialized by reference (mapInPandas
+    bodies, the sketch codec) resolve on executors. Returns at once when
+    the workers' ``PYTHONPATH`` already holds the package's parent
+    directory, as in every ``get_spark`` session. Otherwise (a session
+    built elsewhere) it ships the package as an ``addPyFile`` zip."""
     sc = spark.sparkContext
     if getattr(sc, "_sketchml_pkg_added", False):
         return
+    if str(_PKG_DIR.parent) in sc.environment.get("PYTHONPATH", "").split(os.pathsep):
+        return  # workers import the package from the checkout
     import hashlib
     import tempfile
     import zipfile

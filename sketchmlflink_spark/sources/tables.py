@@ -33,9 +33,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     of the physical parquet encoding. Encodings seen across testdata
     generations:
 
-    - TIMESTAMP(NANOS) read as long via
-      ``spark.sql.legacy.parquet.nanosAsLong`` → floor to micros with
-      exact integer division (double division loses precision > 2^53 ns);
+    - TIMESTAMP(NANOS), which every session reads as a long (see
+      ``session._SESSION_CONFS``) → floor to micros with exact integer
+      division (double division loses precision > 2^53 ns);
     - ``timestamp[us]`` with isAdjustedToUTC=false → Spark TIMESTAMP_NTZ;
       cast to TIMESTAMP (session TZ is pinned UTC in session.py, so the
       wall-clock value is unchanged but unix_micros/watermarks work);
@@ -54,9 +54,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # tolerate TIMESTAMP(NANOS) encodings (older testdata gens);
-        # normalize_event_ts handles whatever type comes out.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # TIMESTAMP(NANOS) encodings (older testdata gens) read as
+        # longs; normalize_event_ts handles whatever type comes out.
         return normalize_event_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
 

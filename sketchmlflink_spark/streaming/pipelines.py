@@ -54,10 +54,11 @@ WATERMARK = "1 hour"
 # run_to_batch / run_foreach_batch consume the hint around query start
 # and restore the session value after (batch queries keep the session
 # default); a failed .start() cannot leak either — the context manager
-# pops the hint before starting. SPARK_GRAFT_STREAM_STATE_MB overrides
-# the per-partition byte target (default 4 MB of source parquet ≈
-# 16-32 MB of decoded rows/state per store).
+# pops the hint before starting. _STREAM_STATE_BYTES is the
+# per-partition byte target: 4 MB of source parquet ≈ 16-32 MB of
+# decoded rows/state per store.
 _STREAM_PARTS_HINT: list[int] = []
+_STREAM_STATE_BYTES = 4 * 1024 * 1024
 
 
 def _set_stream_partitions_hint(n: int) -> None:
@@ -78,7 +79,6 @@ def _stream_partitions_for(
             )
         elif os.path.exists(p):
             total += os.path.getsize(p)
-    target_b = float(os.environ.get("SPARK_GRAFT_STREAM_STATE_MB", "4")) * 1024 * 1024
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001
@@ -97,7 +97,7 @@ def _stream_partitions_for(
         # concurrency while compute-heavy stateful ops (session-window
         # merge) keep some parallelism — n=1 was measured to give back
         # ~1-2 s of single-threaded merge on st04's 95k sessions
-        n = max(1, min(4, cap), min(cap, -(-total // int(target_b))))
+        n = max(1, min(4, cap), min(cap, -(-total // _STREAM_STATE_BYTES)))
     return int(n)
 
 
@@ -210,11 +210,8 @@ def events_stream(
     per-group compute dominates its state commits (see
     _stream_partitions_for) — partitions stay at the session cap.
     """
-    from sketchmlflink_spark.session import tune_for_session
     from sketchmlflink_spark.sources.tables import normalize_event_ts
 
-    tune_for_session(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     n_parts = _stream_partitions_for(spark, path, compute_heavy=compute_heavy_state)
     fschema = footer_schema(spark, path)  # footer-only read, cached
@@ -989,10 +986,8 @@ def documents_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same explicit-schema + corrupt-record contract as the batch
     reader (sources/jsonl.py) — streaming and batch ingestion share one
     schema and one quarantine policy."""
-    from sketchmlflink_spark.session import tune_for_session
     from sketchmlflink_spark.sources.jsonl import CORRUPT_COL, DOCUMENT_SCHEMA
 
-    tune_for_session(spark)  # right-size the state shuffle (32, not 200)
     read_schema = StructType(
         list(DOCUMENT_SCHEMA.fields) + [StructField(CORRUPT_COL, StringType())]
     )
@@ -1084,11 +1079,8 @@ def late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_stream's twin over the late-replay directory: one file per
     micro-batch (maxFilesPerTrigger=1), same footer-schema + ts
     normalization + 1 h watermark as the batch loader."""
-    from sketchmlflink_spark.session import tune_for_session
     from sketchmlflink_spark.sources.tables import normalize_event_ts
 
-    tune_for_session(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fschema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
     replay_dir = late_replay_stream_dir(spark, sf_dir)
     n_parts = _stream_partitions_for(spark, replay_dir)
@@ -1173,11 +1165,8 @@ def redelivery_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 def redelivered_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_stream's twin over the redelivery directory: one file per
     micro-batch, footer schema, ts normalization, 1 h watermark."""
-    from sketchmlflink_spark.session import tune_for_session
     from sketchmlflink_spark.sources.tables import normalize_event_ts
 
-    tune_for_session(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fschema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
     replay_dir = redelivery_stream_dir(spark, sf_dir)
     n_parts = _stream_partitions_for(spark, replay_dir)

@@ -161,9 +161,6 @@ def st05_stream_value_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     out_dir = tempfile.mkdtemp(prefix="st05_emissions_")
     P.run_foreach_batch(
         P.value_profile_by_type(P.events_stream(spark, sf_dir)),
@@ -326,10 +323,7 @@ def _incremental_sgd_state(spark: SparkSession, sf_dir: str) -> dict:
     import os
 
     from sketchmlflink_spark.ml_queries import EMBED_DIM, _training_df
-    from sketchmlflink_spark.session import ensure_workers_can_import, tune_for_session
 
-    tune_for_session(spark)
-    ensure_workers_can_import(spark)
     emb_schema = "vec_id long, embedding array<float>"
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
     n_parts = P._stream_partitions_for(spark, emb_path)
@@ -943,9 +937,6 @@ def st18_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from sketchmlflink_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     out_dir = tempfile.mkdtemp(prefix="st18_emissions_")
     P.run_foreach_batch(
         P.funnel_stages(

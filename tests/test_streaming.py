@@ -43,10 +43,8 @@ def _streamed_events(spark, data_dir: str, per_trigger: int = 1):
 def test_stateful_profile_across_batches(spark, multi_file_events_dir):
     """applyInPandasWithState must accumulate across 4 triggers and the
     LAST emission per key must equal the batch groupBy answer."""
-    from sketchmlflink_spark.session import ensure_workers_can_import
     from sketchmlflink_spark.sources.tables import load_table
 
-    ensure_workers_can_import(spark)
     emissions: list = []
     P.run_foreach_batch(
         P.value_profile_by_type(_streamed_events(spark, multi_file_events_dir)),
@@ -109,9 +107,7 @@ def test_incremental_sgd_multi_batch_converges(spark, tmp_path):
     from sketchmlflink_spark.ml import sgd
     from sketchmlflink_spark.ml_queries import EMBED_DIM, _training_df
     from sketchmlflink_spark.operators.relational import t
-    from sketchmlflink_spark.session import ensure_workers_can_import
 
-    ensure_workers_can_import(spark)
     d = str(tmp_path / "emb_multi")
     t(spark, SF_SMALL, "embeddings").repartition(4).write.mode("overwrite").parquet(d)
 
@@ -629,11 +625,8 @@ def test_session_state_survives_restart_from_rocksdb_checkpoint(spark, tmp_path)
     assertion pins the merged counts, so a reset cannot pass."""
     import datetime
 
-    from sketchmlflink_spark.session import tune_for_session
-
-    tune_for_session(spark)  # applies the RocksDB state-store default
     provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    assert "RocksDB" in provider, f"test requires the RocksDB default, got {provider!r}"
+    assert "RocksDB" in provider, f"get_spark must select the RocksDB state store, got {provider!r}"
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
