@@ -42,31 +42,13 @@ def modulus_split(df: DataFrame, split_key: str) -> tuple[DataFrame, DataFrame]:
 class MultipleLinearRegression:
     def __init__(
         self,
-        iterations: int = 10,       # FlinkML default (SMLR:94)
-        step_size: float = 0.1,     # FlinkML default (SMLR:90)
         compression: str = "Sketch",
-        convergence_threshold: float | None = None,  # default off (SMLR:98)
-        regularization: str = "none",
-        reg_lambda: float = 0.0,
-        aggregation: str = "reduce",  # vs "reduce_group" (SketchConfig.scala:17)
-        lr_schedule: str = "inv_sqrt",
-        lr_decay: float = 0.5,
-        bottou_optimal_init: float | None = None,
-        seed: int = 42,
         sketch_cfg: SketchConfig | None = None,
+        **solver,
     ):
-        self.solver = SolverConfig(
-            iterations=iterations,
-            step_size=step_size,
-            convergence_threshold=convergence_threshold,
-            regularization=regularization,
-            reg_lambda=reg_lambda,
-            lr_schedule=lr_schedule,
-            lr_decay=lr_decay,
-            bottou_optimal_init=bottou_optimal_init,
-            aggregation=aggregation,
-            seed=seed,
-        )
+        """``solver`` keywords are SolverConfig fields (FlinkML defaults
+        live there); an unknown one raises TypeError."""
+        self.solver = SolverConfig(**solver)
         self.sketch_cfg = (sketch_cfg or SketchConfig()).with_(compression_type=compression)
         self.weights_: np.ndarray | None = None
         self.intercept_: float | None = None

@@ -16,6 +16,7 @@ from sketchmlflink_spark.functions import zround
 from sketchmlflink_spark.functions.vector import as_double_array, dot
 from sketchmlflink_spark.operators.relational import t
 from sketchmlflink_spark.registry import register
+from sketchmlflink_spark.scratch import derived_dir
 
 EMBED_DIM = 64
 # Deterministic non-trivial weights: w_i = ((i*37) % 21 - 10) / 10
@@ -156,17 +157,9 @@ def m06_libsvm_cli_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (input_file/n_test excluded — the fixture path embeds sf_dir and
     the LibSVM rows carry no SQL-reachable split key); the full row
     incl. timings is m08_csvline_report territory."""
-    import os
-    import tempfile
-
     from sketchmlflink_spark.experiment import build_arg_parser, run_experiment
 
-    fixture_dir = os.path.join(
-        tempfile.gettempdir(),
-        "libsvm_fixture_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    marker = os.path.join(fixture_dir, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(fixture_dir: str) -> None:
         df = _training_df(spark, sf_dir)
         pairs = F.transform(
             "features",
@@ -181,9 +174,10 @@ def m06_libsvm_cli_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and a single-task coalesce(1) serialized the whole fixture
         # through one core (VERDICT r4 item 7)
         lines.write.mode("overwrite").text(fixture_dir)
+
     args = build_arg_parser().parse_args(
         [
-            "--inputTrain", fixture_dir,
+            "--inputTrain", derived_dir("libsvm", sf_dir, "embeddings", build),
             "--iterations", "5",
             "--stepSize", "0.5",
             "--compressionType", "Sketch",

@@ -29,6 +29,7 @@ from sketchmlflink_spark.operators.textops import (
     _duck_tokens,
 )
 from sketchmlflink_spark.registry import register
+from sketchmlflink_spark.scratch import derived_dir, scratch_dir
 
 
 @register(
@@ -314,9 +315,6 @@ def p04_curated_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition column + audit columns only; text bytes are written
     but never re-read.
     """
-    import os
-    import tempfile
-
     from sketchmlflink_spark.functions import text as T_  # noqa: N812
 
     docs = t(spark, sf_dir, "documents")
@@ -331,13 +329,7 @@ def p04_curated_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = sig.where(keep).select("doc_id", "lang", "source", "n_chars", "text")
 
-    # per-process dir: a fixed path would let two concurrent sessions
-    # race overwrite-vs-read on the same files; within one process the
-    # overwrite is idempotent (deterministic content)
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"curated_{os.getpid()}_" + sf_dir.strip("/").replace("/", "_"),
-    )
+    out_dir = scratch_dir("curated_")
     (
         kept.repartition("lang")
         .write.mode("overwrite")
@@ -569,8 +561,6 @@ def p08_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns instead (sk01's HLL rollup — same storage pattern, same
     merge)."""
     import datetime
-    import os
-    import tempfile
 
     ev = t(spark, sf_dir, "events")
     # stats-only split point: max(ts) comes from parquet footer stats,
@@ -587,10 +577,7 @@ def p08_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
         )
 
-    stored_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rollup_{os.getpid()}_" + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
+    stored_dir = scratch_dir("rollup_")
     rollup(ev.where(F.col("ts") < cut)).write.mode("overwrite").parquet(stored_dir)
 
     stored = spark.read.parquet(stored_dir)
@@ -634,16 +621,10 @@ def p09_csv_intake_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither drops nor duplicates rows, and every torn line is
     quarantined rather than silently absorbed."""
     import os
-    import tempfile
 
     from sketchmlflink_spark.sources.csvfile import read_csv_quarantine
 
-    fixture_dir = os.path.join(
-        tempfile.gettempdir(),
-        "csv_fixture_" + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
-    marker = os.path.join(fixture_dir, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(fixture_dir: str) -> None:
         docs = t(spark, sf_dir, "documents")
         lines = docs.select(
             F.concat_ws(
@@ -663,6 +644,8 @@ def p09_csv_intake_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "42,too,few\n"
                 "43,surplus text,en,web,12,EXTRA\n"
             )
+
+    fixture_dir = derived_dir("csv", sf_dir, "documents", build)
     clean, quarantine = read_csv_quarantine(spark, fixture_dir)
     per_lang = clean.groupBy(F.col("lang").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -714,18 +697,12 @@ def p10_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory comes from input_file_name() grouping, not a driver-side
     filesystem walk."""
     import os
-    import shutil
-    import tempfile
 
     from sketchmlflink_spark.sources.tables import load_table
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"p10_{os.getpid()}_" + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
-    frag_dir, compact_dir = base + "_frag", base + "_compact"
-    for d in (frag_dir, compact_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    # both writes run in error-if-exists mode, so they name new subdirs
+    base = scratch_dir("p10_")
+    frag_dir, compact_dir = os.path.join(base, "frag"), os.path.join(base, "compact")
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     # stage: the fragmented lake state a streaming sink leaves behind
@@ -1223,22 +1200,10 @@ def p17_orc_interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     owning that key (type cardinality is the fan-out, so no st15-style
     serial-commit pathology), maxRecordsPerFile caps file size, and the
     read-back aggregate prunes to 4 of 6 columns at the ORC scan."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     ev = t(spark, sf_dir, "events")
-    # Unique per-invocation path + atexit rmtree (ADVICE r7): a fixed
-    # per-sf path raced when two sweep/bench processes ran p17
-    # concurrently — one process's overwrite deleted files under the
-    # other's LAZY read-back. A unique dir removes the race; atexit
-    # bounds the footprint (one tiny ORC copy per p17 call, deleted at
-    # process exit) while keeping the returned frame lazy so its plan
-    # still shows the ORC scan with pruned columns (plan-locked).
-    out_dir = os.path.join(tempfile.gettempdir(), f"orc_events_{uuid.uuid4().hex}")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    # the returned frame stays lazy, so its plan still shows the ORC
+    # scan with pruned columns (plan-locked)
+    out_dir = scratch_dir("orc_events_")
     (
         ev.repartition("event_type")
         .write.mode("overwrite")

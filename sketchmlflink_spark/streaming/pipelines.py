@@ -18,13 +18,15 @@ group-key, Arrow-batched per trigger.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from sketchmlflink_spark.scratch import derived_dir, scratch_dir, stream_dir_for
 
 WATERMARK = "1 hour"
 
@@ -79,10 +81,7 @@ def _stream_partitions_for(
             )
         elif os.path.exists(p):
             total += os.path.getsize(p)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001
-        cap = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if compute_heavy:
         # Per-PIPELINE override for stateful operators whose cost is the
         # per-group COMPUTE, not the state commit (st18's per-user Python
@@ -135,65 +134,6 @@ def _apply_stream_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """Short digest of a source table's on-disk identity (paths +
-    sizes + mtimes of every file under it). Folded into replay-cache
-    directory names so that REGENERATING a gitignored fixture
-    automatically invalidates any cached replay split built from the
-    old bytes — without it, a stale marker-guarded cache makes st20/
-    st21 fail in a way that looks like an engine bug."""
-    import hashlib
-
-    root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    h = hashlib.sha256()
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(root)
-            for f in fs
-        )
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{p}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()[:12]
-
-
-def _fingerprinted_dir(kind: str, sf_dir: str, table: str) -> str:
-    """Replay-cache dir ``stream_<kind>_<sfpath>_<fingerprint>`` for the
-    current source bytes, PRUNING stale siblings first (ADVICE r7: each
-    fixture regeneration minted a new fingerprinted copy under /tmp and
-    the old ones were never removed — unbounded growth across
-    regeneration cycles). At most one materialized replay copy per
-    (kind, sf_dir) can exist."""
-    import shutil
-
-    prefix = f"stream_{kind}_" + sf_dir.strip("/").replace("/", "_") + "_"
-    fp = _source_fingerprint(sf_dir, table)
-    tmp = tempfile.gettempdir()
-    for name in os.listdir(tmp):
-        if name.startswith(prefix) and name != prefix + fp:
-            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
-    return os.path.join(tmp, prefix + fp)
-
-
-def stream_dir_for(path: str) -> str:
-    """The streaming file source only accepts directories; the test
-    tables are single parquet files in a read-only tree. Expose a file
-    as a stable temp directory containing a symlink to it (a real
-    deployment would just point at the ingest directory)."""
-    path = os.path.abspath(path)  # a relative target would dangle from /tmp
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "stream_src_" + path.strip("/").replace("/", "_"),
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    if not os.path.islink(link):
-        os.symlink(path, link)
-    return d
-
-
 def events_stream(
     spark: SparkSession, sf_dir: str, compute_heavy_state: bool = False
 ) -> DataFrame:
@@ -218,7 +158,7 @@ def events_stream(
     raw = (
         spark.readStream.schema(fschema)
         .format("parquet")
-        .load(stream_dir_for(path))
+        .load(stream_dir_for(sf_dir, "events"))
     )
     out = normalize_event_ts(raw).withWatermark("ts", WATERMARK)
     _set_stream_partitions_hint(n_parts)  # publish only on a successful build
@@ -746,12 +686,13 @@ def run_to_batch(
 ) -> DataFrame:
     """Execute a streaming DF with Trigger.AvailableNow and return the
     final result as a batch DataFrame (memory sink, unique query name +
-    throwaway checkpoint). ``complete`` mode flushes every window even
-    though the single AvailableNow batch never advances the watermark
-    past them (append mode would emit nothing on a bounded replay)."""
+    throwaway checkpoint, removed once the query stops). ``complete``
+    mode flushes every window even though the single AvailableNow batch
+    never advances the watermark past them (append mode would emit
+    nothing on a bounded replay)."""
     spark = result.sparkSession
     name = f"st_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    ckpt = scratch_dir(f"ckpt_{name}_")
     with _apply_stream_partitions(spark):
         q = (
             result.writeStream.format("memory")
@@ -778,6 +719,7 @@ def run_to_batch(
         finally:
             q.stop()
             _unload_state_stores(spark)
+            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -866,6 +808,9 @@ def dynamic_partition_overwrite(sp):
             sp.conf.set(key, prev)
 
 
+DRIVER_LIST_DIRS = 4096
+
+
 @contextmanager
 def driver_side_listing(sp):
     """Scope ``parallelPartitionDiscovery.threshold`` up for one read of
@@ -875,13 +820,12 @@ def driver_side_listing(sp):
     listing pool (``parallelPartitionDiscovery.parallelism`` threads)
     lists hundreds-to-thousands of local/posix dirs in milliseconds —
     measured on st15's 720-hour-dir read-back: 2.1 s → 0.85 s
-    best-of-3. Scale-parameterised, not a local tune:
-    $SPARK_GRAFT_DRIVER_LIST_DIRS (default 4096) is the dir count past
-    which a deployment prefers the distributed listing again (object
-    stores with slow per-prefix listing would set it lower)."""
+    best-of-3. DRIVER_LIST_DIRS is the dir count past which a
+    deployment prefers the distributed listing again (object stores
+    with slow per-prefix listing would want it lower)."""
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     prev = sp.conf.get(key, None)
-    sp.conf.set(key, os.environ.get("SPARK_GRAFT_DRIVER_LIST_DIRS", "4096"))
+    sp.conf.set(key, str(DRIVER_LIST_DIRS))
     try:
         yield
     finally:
@@ -937,8 +881,9 @@ def run_foreach_batch(
 ) -> None:
     """Execute a streaming DF with foreachBatch + AvailableNow; the
     caller's ``batch_fn(df, epoch_id)`` sees each micro-batch as a plain
-    batch DataFrame (the M5 incremental-training glue)."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_feb_")
+    batch DataFrame (the M5 incremental-training glue). The throwaway
+    checkpoint is removed once the query stops."""
+    ckpt = scratch_dir("ckpt_feb_")
     with _apply_stream_partitions(result.sparkSession):
         q = (
             result.writeStream.foreachBatch(batch_fn)
@@ -952,6 +897,7 @@ def run_foreach_batch(
         finally:
             q.stop()
             _unload_state_stores(result.sparkSession)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -962,23 +908,20 @@ N_CORRUPT_LINES = 3  # deterministic torn lines injected into the stream dir
 
 def jsonl_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the documents table as a JSONL ingest directory
-    (once per sf_dir, marker-guarded) plus a file of torn lines, so the
+    (once per version of the table) plus a file of torn lines, so the
     streaming reader exercises the quarantine path. A real deployment
     points at the crawler's drop directory instead."""
     from sketchmlflink_spark.sources.jsonl import write_jsonl
     from sketchmlflink_spark.sources.tables import load_table
 
-    d = _fingerprinted_dir("jsonl", sf_dir, "documents")
-    marker = os.path.join(d, "_INGEST_READY")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         write_jsonl(load_table(spark, sf_dir, "documents"), d)
         with open(os.path.join(d, "corrupt.jsonl"), "w") as f:
             f.write('{"doc_id": 900001, "text": "torn\n')
             f.write("not json at all\n")
             f.write('{"doc_id": "type-clash", "text": 7}\n')
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d
+
+    return derived_dir("jsonl", sf_dir, "documents", build)
 
 
 def documents_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,62 +970,66 @@ LATE_MOD = 20          # every 20th event (event_id % 20 == 0) is a straggler
 LATE_CUT_DAYS = 7      # on-time prefix/tail split point: max(ts) - 7 days
 
 
+def _write_replay(splits: list[DataFrame], d: str) -> None:
+    """Write each split as one file ``replay-00i.parquet`` in ``d`` with
+    ascending mtimes: the streaming file source orders by modification
+    time, so with maxFilesPerTrigger=1 it replays the splits in list
+    order, one micro-batch each."""
+    import time
+
+    base = time.time() - 1000
+    for i, df in enumerate(splits):
+        sub = os.path.join(d, f"_w{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(sub)
+        part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
+        dst = os.path.join(d, f"replay-{i:03d}.parquet")
+        os.replace(os.path.join(sub, part), dst)
+        os.utime(dst, (base + i * 10,) * 2)
+
+
 def late_replay_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table as a THREE-file out-of-order replay
-    directory (once per sf_dir, marker-guarded):
+    directory (once per version of the table):
 
       replay-000  on-time prefix  (not straggler, ts <= max(ts) - 7d)
       replay-001  on-time tail    (not straggler, ts >  max(ts) - 7d)
       replay-002  stragglers      (event_id % 20 == 0) — arrive LAST,
                                   hours to weeks after their event time
 
-    File mtimes ascend so the streaming file source (which orders by
-    modification time) replays them in exactly this sequence, and
-    maxFilesPerTrigger=1 puts each file in its own micro-batch — the
-    deterministic replay of a feed whose producers deliver some events
-    very late. One file per arrival is the SEMANTICS under test (the
+    _write_replay makes the file source replay them in exactly this
+    sequence, one micro-batch each — the deterministic replay of a feed
+    whose producers deliver some events very late. One file per arrival is the SEMANTICS under test (the
     arrival order), not a write-parallelism choice; a real deployment
     points at the ingest directory and the producer's files arrive
     already split."""
     from sketchmlflink_spark.sources.tables import load_table
 
-    d = _fingerprinted_dir("late", sf_dir, "events")
-    marker = os.path.join(d, "_REPLAY_READY")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         cut = ev.agg(
             (F.max("ts") - F.expr(f"INTERVAL {LATE_CUT_DAYS} DAYS")).alias("c")
         ).first()["c"]
         straggler = F.col("event_id") % LATE_MOD == 0
-        splits = [
-            ev.where(~straggler & (F.col("ts") <= F.lit(cut))),
-            ev.where(~straggler & (F.col("ts") > F.lit(cut))),
-            ev.where(straggler),
-        ]
-        import time as _time
+        _write_replay(
+            [
+                ev.where(~straggler & (F.col("ts") <= F.lit(cut))),
+                ev.where(~straggler & (F.col("ts") > F.lit(cut))),
+                ev.where(straggler),
+            ],
+            d,
+        )
 
-        base = _time.time() - 1000
-        for i, df in enumerate(splits):
-            sub = os.path.join(d, f"_w{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            dst = os.path.join(d, f"replay-{i:03d}.parquet")
-            os.replace(os.path.join(sub, part), dst)
-            os.utime(dst, (base + i * 10,) * 2)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d
+    return derived_dir("late", sf_dir, "events", build)
 
 
-def late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events_stream's twin over the late-replay directory: one file per
+def replay_events_stream(spark: SparkSession, sf_dir: str, replay_dir: str) -> DataFrame:
+    """events_stream's twin over a replay directory
+    (late_replay_stream_dir, redelivery_stream_dir): one file per
     micro-batch (maxFilesPerTrigger=1), same footer-schema + ts
     normalization + 1 h watermark as the batch loader."""
     from sketchmlflink_spark.sources.tables import normalize_event_ts
 
     fschema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    replay_dir = late_replay_stream_dir(spark, sf_dir)
     n_parts = _stream_partitions_for(spark, replay_dir)
     raw = (
         spark.readStream.schema(fschema)
@@ -1125,7 +1072,7 @@ RD_OLD_MOD = 50     # batch-2 redeliveries: every 50th OLD event
 
 def redelivery_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize an AT-LEAST-ONCE delivery simulation (once per
-    sf_dir, marker-guarded): the full events table, then two
+    version of the table): the full events table, then two
     redelivery files — a broad duplicate sample while the dedup state
     is still live (batch 1), and duplicates of OLD events (ts more than
     the watermark horizon before the stream's max) arriving after their
@@ -1134,51 +1081,21 @@ def redelivery_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     late_replay_stream_dir)."""
     from sketchmlflink_spark.sources.tables import load_table
 
-    d = _fingerprinted_dir("redeliver", sf_dir, "events")
-    marker = os.path.join(d, "_REPLAY_READY")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         wm_cut = ev.agg((F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("c")).first()["c"]
-        splits = [
-            ev,
-            ev.where(F.col("event_id") % RD_SAMPLE_MOD == 0),
-            ev.where(
-                (F.col("ts") <= F.lit(wm_cut)) & (F.col("event_id") % RD_OLD_MOD == 0)
-            ),
-        ]
-        import time as _time
+        _write_replay(
+            [
+                ev,
+                ev.where(F.col("event_id") % RD_SAMPLE_MOD == 0),
+                ev.where(
+                    (F.col("ts") <= F.lit(wm_cut)) & (F.col("event_id") % RD_OLD_MOD == 0)
+                ),
+            ],
+            d,
+        )
 
-        base = _time.time() - 1000
-        for i, df in enumerate(splits):
-            sub = os.path.join(d, f"_w{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            dst = os.path.join(d, f"replay-{i:03d}.parquet")
-            os.replace(os.path.join(sub, part), dst)
-            os.utime(dst, (base + i * 10,) * 2)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d
-
-
-def redelivered_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events_stream's twin over the redelivery directory: one file per
-    micro-batch, footer schema, ts normalization, 1 h watermark."""
-    from sketchmlflink_spark.sources.tables import normalize_event_ts
-
-    fschema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    replay_dir = redelivery_stream_dir(spark, sf_dir)
-    n_parts = _stream_partitions_for(spark, replay_dir)
-    raw = (
-        spark.readStream.schema(fschema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(replay_dir)
-    )
-    out = normalize_event_ts(raw).withWatermark("ts", WATERMARK)
-    _set_stream_partitions_hint(n_parts)  # publish only on a successful build
-    return out
+    return derived_dir("redeliver", sf_dir, "events", build)
 
 
 # --------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchmlflink_spark.registry import register
+from sketchmlflink_spark.scratch import scratch_dir, stream_dir_for
 from sketchmlflink_spark.streaming import pipelines as P
 
 
@@ -157,11 +158,9 @@ def st05_stream_value_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     spill dir EXECUTOR-side — no driver collect anywhere in the path
     (VERDICT r3 "what's wrong" #2) — then the final profile per key is
     the max-epoch emission, selected relationally."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
-    out_dir = tempfile.mkdtemp(prefix="st05_emissions_")
+    out_dir = scratch_dir("st05_emissions_")
     P.run_foreach_batch(
         P.value_profile_by_type(P.events_stream(spark, sf_dir)),
         lambda bdf, eid: bdf.withColumn("_epoch", F.lit(int(eid)))
@@ -331,7 +330,7 @@ def _incremental_sgd_state(spark: SparkSession, sf_dir: str) -> dict:
         spark.readStream.schema(emb_schema)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
-        .load(P.stream_dir_for(emb_path))
+        .load(stream_dir_for(sf_dir, "embeddings"))
     )
     P._set_stream_partitions_hint(n_parts)  # publish only on a successful build
     return P.incremental_sgd_driver(
@@ -694,11 +693,7 @@ def st15_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     per hour; partition dirs mean downstream hourly consumers prune by
     directory. State: none beyond the file-source log — the sink IS the
     state."""
-    import os
-    import tempfile
-
-    out_dir = os.path.join(tempfile.gettempdir(), f"st15_sink_{os.getpid()}_" +
-                           sf_dir.strip("/").replace("/", "_"))
+    out_dir = scratch_dir("st15_sink_")
     ev = P.events_stream(spark, sf_dir).select(
         "event_id", "ts", "event_type",
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd-HH").alias("hour_part"),
@@ -759,10 +754,6 @@ def st16_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever seen": windowed counts (st14) bound state by watermark
     eviction; here state is bounded by the SUMMARY size instead, so the
     aggregate spans the whole stream history."""
-    import os
-    import shutil
-    import tempfile
-
     from sketchmlflink_spark.operators.sketch_aggs import (
         SK05_K,
         SK05_TOPN,
@@ -770,13 +761,9 @@ def st16_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         mg_summaries,
     )
 
-    state_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"st16_state_{os.getpid()}_" + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
     # fresh state per build: epochs from an earlier build of this same
-    # query would otherwise double-count (checkpoint dirs are per-run)
-    shutil.rmtree(state_dir, ignore_errors=True)
+    # query would otherwise double-count
+    state_dir = scratch_dir("st16_state_")
 
     def land_summaries(bdf: DataFrame, eid: int) -> None:
         with P.dynamic_partition_overwrite(bdf.sparkSession):
@@ -879,15 +866,10 @@ def st17_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite truncates the very partitions the plan is reading.
     State size is O(distinct keys), never O(events)."""
     import os
-    import shutil
-    import tempfile
 
-    state_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"st17_state_{os.getpid()}_"
-        + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
+    # cdc_merge_batch reads back the state table once it exists, so it
+    # starts as a path that does not
+    state_dir = os.path.join(scratch_dir("st17_state_"), "state")
 
     ev = P.events_stream(spark, sf_dir).select(*ST17_COLS)
     P.run_foreach_batch(
@@ -933,11 +915,9 @@ def st18_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is 24 bytes/user; each trigger shuffles only the
     users present in the micro-batch. The summary re-read costs one
     scan of a users-sized parquet dir, not of the event stream."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
-    out_dir = tempfile.mkdtemp(prefix="st18_emissions_")
+    out_dir = scratch_dir("st18_emissions_")
     P.run_foreach_batch(
         P.funnel_stages(
             P.events_stream(spark, sf_dir, compute_heavy_state=True)
@@ -993,19 +973,10 @@ def st19_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sample, whatever the batch split. State is bounded by
     k·n_epochs summary rows, never by stream volume; torn intake lines
     quarantine upstream (st09 contract) and never touch the sample."""
-    import os
-    import shutil
-    import tempfile
-
     from sketchmlflink_spark.operators.pipeline import P14_K
     from sketchmlflink_spark.sources.jsonl import CORRUPT_COL
 
-    state_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"st19_state_{os.getpid()}_"
-        + sf_dir.strip("/").replace("/", "_").replace(".", "_"),
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = scratch_dir("st19_state_")
 
     def land_bottomk(bdf: DataFrame, eid: int) -> None:
         with P.dynamic_partition_overwrite(bdf.sparkSession):
@@ -1109,7 +1080,9 @@ def st20_stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unbounded feed. The audit column is scan-side arithmetic — no
     extra shuffle over the plain hourly count."""
     return P.run_to_batch(
-        P.late_window_audit(P.late_events_stream(spark, sf_dir)),
+        P.late_window_audit(
+            P.replay_events_stream(spark, sf_dir, P.late_replay_stream_dir(spark, sf_dir))
+        ),
         output_mode="append",
     )
 
@@ -1156,9 +1129,8 @@ def st21_stream_redelivery_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unbounded dedup state is a guaranteed OOM); the downstream
     per-type aggregate carries 5 rows. The replay fixture is a bounded
     simulation of the unbounded at-least-once feed."""
-    deduped = P.redelivered_events_stream(spark, sf_dir).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    events = P.replay_events_stream(spark, sf_dir, P.redelivery_stream_dir(spark, sf_dir))
+    deduped = events.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),

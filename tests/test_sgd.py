@@ -94,6 +94,15 @@ def test_estimator_api_and_metrics_report(spark, training_df):
         MultipleLinearRegression().predict(training_df)
 
 
+def test_solver_keywords_go_to_solver_config():
+    """The estimator forwards solver keywords to SolverConfig, whose
+    defaults are the only copy; an unknown keyword still raises."""
+    assert MultipleLinearRegression(loss="logistic").solver.loss == "logistic"
+    assert MultipleLinearRegression().solver == SolverConfig()
+    with pytest.raises(TypeError):
+        MultipleLinearRegression(iteration=5)
+
+
 def test_sketch_reduces_shuffle_bytes(spark):
     """P1: at realistic gradient width the sketch arm ships fewer bytes
     than identity (at tiny dims the codec honestly falls back to exact —

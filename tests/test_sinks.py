@@ -117,16 +117,16 @@ def test_p04_writes_lang_partitioned_layout(spark):
     directory tree (partition pruning depends on the physical layout,
     not just the logical result)."""
     import os
-    import tempfile
+    from urllib.parse import urlparse
 
     from sketchmlflink_spark.registry import all_queries
     from tests.conftest import SF_SMALL
 
-    all_queries()["p04_curated_sink_roundtrip"].build(spark, SF_SMALL).count()
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"curated_{os.getpid()}_" + SF_SMALL.strip("/").replace("/", "_"),
-    )
+    built = all_queries()["p04_curated_sink_roundtrip"].build(spark, SF_SMALL)
+    built.count()
+    # the sink directory is the parent of the lang=<value> dirs it reads
+    files = [urlparse(f).path for f in built.inputFiles()]
+    out_dir = os.path.dirname(os.path.dirname(files[0]))
     parts = sorted(d for d in os.listdir(out_dir) if d.startswith("lang="))
     assert len(parts) >= 2, f"expected lang=* partition dirs, got {os.listdir(out_dir)}"
     for p in parts:

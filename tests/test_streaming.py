@@ -387,7 +387,7 @@ def test_st21_redelivery_feed_overcounts_without_dedup(spark):
     assert f1 > 0 and f2 > 0, (f1, f2)
 
     total_exact = load_table(spark, SF_SMALL, "events").count()
-    raw = P.redelivered_events_stream(spark, SF_SMALL)
+    raw = P.replay_events_stream(spark, SF_SMALL, d)
     nodedup = P.run_to_batch(
         raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
         output_mode="complete",
@@ -583,9 +583,10 @@ def test_st21_dedup_survives_midstream_crash_and_restart(spark, tmp_path):
         bdf.write.mode("overwrite").parquet(d)
 
     def start(crash_on):
-        deduped = P.redelivered_events_stream(spark, SF_SMALL).dropDuplicatesWithinWatermark(
-            ["event_id"]
+        events = P.replay_events_stream(
+            spark, SF_SMALL, P.redelivery_stream_dir(spark, SF_SMALL)
         )
+        deduped = events.dropDuplicatesWithinWatermark(["event_id"])
         return (
             deduped.writeStream.foreachBatch(
                 lambda b, e: land(b, e, crash_on=crash_on)
@@ -1136,3 +1137,21 @@ def test_failed_stream_build_leaves_no_stale_partition_hint(spark, monkeypatch):
     with P._apply_stream_partitions(spark):
         assert P._STREAM_PARTS_HINT == []
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == hinted
+
+
+def test_registry_replays_remove_their_checkpoints(spark):
+    """run_to_batch (st01) and run_foreach_batch (st16) remove their
+    throwaway checkpoint once the query stops; the answers still
+    collect."""
+    from sketchmlflink_spark.registry import all_queries
+    from sketchmlflink_spark.scratch import scratch_dir
+
+    root = os.path.dirname(scratch_dir("probe_"))
+
+    def checkpoints():
+        return {n for n in os.listdir(root) if n.startswith("ckpt_")}
+
+    before = checkpoints()
+    for name in ("st01_stream_hourly_counts", "st16_stream_heavy_hitters"):
+        assert all_queries()[name].build(spark, SF_SMALL).collect(), name
+        assert checkpoints() == before, name
