@@ -6,7 +6,10 @@ Every directory a query writes goes through one of two functions:
   state or checkpoint. It lives under the process root
   ``<tmp>/sketchmlflink_<pid>``, which is removed when the process
   exits. A killed process never runs its exit handlers, so making a
-  root first removes the roots of processes that no longer run.
+  root first removes the roots of processes that no longer run. A new
+  directory replaces the one of the same kind that the calling thread
+  made before, as a rebuild overwrites its output: a process that builds
+  a query over and over holds one copy per thread.
 - ``derived_dir(kind, sf_dir, table, build)`` — an input derived from a
   source table (a fixture in another format, a replay split), shared by
   every process and kept across runs. Its name carries the source
@@ -30,6 +33,7 @@ _DERIVED = "sketchmlflink_derived"
 
 _roots: set[str] = set()  # the roots this process made
 _roots_lock = threading.Lock()
+_latest: dict[tuple[str, int], str] = {}  # (kind, thread) -> its newest dir
 
 
 def _running(pid: int) -> bool:
@@ -64,8 +68,14 @@ def _process_root() -> str:
 
 
 def scratch_dir(kind: str) -> str:
-    """A new empty directory named ``<kind>…`` under the process root."""
-    return tempfile.mkdtemp(prefix=kind, dir=_process_root())
+    """A new empty directory named ``<kind>…`` under the process root;
+    this thread's previous directory of that kind is removed."""
+    d = tempfile.mkdtemp(prefix=kind, dir=_process_root())
+    old = _latest.get((kind, threading.get_ident()))
+    _latest[(kind, threading.get_ident())] = d
+    if old:
+        shutil.rmtree(old, ignore_errors=True)
+    return d
 
 
 def _source_fingerprint(sf_dir: str, table: str) -> str:
@@ -91,7 +101,7 @@ def derived_dir(kind: str, sf_dir: str, table: str, build) -> str:
     built once per version of that table. Two processes that race both
     build; the first rename publishes and the other uses that copy."""
     parent = os.path.join(tempfile.gettempdir(), _DERIVED)
-    stem = f"{kind}_" + os.path.abspath(sf_dir).strip("/").replace("/", "_")
+    stem = f"{kind}_{table}_" + os.path.abspath(sf_dir).strip("/").replace("/", "_")
     name = f"{stem}_{_source_fingerprint(sf_dir, table)}"
     final = os.path.join(parent, name)
     if os.path.isdir(final):

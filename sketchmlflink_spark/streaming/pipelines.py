@@ -692,7 +692,7 @@ def run_to_batch(
     nothing on a bounded replay)."""
     spark = result.sparkSession
     name = f"st_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir(f"ckpt_{name}_")
+    ckpt = scratch_dir("ckpt_st_")
     with _apply_stream_partitions(spark):
         q = (
             result.writeStream.format("memory")

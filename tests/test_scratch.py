@@ -36,13 +36,27 @@ def _source(tmp, content: str = "v1") -> str:
 
 
 def test_scratch_dirs_are_new_empty_dirs_under_the_process_root(tmp):
-    a, b = scratch.scratch_dir("k_"), scratch.scratch_dir("k_")
+    a, b = scratch.scratch_dir("k_"), scratch.scratch_dir("j_")
     root = os.path.join(str(tmp), f"sketchmlflink_{os.getpid()}")
     assert a != b
-    for d in (a, b):
+    for d, kind in ((a, "k_"), (b, "j_")):
         assert os.path.dirname(d) == root
-        assert os.path.basename(d).startswith("k_")
+        assert os.path.basename(d).startswith(kind)
         assert os.listdir(d) == []
+
+
+def test_a_new_scratch_dir_replaces_this_threads_previous_one_of_its_kind(tmp):
+    first = scratch.scratch_dir("k_")
+    open(os.path.join(first, "f"), "w").close()
+    other = []
+    t = threading.Thread(target=lambda: other.append(scratch.scratch_dir("k_")))
+    t.start()
+    t.join()
+    second = scratch.scratch_dir("k_")
+    assert second != first
+    assert not os.path.exists(first)
+    assert os.listdir(second) == []
+    assert os.path.isdir(other[0])  # another thread's build keeps its copy
 
 
 def test_process_root_is_removed_at_exit(tmp):
@@ -110,6 +124,19 @@ def test_failed_build_publishes_nothing_and_the_next_call_builds(tmp):
 
     d = scratch.derived_dir("fx", sf, "t", lambda d: open(os.path.join(d, "ok"), "w").close())
     assert os.listdir(d) == ["ok"]
+
+
+def test_two_tables_of_one_sf_dir_keep_their_own_dirs(tmp):
+    sf = _source(tmp)
+    (tmp / "sf" / "u.parquet").write_text("other table")
+    made = {
+        t: scratch.derived_dir("fx", sf, t, lambda d: open(os.path.join(d, "x"), "w").close())
+        for t in ("t", "u")
+    }
+    assert made["t"] != made["u"]
+    for t in ("t", "u"):  # deriving one table prunes nothing of the other
+        assert scratch.derived_dir("fx", sf, t, pytest.fail) == made[t]
+        assert all(os.path.isdir(d) for d in made.values())
 
 
 def test_rewritten_source_gets_a_new_dir_and_prunes_the_old(tmp):
