@@ -86,11 +86,10 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     # set how many tasks run at once (ml/sgd.py; that trade rests on the
     # per-stage overhead it saves, about 0.2 s an epoch on 4 cores since
     # the worker daemon stopped each task re-reading Spark's zips, down
-    # from 0.4-0.6 s). Shuffle partitions follow for the split/evaluate
-    # stages. (ADVICE r1: previously only main() set the conf, so
-    # sweep.py's parallelism loop changed nothing.)
+    # from 0.4-0.6 s). The session's shuffle partitions stay as they
+    # are: the split does not shuffle and the evaluation is a global
+    # aggregate, so no stage after the repartition reads them.
     if args.parallelism and args.parallelism > 0:
-        spark.conf.set("spark.sql.shuffle.partitions", str(args.parallelism))
         features = features.repartition(args.parallelism)
 
     # arm → compression mapping (SURVEY.md §0): the exact/Flink arm is the

@@ -408,29 +408,31 @@ def m07_lr_schedule_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes for byte-identical block caches
     prepared = SGD.prepare_blocks(df)
     rows = []
-    for sched in LR_SCHEDULES:
-        cfg = SolverConfig(
-            iterations=3,
-            step_size=0.5,
-            lr_schedule=sched,
-            # Bottou/Xu schedules are parameterized by lambda; InvScaling
-            # by its decay exponent — pick values that keep all five
-            # curves distinct (lambda=0 Xu or decay=0.5 InvScaling would
-            # degenerate to Constant / Default)
-            reg_lambda=0.1 if sched in ("bottou", "xu") else 0.0,
-            lr_decay=0.25 if sched == "inv_scaling" else 0.5,
-        )
-        res = SGD.train(df, cfg, SketchConfig(compression_type="None"), prepared=prepared)
-        rows.append(
-            {
-                "lr_schedule": sched,
-                "epochs_run": int(res.epochs_run),
-                # the eta the last superstep actually used (white-box:
-                # same function the epoch loop evaluates)
-                "final_eta": round(SGD._learning_rate(cfg, res.epochs_run), 6),
-            }
-        )
-    prepared.unpersist()
+    try:
+        for sched in LR_SCHEDULES:
+            cfg = SolverConfig(
+                iterations=3,
+                step_size=0.5,
+                lr_schedule=sched,
+                # Bottou/Xu schedules are parameterized by lambda; InvScaling
+                # by its decay exponent — pick values that keep all five
+                # curves distinct (lambda=0 Xu or decay=0.5 InvScaling would
+                # degenerate to Constant / Default)
+                reg_lambda=0.1 if sched in ("bottou", "xu") else 0.0,
+                lr_decay=0.25 if sched == "inv_scaling" else 0.5,
+            )
+            res = SGD.train(df, cfg, SketchConfig(compression_type="None"), prepared=prepared)
+            rows.append(
+                {
+                    "lr_schedule": sched,
+                    "epochs_run": int(res.epochs_run),
+                    # the eta the last superstep actually used (white-box:
+                    # same function the epoch loop evaluates)
+                    "final_eta": round(SGD._learning_rate(cfg, res.epochs_run), 6),
+                }
+            )
+    finally:
+        prepared.unpersist()
     return spark.createDataFrame(rows).select("lr_schedule", "epochs_run", "final_eta")
 
 

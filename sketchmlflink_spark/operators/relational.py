@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from sketchmlflink_spark.functions import zround
 from sketchmlflink_spark.registry import register
+from sketchmlflink_spark.scratch import scratch_dir
 from sketchmlflink_spark.sources.tables import load_table
 
 
@@ -1195,38 +1196,29 @@ Q31_BUCKETS = 16
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize orders and customer as bucketed+sorted managed tables
-    (once per sf_dir — guarded by catalog existence). At 100 TB this is
-    the one-time layout investment that removes the shuffle from every
-    subsequent custkey join: both sides land in Q31_BUCKETS
-    hash-buckets of the SAME key, so the join reads co-located buckets
-    directly."""
-    import os
-    import shutil
+    """Materialize orders and customer as bucketed+sorted tables (once
+    per sf_dir — guarded by catalog existence). At 100 TB this is the
+    one-time layout investment that removes the shuffle from every
+    subsequent custkey join: both sides land in Q31_BUCKETS hash-buckets
+    of the SAME key, so the join reads co-located buckets directly.
 
-    # pid in the tag (like p04/st15): two processes sharing the default
-    # warehouse dir (pytest + oracle_sweep) must never see each other's
-    # half-written table location (ADVICE r3)
-    tag = f"{os.getpid()}_" + sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    Each table's files live in a scratch dir whose kind is the table
+    name, so building q31 at a second sf_dir never removes a table the
+    catalog still names, and the dir goes with the process: no run
+    leaves a table in the warehouse dir."""
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     t_orders, t_customer = f"b_orders_{tag}", f"b_customer_{tag}"
 
     def _write(table: str, src: str, key: str) -> None:
         if spark.catalog.tableExists(table):
             return
-        # the in-memory catalog is per-process but the warehouse dir
-        # persists: clear a stale location left by an earlier process
-        # (bucketing metadata lives in the catalog, so the files alone
-        # are unusable as a bucketed table anyway)
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(wh.removeprefix("file:"), table.lower())
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
         (
             load_table(spark, sf_dir, src)
             .write.bucketBy(Q31_BUCKETS, key)
             .sortBy(key)
             .mode("overwrite")
             .format("parquet")
+            .option("path", scratch_dir(f"{table}_"))
             .saveAsTable(table)
         )
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,12 +54,12 @@ WATERMARK = "1 hour"
 # a builder that raises mid-build can never leave a stale hint for the
 # next unrelated stream to consume (VERDICT r11 item 8; the old shape
 # hinted before the fallible readStream/schema steps).
-# run_to_batch / run_foreach_batch consume the hint around query start
-# and restore the session value after (batch queries keep the session
-# default); a failed .start() cannot leak either — the context manager
-# pops the hint before starting. _STREAM_STATE_BYTES is the
-# per-partition byte target: 4 MB of source parquet ≈ 16-32 MB of
-# decoded rows/state per store.
+# The replay driver (_run_available_now, behind run_to_batch and
+# run_foreach_batch) consumes the hint around the query and restores the
+# session value after (batch queries keep the session default); a failed
+# .start() cannot leak either — the context manager pops the hint before
+# starting. _STREAM_STATE_BYTES is the per-partition byte target: 4 MB
+# of source parquet ≈ 16-32 MB of decoded rows/state per store.
 _STREAM_PARTS_HINT: list[int] = []
 _STREAM_STATE_BYTES = 4 * 1024 * 1024
 
@@ -120,7 +121,8 @@ def footer_schema(spark: SparkSession, path: str):
 @contextmanager
 def _apply_stream_partitions(spark: SparkSession):
     """Consume the pending partition hint for the duration of one
-    streaming query; restore the session value afterward."""
+    streaming query; restore the session value afterward. The one
+    session-conf write in query code (session.py owns the rest)."""
     hint = _STREAM_PARTS_HINT[0] if _STREAM_PARTS_HINT else None
     _STREAM_PARTS_HINT.clear()
     if hint is None:
@@ -685,42 +687,64 @@ def run_to_batch(
     timeout_s: int = 300,
 ) -> DataFrame:
     """Execute a streaming DF with Trigger.AvailableNow and return the
-    final result as a batch DataFrame (memory sink, unique query name +
-    throwaway checkpoint, removed once the query stops). ``complete``
-    mode flushes every window even though the single AvailableNow batch
-    never advances the watermark past them (append mode would emit
-    nothing on a bounded replay)."""
+    final result as a batch DataFrame (memory sink under a unique query
+    name). ``complete`` mode flushes every window even though the single
+    AvailableNow batch never advances the watermark past them (append
+    mode would emit nothing on a bounded replay)."""
     spark = result.sparkSession
     name = f"st_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("ckpt_st_")
-    with _apply_stream_partitions(spark):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-            # A timed-out replay MUST raise, never return the partial
-            # memory table: the first full-catalog strict sweep on the
-            # SKEWED fixture (round 8) caught st08 returning an empty
-            # frame after its hot-user interval join outran the 300 s
-            # default — a silent wrong answer, the worst failure mode
-            # there is. On a slower machine/bigger replay, raise and let
-            # the caller size timeout_s.
-            if not finished:
+    writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _run_available_now(spark, writer, "ckpt_st_", timeout_s)
+    return spark.table(name)
+
+
+def run_foreach_batch(
+    result: DataFrame,
+    batch_fn,
+    timeout_s: int = 300,
+    output_mode: str = "update",
+) -> None:
+    """Execute a streaming DF with foreachBatch + AvailableNow; the
+    caller's ``batch_fn(df, epoch_id)`` sees each micro-batch as a plain
+    batch DataFrame (the M5 incremental-training glue)."""
+    writer = result.writeStream.foreachBatch(batch_fn).outputMode(output_mode)
+    _run_available_now(result.sparkSession, writer, "ckpt_feb_", timeout_s)
+
+
+def _run_available_now(
+    spark: SparkSession, writer, ckpt_kind: str, timeout_s: int
+) -> None:
+    """Run ``writer`` (a memory or foreachBatch DataStreamWriter) to the
+    end of its bounded input under the pending partition hint, with a
+    throwaway ``scratch_dir(ckpt_kind)`` checkpoint. The query is
+    stopped, its state stores unloaded and its checkpoint removed however
+    the run ends.
+
+    A replay still running after ``timeout_s`` raises TimeoutError and
+    never hands back the partial sink: the first full-catalog strict
+    sweep on the SKEWED fixture (round 8) caught st08 returning an empty
+    frame after its hot-user interval join outran the 300 s default — a
+    silent wrong answer, the worst failure mode there is. On a slower
+    machine or a bigger replay the caller sizes ``timeout_s``."""
+    ckpt = scratch_dir(ckpt_kind)
+    q = None
+    try:
+        with _apply_stream_partitions(spark):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(timeout_s):
                 raise TimeoutError(
-                    f"streaming replay {name!r} still running after {timeout_s}s — "
+                    f"streaming replay {q.name or q.id} still running after {timeout_s}s — "
                     "refusing to return a partial result; raise timeout_s"
                 )
-        finally:
+    finally:
+        if q is not None:
             q.stop()
-            _unload_state_stores(spark)
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        _unload_state_stores(spark)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _unload_state_stores(spark: SparkSession) -> None:
@@ -736,8 +760,8 @@ def _unload_state_stores(spark: SparkSession) -> None:
     this is semantics-free."""
     try:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:  # noqa: BLE001 — cleanup must never fail a query
-        pass
+    except Exception as exc:  # noqa: BLE001 — cleanup must never fail a query
+        warnings.warn(f"could not unload the state stores: {exc!r}", RuntimeWarning)
 
 
 # η₀ for the st06/st06a incremental trainer — shared with st06a's SQL
@@ -789,52 +813,6 @@ def incremental_sgd_driver(
     return state
 
 
-@contextmanager
-def dynamic_partition_overwrite(sp):
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to one
-    write: the st15/st16/st17/st19 sinks need it, but leaving it set on
-    the shared session would leak into unrelated queries run later on
-    the same session (ADVICE r4) — a plain `overwrite` elsewhere would
-    silently become partition-append semantics."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
-
-
-DRIVER_LIST_DIRS = 4096
-
-
-@contextmanager
-def driver_side_listing(sp):
-    """Scope ``parallelPartitionDiscovery.threshold`` up for one read of
-    a many-partition-directory dataset. Above the default threshold
-    (32 paths) Spark launches a DISTRIBUTED listing job, whose
-    job-scheduling round costs ~1-2 s here while the driver's own
-    listing pool (``parallelPartitionDiscovery.parallelism`` threads)
-    lists hundreds-to-thousands of local/posix dirs in milliseconds —
-    measured on st15's 720-hour-dir read-back: 2.1 s → 0.85 s
-    best-of-3. DRIVER_LIST_DIRS is the dir count past which a
-    deployment prefers the distributed listing again (object stores
-    with slow per-prefix listing would want it lower)."""
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    prev = sp.conf.get(key, None)
-    sp.conf.set(key, str(DRIVER_LIST_DIRS))
-    try:
-        yield
-    finally:
-        if prev is None:
-            sp.conf.unset(key)
-        else:
-            sp.conf.set(key, prev)
-
-
 def land_partitioned(batch_df: DataFrame, eid: int, out_dir: str) -> None:
     """The st15 sink recipe: each epoch lands as a PLAIN overwrite of
     its own ``out_dir/_epoch=<e>`` directory, hour-partitioned inside.
@@ -871,33 +849,6 @@ def land_partitioned(batch_df: DataFrame, eid: int, out_dir: str) -> None:
         .partitionBy("hour_part")
         .parquet(os.path.join(out_dir, f"_epoch={int(eid)}"))
     )
-
-
-def run_foreach_batch(
-    result: DataFrame,
-    batch_fn,
-    timeout_s: int = 300,
-    output_mode: str = "update",
-) -> None:
-    """Execute a streaming DF with foreachBatch + AvailableNow; the
-    caller's ``batch_fn(df, epoch_id)`` sees each micro-batch as a plain
-    batch DataFrame (the M5 incremental-training glue). The throwaway
-    checkpoint is removed once the query stops."""
-    ckpt = scratch_dir("ckpt_feb_")
-    with _apply_stream_partitions(result.sparkSession):
-        q = (
-            result.writeStream.foreachBatch(batch_fn)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(timeout_s)
-        finally:
-            q.stop()
-            _unload_state_stores(result.sparkSession)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -662,7 +662,7 @@ def st14_stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # st15 — streaming partitioned parquet SINK (foreachBatch, idempotent
-# dynamic-partition overwrite) + read-back audit.
+# per-epoch overwrite) + read-back audit.
 # --------------------------------------------------------------------------
 @register(
     "st15_stream_partitioned_sink",
@@ -702,11 +702,9 @@ def st15_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     P.run_foreach_batch(
         ev, lambda bdf, eid: P.land_partitioned(bdf, eid, out_dir), output_mode="append"
     )
-    # the audit must list all ~720 (epoch, hour) partition dirs; at this
-    # dir count the driver's listing pool beats a distributed listing
-    # job by ~1.2 s (see driver_side_listing)
-    with P.driver_side_listing(spark):
-        landed = spark.read.parquet(out_dir)
+    # the audit lists all ~720 (epoch, hour) partition dirs on the
+    # driver (parallelPartitionDiscovery.threshold in session.py)
+    landed = spark.read.parquet(out_dir)
     return (
         landed.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -766,14 +764,14 @@ def st16_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = scratch_dir("st16_state_")
 
     def land_summaries(bdf: DataFrame, eid: int) -> None:
-        with P.dynamic_partition_overwrite(bdf.sparkSession):
-            (
-                mg_summaries(bdf, "user_id", SK05_K)
-                .withColumn("_epoch", F.lit(int(eid)))
-                .write.mode("overwrite")
-                .partitionBy("_epoch")
-                .parquet(state_dir)
-            )
+        (
+            mg_summaries(bdf, "user_id", SK05_K)
+            .withColumn("_epoch", F.lit(int(eid)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_epoch")
+            .parquet(state_dir)
+        )
 
     ev = P.events_stream(spark, sf_dir).select("user_id")
     P.run_foreach_batch(ev, land_summaries, output_mode="append")
@@ -826,8 +824,12 @@ def cdc_merge_batch(bdf: DataFrame, state_dir: str) -> None:
         merged = batch
     # materialize before overwriting the partitions being read
     merged = merged.repartition("bucket").localCheckpoint(eager=True)
-    with P.dynamic_partition_overwrite(sp):
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(state_dir)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(state_dir)
+    )
 
 
 @register(
@@ -968,7 +970,7 @@ def st19_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the streaming JSONL intake: each micro-batch is collapsed to
     its local bottom-k of md5(doc_id) (≤ k narrow rows, text dropped
     scan-side), landed in an _epoch-partitioned parquet state table via
-    dynamic-partition overwrite (st15/st16's idempotent-retry recipe),
+    dynamic-partition overwrite (st16's idempotent-retry recipe),
     and the final answer is the bottom-k OF THE SUMMARIES — exactly the
     batch sample, whatever the batch split. State is bounded by
     k·n_epochs summary rows, never by stream volume; torn intake lines
@@ -979,15 +981,15 @@ def st19_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = scratch_dir("st19_state_")
 
     def land_bottomk(bdf: DataFrame, eid: int) -> None:
-        with P.dynamic_partition_overwrite(bdf.sparkSession):
-            (
-                bdf.orderBy("rank_digest")
-                .limit(P14_K)
-                .withColumn("_epoch", F.lit(int(eid)))
-                .write.mode("overwrite")
-                .partitionBy("_epoch")
-                .parquet(state_dir)
-            )
+        (
+            bdf.orderBy("rank_digest")
+            .limit(P14_K)
+            .withColumn("_epoch", F.lit(int(eid)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_epoch")
+            .parquet(state_dir)
+        )
 
     parsed = P.documents_jsonl_stream(spark, sf_dir)
     clean = (

@@ -61,9 +61,11 @@ def test_parallelism_governs_training_partitions(spark, libsvm_file, monkeypatch
     """--parallelism must change actual execution (the reference's
     env.setParallelism axis, Test:24-25), not just the CSV record:
     the training frame reaching fit() carries exactly that many
-    partitions (ADVICE r1: the sweep loop was a no-op before)."""
+    partitions (ADVICE r1: the sweep loop was a no-op before). The
+    caller's shuffle partitions are the same after the runs as before."""
     from sketchmlflink_spark.ml.regression import MultipleLinearRegression
 
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     seen = []
     orig_fit = MultipleLinearRegression.fit
 
@@ -80,6 +82,7 @@ def test_parallelism_governs_training_partitions(spark, libsvm_file, monkeypatch
         row = run_experiment(spark, args)
         assert row["parallelism"] == par
     assert seen == [2, 5], f"training partitions {seen}"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
 
 
 @pytest.mark.parametrize("arm", ["Flink", "Sketch"])

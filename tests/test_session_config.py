@@ -7,6 +7,7 @@ silently missing RocksDB switch (on-heap state, the sf10 OOM) shows."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -195,3 +196,46 @@ def test_foreign_session_runs_python_worker_entries(tmp_path):
     assert "ModuleNotFoundError" not in out, out[-4000:]
     assert proc.returncode == 0, out[-4000:]
     assert "mm02_media_features " in proc.stdout and "m03_sgd_exact_metrics " in proc.stdout
+
+
+def _conf_writes(path: str) -> set[str]:
+    """The enclosing function of every ``<x>.conf.set`` or
+    ``<x>.conf.unset`` call in ``path`` ("" at module level)."""
+    found = set()
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            f = getattr(child, "func", None)
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(f, ast.Attribute)
+                and f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+            ):
+                found.add(func)
+            visit(child, func)
+
+    with open(path) as fh:
+        visit(ast.parse(fh.read(), path), "")
+    return found
+
+
+def test_only_session_and_the_replay_partition_scope_write_confs():
+    """A query sets a write's behaviour with a per-write option and a
+    session-wide setting in session._SESSION_CONFS; the streaming replay
+    driver's partition scope is the one session-conf write elsewhere."""
+    pkg = os.path.join(REPO_ROOT, "sketchmlflink_spark")
+    writers = set()
+    for dp, _, fs in os.walk(pkg):
+        for f in fs:
+            if f.endswith(".py"):
+                path = os.path.join(dp, f)
+                rel = os.path.relpath(path, pkg)
+                writers |= {(rel, func) for func in _conf_writes(path)}
+    assert {w for w in writers if w[0] != "session.py"} == {
+        (os.path.join("streaming", "pipelines.py"), "_apply_stream_partitions")
+    }

@@ -450,6 +450,29 @@ def test_undersized_dim_fails_on_the_driver(spark):
     assert jsc.getPersistentRDDs().size() == persisted
 
 
+def test_m07_releases_its_shared_blocks_when_an_arm_fails(spark, monkeypatch):
+    """m07's arms share one prepared block cache; an arm that raises
+    must not leave it pinned for the rest of the session."""
+    from sketchmlflink_spark import ml_queries
+
+    from tests.conftest import SF_SMALL
+
+    real_train = SGD.train
+    seen = []
+
+    def train(*args, prepared=None, **kwargs):
+        seen.append(prepared)
+        if len(seen) == 2:
+            raise RuntimeError("arm failed")
+        return real_train(*args, prepared=prepared, **kwargs)
+
+    monkeypatch.setattr(SGD, "train", train)
+    with pytest.raises(RuntimeError, match="arm failed"):
+        ml_queries.m07_lr_schedule_sweep(spark, SF_SMALL)
+    assert len(seen) == 2 and seen[0] is seen[1]
+    assert not seen[0].groups.is_cached
+
+
 def test_tree_groups_match_pyspark_tree_reduce(spark):
     """Pins ``_tree_groups`` to the installed PySpark: a pairing combiner
     makes treeReduce return its merge tree as a nested tuple, which

@@ -257,11 +257,11 @@ def test_st16_multi_epoch_heavy_hitters_match_batch_and_retry_safe(
     def land(bdf, eid):
         seen_epochs.append(int(eid))
         epoch_rows[int(eid)] = bdf.toPandas()
-        bdf.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             mg_summaries(bdf, "user_id", SK05_K)
             .withColumn("_epoch", F.lit(int(eid)))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_epoch")
             .parquet(state)
         )
@@ -1155,3 +1155,91 @@ def test_registry_replays_remove_their_checkpoints(spark):
     for name in ("st01_stream_hourly_counts", "st16_stream_heavy_hitters"):
         assert all_queries()[name].build(spark, SF_SMALL).collect(), name
         assert checkpoints() == before, name
+
+
+class _StuckQuery:
+    """A started query that never reaches the end of its input."""
+
+    name, id = "stuck", "stuck-id"
+
+    def __init__(self):
+        self.stopped = False
+
+    def awaitTermination(self, timeout):
+        return False
+
+    def stop(self):
+        self.stopped = True
+
+
+class _FakeWriter:
+    """The DataStreamWriter calls the replay driver makes, recorded."""
+
+    def __init__(self):
+        self.query = _StuckQuery()
+        self.options = {}
+        self.trigger_kw = None
+        self.ckpt_existed = None
+
+    def format(self, _):
+        return self
+
+    def queryName(self, _):
+        return self
+
+    def outputMode(self, _):
+        return self
+
+    def foreachBatch(self, _):
+        return self
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def trigger(self, **kw):
+        self.trigger_kw = kw
+        return self
+
+    def start(self):
+        self.ckpt_existed = os.path.isdir(self.options["checkpointLocation"])
+        return self.query
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda df: P.run_to_batch(df, timeout_s=1),
+        lambda df: P.run_foreach_batch(df, lambda bdf, eid: None, timeout_s=1),
+    ],
+    ids=["run_to_batch", "run_foreach_batch"],
+)
+def test_a_timed_out_replay_raises_and_is_torn_down(run, monkeypatch):
+    """Both replay paths refuse to return a partial result: a query
+    still running at the timeout raises TimeoutError, and it is still
+    stopped, its state stores unloaded and its checkpoint removed."""
+    from types import SimpleNamespace
+    from unittest import mock
+
+    monkeypatch.setattr(P, "_STREAM_PARTS_HINT", [])
+    writer, spark = _FakeWriter(), mock.MagicMock()
+    with pytest.raises(TimeoutError, match="still running after 1s"):
+        run(SimpleNamespace(writeStream=writer, sparkSession=spark))
+    assert writer.trigger_kw == {"availableNow": True}
+    assert writer.ckpt_existed
+    assert writer.query.stopped
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop.assert_called_once()
+    assert not os.path.exists(writer.options["checkpointLocation"])
+
+
+def test_a_failed_state_store_unload_warns():
+    """Cleanup never fails a query, but a failure to unload the state
+    stores shows as a RuntimeWarning naming the error."""
+
+    class _NoJvm:
+        @property
+        def _jvm(self):
+            raise RuntimeError("jvm gone")
+
+    with pytest.warns(RuntimeWarning, match="jvm gone"):
+        P._unload_state_stores(_NoJvm())
