@@ -24,14 +24,6 @@ if REPO_ROOT not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _sf_of(sf_dir: str) -> float:
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        return float(sf)
-    except ValueError:
-        return 0.0
-
-
 # The 21-query round-1 core (regression anchor in BASELINE.md) + the
 # round-2 additions (sparse SGD arm, HLL/CMS sketch aggs, streaming
 # sketch profile). Keep the core list stable — per-query times are
@@ -120,10 +112,13 @@ def bench_names(queries: dict) -> list[str]:
     compared round-over-round) followed by EVERY other registered query
     (VERDICT r3 item 8: the whole catalog gets a timed anchor), minus
     the quadratic anchors at SF >= 1."""
+    from sketchmlflink_spark.registry import infer_sf
+
+    sf = infer_sf(SF_DIR) or 0.0
     names = BENCH_QUERIES + [n for n in queries if n not in BENCH_QUERIES]
-    if _sf_of(SF_DIR) >= 1.0:
+    if sf >= 1.0:
         names = [n for n in names if n not in QUADRATIC_ANCHORS]
-    if _sf_of(SF_DIR) >= 3.0:
+    if sf >= 3.0:
         names = [n for n in names if n not in AUDIT_ANCHORS_SF3]
     return names
 
@@ -209,7 +204,7 @@ def pinned_calib(spark, queries: dict) -> dict:
 def main() -> None:
     import signal
 
-    from sketchmlflink_spark.registry import all_queries
+    from sketchmlflink_spark.registry import all_queries, infer_sf
     from sketchmlflink_spark.session import get_spark
 
     spark = get_spark("sketchmlflink-bench")
@@ -239,7 +234,6 @@ def main() -> None:
                    "calib_pre": None, "calib_post": None}
 
     def payload_now() -> dict:
-        sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
         skipped = [n for n in names
                    if n not in state["timings"] and n not in state["errors"]]
         out = {
@@ -247,7 +241,7 @@ def main() -> None:
             "value": round(state["total"], 3),
             "unit": "sec",
             "queries": {n: round(t, 2) for n, t in state["timings"].items()},
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "sf": infer_sf(SF_DIR),
             "errors": state["errors"],
         }
         if state["calib_mm"] is not None:

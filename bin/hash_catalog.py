@@ -14,18 +14,24 @@ bug class for the WHOLE catalog at once:
     SPARK_GRAFT_CPUS=32 python bin/hash_catalog.py --shuffle 32 --sf ... --out b.json
     diff a.json b.json
 
-The hash canonicalizes the same way the driver's comparator does:
-columns sorted by name, rows sorted, every cell rendered to an exact
-string (float via repr → full bit pattern, no tolerance). Queries with
-no oracle (rows-only by contract: run-varying timings, probabilistic
-candidate sets) are excluded — they are nondeterministic by contract.
-tests/test_perturbation.py wires this into pytest.
+The digest is ``tests/oracle_check.value_hash``: an md5 over the sorted
+column names, each column's Spark type and the rows rendered the way
+the driver's comparator sees them (columns sorted by name, rows sorted,
+floats via repr: full bit pattern, no tolerance). Queries with no
+oracle (rows-only by contract: run-varying timings, probabilistic
+candidate sets) are hashed only when named in --only; m08's row holds
+two wall times (``total_time_ms``, ``time_per_epoch_ms``), so its
+digest moves from run to run. tests/test_perturbation.py wires this
+into pytest.
+
+Fails loudly: an unknown --only name exits 2, and an entry that raised
+is written as ``ERROR:…`` and then the script exits 1, so a
+parent/change diff can never pass on two equal errors.
 """
 
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
@@ -35,64 +41,40 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 
-def _cell(v) -> str:
-    if v is None:
-        return "\x00null"
-    if isinstance(v, bool):
-        return f"b:{v}"
-    if isinstance(v, float):
-        return f"f:{v!r}"
-    if isinstance(v, int):
-        return f"i:{v}"
-    if isinstance(v, (bytes, bytearray)):
-        return "x:" + bytes(v).hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_cell(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}={_cell(v[k])}" for k in sorted(v)) + "}"
-    if hasattr(v, "isoformat"):
-        return "t:" + v.isoformat()
-    return "s:" + str(v)
-
-
-def df_value_hash(df) -> str:
-    cols = sorted(df.columns)
-    rows = sorted("\x01".join(_cell(r[c]) for c in cols) for r in df.collect())
-    h = hashlib.md5()
-    h.update(("\x02".join(cols)).encode())
-    for r in rows:
-        h.update(b"\x03")
-        h.update(r.encode())
-    return h.hexdigest()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--shuffle", type=int, default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--only", default=None, help="comma-separated query names")
+    ap.add_argument("--only", type=lambda a: set(a.split(",")), default=None,
+                    help="comma-separated query names")
     args = ap.parse_args()
 
     from sketchmlflink_spark.registry import all_queries
     from sketchmlflink_spark.session import get_spark
+    from tests.oracle_check import value_hash
+
+    queries = all_queries()
+    if args.only is not None:
+        unknown = args.only - set(queries)
+        if unknown:
+            print(f"--only names not in registry: {sorted(unknown)}", file=sys.stderr)
+            sys.exit(2)
+        queries = {n: q for n, q in queries.items() if n in args.only}
+    else:
+        # rows-only by contract → nondeterministic by contract
+        queries = {n: q for n, q in queries.items() if q.oracle is not None}
 
     spark = get_spark("sketchmlflink-hashcat", shuffle_partitions=args.shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-
-    only = set(args.only.split(",")) if args.only else None
     import gc
 
     out: dict[str, str] = {}
-    for name, q in all_queries().items():
+    for name, q in queries.items():
         gc.collect()  # release prior queries' checkpointed lineage (see bench.py)
-        if q.oracle is None:
-            continue  # rows-only by contract → nondeterministic by contract
-        if only is not None and name not in only:
-            continue
         try:
-            out[name] = df_value_hash(q.build(spark, args.sf))
-        except Exception as e:  # noqa: BLE001 — the diff surfaces it
+            out[name] = value_hash(q.build(spark, args.sf))
+        except Exception as e:  # noqa: BLE001 — written, then the exit code fails
             out[name] = f"ERROR:{type(e).__name__}: {e}"[:300]
     payload = json.dumps(out, indent=0, sort_keys=True)
     if args.out:
@@ -101,6 +83,10 @@ def main() -> None:
     else:
         print(payload)
     spark.stop()
+    errors = sorted(n for n, v in out.items() if v.startswith("ERROR:"))
+    if errors:
+        print(f"entries raised: {errors}", file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":

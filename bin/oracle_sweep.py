@@ -4,27 +4,30 @@
 and a final tally — the reproducible backing for SURVEY.md §8 status
 claims.
 
-Usage: python bin/oracle_sweep.py [sf_dir] [--skip name1,name2] [--strict]
+Usage: python bin/oracle_sweep.py [sf_dir] [--skip a,b] [--only a,b]
        [--no-default-guard]
+
+Every oracled entry goes through ``tests/oracle_check.check``: canonical
+sorted rows, floats via repr, zero tolerance — what the driver's value
+hash sees (an isclose compare treats -0.0 == 0.0 and let t12's signed
+zero through two rounds of local gates). An entry with a documented
+estimator ``band`` falls back to the band compare only after the strict
+compare fails; the tally counts it as band-matched. Run the sweep at
+sf0.01 every round.
 
 The BASELINE.md scale guard is applied AUTOMATICALLY: each registry
 entry carries its own `scale_guard_sf`, the sweep infers the scale
 factor from the sf_dir path, and guarded entries are skipped at or
 above their threshold (ADVICE r6 — no invocation depends on a manually
-passed list). --skip adds names on top; --no-default-guard disables
-the automatic guard (to deliberately run a quadratic anchor).
-
---strict switches the comparator to the repr-strict cross-engine diff
-(tests/oracle_check.compare_query_strict): canonical sorted rows,
-floats via repr, ZERO tolerance — i.e. what the driver's canonical
-value hash actually sees. The default isclose comparator treats
--0.0 == 0.0 and date == midnight-timestamp, which let t12's signed
-zero through two rounds of local gates (round-5 verdict item 2).
-Run the strict mode at sf0.01 every round.
+passed list). --skip adds names on top; --only sweeps just the named
+entries (an unknown name exits 2); --no-default-guard disables the
+automatic guard and the skew guard (to deliberately run a quadratic
+anchor).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -33,26 +36,19 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-_args = [a for a in sys.argv[1:] if not a.startswith("--")]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
-STRICT = "--strict" in sys.argv[1:]
-SKIP: set[str] = set()
-for _a in sys.argv[1:]:
-    if _a.startswith("--skip"):
-        SKIP = set(_a.split("=", 1)[1].split(",")) if "=" in _a else set(
-            sys.argv[sys.argv.index(_a) + 1].split(",")
-        )
-SKEW_SKIP: set[str] = set()  # skew-guarded names, tracked apart from SKIP
-# so the per-line and tally labels attribute each skip to its true guard
-ONLY: set[str] = set()  # --only name1,name2 → sweep just these entries
-for _a in sys.argv[1:]:
-    if _a.startswith("--only"):
-        ONLY = set(_a.split("=", 1)[1].split(",")) if "=" in _a else set(
-            sys.argv[sys.argv.index(_a) + 1].split(",")
-        )
+
+def _names(arg: str) -> set[str]:
+    return set(arg.split(","))
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Sweep the catalog against its DuckDB oracles.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--skip", type=_names, default=set(), help="comma-separated names")
+    ap.add_argument("--only", type=_names, default=set(), help="comma-separated names")
+    ap.add_argument("--no-default-guard", action="store_true")
+    args = ap.parse_args()
+
     from sketchmlflink_spark.registry import (
         all_queries,
         infer_sf,
@@ -60,41 +56,37 @@ def main() -> None:
         skew_guarded,
     )
     from sketchmlflink_spark.session import get_spark
-    from tests.oracle_check import (
-        compare_query,
-        compare_query_strict,
-        duck_connection,
-    )
+    from tests.oracle_check import check, duck_connection
 
     spark = get_spark("sketchmlflink-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connection(SF_DIR)
+    con = duck_connection(args.sf_dir)
     queries = all_queries()
-    if ONLY:
-        unknown = ONLY - set(queries)
+    if args.only:
+        unknown = args.only - set(queries)
         if unknown:
             print(f"--only names not in registry: {sorted(unknown)}", flush=True)
             sys.exit(2)
-        queries = {n: q for n, q in queries.items() if n in ONLY}
+        queries = {n: q for n, q in queries.items() if n in args.only}
 
     # always defined — --no-default-guard must not NameError the skip
-    # check below (ADVICE r10 item 1); it just leaves the set empty
+    # check below (ADVICE r10 item 1); it just leaves both empty
     auto: set[str] = set()
-    if "--no-default-guard" not in sys.argv[1:]:
-        sf = infer_sf(SF_DIR)
+    skew: dict[str, str] = {}
+    if not args.no_default_guard:
+        sf = infer_sf(args.sf_dir)
         if sf is None:
             print(
-                f"WARNING: no sf token in {SF_DIR!r} — scale unknown, "
+                f"WARNING: no sf token in {args.sf_dir!r} — scale unknown, "
                 "quadratic correctness anchors will run UNGUARDED",
                 flush=True,
             )
         auto = scale_guarded_names(sf)
         if auto:
             print(f"auto scale guard at sf={sf}: {sorted(auto)}", flush=True)
-        skew = skew_guarded(SF_DIR)
+        skew = skew_guarded(args.sf_dir)
         for name, reason in sorted(skew.items()):
             print(f"skew guard: {name} — {reason}", flush=True)
-        SKEW_SKIP.update(skew)
 
     import gc
 
@@ -103,8 +95,8 @@ def main() -> None:
     # opposite precedence orders, so a name in several skip sets could be
     # labeled "skew guard" per-line but counted under --skip in the
     # summary). Precedence: explicit --skip > skew guard > scale guard.
-    manual = SKIP & set(queries)
-    skew_skipped = (SKEW_SKIP & set(queries)) - manual
+    manual = args.skip & set(queries)
+    skew_skipped = (set(skew) & set(queries)) - manual
     guard_skipped = (auto & set(queries)) - manual - skew_skipped
     skip_label = {n: "--skip" for n in manual}
     skip_label.update({n: "skew guard" for n in skew_skipped})
@@ -118,22 +110,10 @@ def main() -> None:
             continue
         t0 = time.monotonic()
         try:
-            df = q.build(spark, SF_DIR)
+            df = q.build(spark, args.sf_dir)
             if q.oracle is not None:
-                if STRICT:
-                    problems = compare_query_strict(df, con, q.oracle)
-                    ok = not problems
-                    kind = "reprS"
-                else:
-                    problems = compare_query(df, con, q.oracle)
-                    ok = not problems
-                    kind = "hash"
-                if not ok and q.band is not None:
-                    # approximate estimator past its exact regime:
-                    # fall back to its documented tolerance band
-                    problems = compare_query(df, con, q.oracle, rel_tol=q.band)
-                    ok = not problems
-                    kind = f"band{q.band}"
+                kind, problems = check(q, df, con)
+                ok = not problems
             else:
                 ok = df.count() >= 1
                 problems = [] if ok else ["empty result"]
@@ -141,9 +121,9 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             ok, kind, problems = False, "err", [f"{type(e).__name__}: {e}"[:300]]
         dt = time.monotonic() - t0
-        if ok and kind in ("hash", "reprS"):
+        if ok and kind == "hash":
             n_hash += 1
-        elif ok and kind.startswith("band"):
+        elif ok and kind == "band":
             n_band += 1
         elif ok:
             n_rows_only += 1
@@ -155,7 +135,7 @@ def main() -> None:
 
     total = len(queries) - len(skip_label)
     print(
-        f"\nSWEEP {SF_DIR}: {n_hash} hash-matched + {n_band} band-matched + "
+        f"\nSWEEP {args.sf_dir}: {n_hash} hash-matched + {n_band} band-matched + "
         f"{n_rows_only} rows-only OK "
         f"= {n_hash + n_band + n_rows_only}/{total} green, {n_fail} failed"
         + (f" ({len(guard_skipped)} skipped by scale guard: {sorted(guard_skipped)})" if guard_skipped else "")

@@ -91,7 +91,7 @@ def main() -> None:
 
     from sketchmlflink_spark.registry import all_queries
     from sketchmlflink_spark.session import get_spark
-    from tests.oracle_check import compare_query_strict, duck_connection
+    from tests.oracle_check import check, duck_connection
 
     spark = get_spark("sketchmlflink-skewbench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -128,7 +128,7 @@ def main() -> None:
             oracle_skew[name] = "rows-only"
             continue
         try:
-            problems = compare_query_strict(q.build(spark, skewed), con, q.oracle)
+            _, problems = check(q, q.build(spark, skewed), con)
             oracle_skew[name] = "OK" if not problems else "; ".join(problems[:2])[:200]
         except Exception as e:  # noqa: BLE001
             oracle_skew[name] = f"{type(e).__name__}: {e}"[:200]

@@ -1,64 +1,34 @@
-"""Local mirror of the driver's correctness gate: run a registered Spark
-query and its DuckDB oracle on the same parquet dir, compare
-order-insensitively (columns sorted by name, rows sorted, floats to
-1e-9 rel tolerance).
+"""The one place that renders and compares answers: the local mirror of
+the driver's correctness gate, used by tier-1, the oracle sweep, the
+skew bench and the catalog hash.
 
-NOTE on strictness: the default ``compare_query`` is NOT strictly
-stronger than the driver's value hash — ``math.isclose`` treats
--0.0 == 0.0 and tolerates type-rendering differences (date vs
-timestamp) that a canonical string/bit hash does not (round-5 verdict:
-t12's two-round driver red was a signed zero invisible to every
-isclose-based gate). ``compare_query_strict`` below closes that gap:
-it canonicalizes each row to the repr-level string a value hash sees
-(floats via repr, zero tolerance, isoformat datetimes) and diffs
-byte-for-byte."""
+``canonical_rows`` renders an answer the way the driver's value hash
+sees it (columns sorted by name, cells via ``_repr_cell``, rows
+sorted); ``value_hash`` digests it with the column types; ``check``
+compares a frame to its DuckDB oracle on it with zero tolerance. Only
+an entry that documents an estimator ``band`` falls back to the band
+compare, after the strict compare fails: ``math.isclose`` treats
+-0.0 == 0.0, which let t12's signed zero through two driver rounds."""
 
 from __future__ import annotations
 
+import decimal
+import hashlib
 import math
 import os
 
 import duckdb
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from sketchmlflink_spark.sources.tables import TABLE_NAMES
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{os.path.join(sf_dir, t + '.parquet')}')"
         )
     return con
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, float):
-        return v
-    if isinstance(v, int):
-        return int(v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
-
-
-def _sort_key(row):
-    return tuple((x is None, str(x)) for x in row)
 
 
 def _repr_cell(v) -> str:
@@ -76,8 +46,6 @@ def _repr_cell(v) -> str:
         return repr(v)
     if isinstance(v, float):
         return repr(v)
-    import decimal
-
     if isinstance(v, decimal.Decimal):
         return repr(v.normalize())
     if isinstance(v, int):
@@ -88,89 +56,98 @@ def _repr_cell(v) -> str:
         return bytes(v).hex()
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(_repr_cell(x) for x in v) + "]"
+    if isinstance(v, dict):
+        items = sorted(f"{_repr_cell(k)}={_repr_cell(x)}" for k, x in v.items())
+        return "{" + ",".join(items) + "}"
     return str(v)
 
 
-def compare_query_strict(spark_df, con, sql: str) -> list[str]:
-    """Repr-strict cross-engine diff: exactly what the driver's
-    canonical value hash sees — columns sorted by name, rows sorted by
-    their canonical string form, every cell compared as its canonical
-    string with ZERO tolerance. Catches signed zeros, 1-ulp float
-    drift, and type-rendering mismatches that ``compare_query``'s
-    isclose tolerates (round-5 verdict items 1/2/4)."""
-    problems: list[str] = []
+def _render(row) -> tuple[str, ...]:
+    return tuple(_repr_cell(v) for v in row)
+
+
+def _in_name_order(columns, rows) -> list[tuple]:
+    order = sorted(range(len(columns)), key=columns.__getitem__)
+    return [tuple(r[i] for i in order) for r in rows]
+
+
+def canonical_rows(columns, rows) -> list[tuple[str, ...]]:
+    """Columns sorted by name, every cell rendered, rows sorted."""
+    return sorted(map(_render, _in_name_order(columns, rows)))
+
+
+def value_hash(df) -> str:
+    """md5 over the sorted column names, each column's Spark type and
+    the canonical rows, so a column that changes type changes the
+    digest even when its text does not."""
+    fields = sorted(df.schema.fields, key=lambda f: f.name)
+    h = hashlib.md5(
+        "\x02".join(f"{f.name}:{f.dataType.simpleString()}" for f in fields).encode()
+    )
+    for row in canonical_rows(df.columns, df.collect()):
+        h.update(b"\x03" + "\x01".join(row).encode())
+    return h.hexdigest()
+
+
+def _collect_sides(spark_df, con, sql):
+    """Collect the frame and run its oracle. Returns each side's columns
+    and rows, or a column or row-count mismatch as problems."""
     spark_rows = spark_df.collect()
-    spark_cols = sorted(spark_df.columns)
     duck = con.execute(sql)
-    duck_cols_raw = [d[0] for d in duck.description]
+    duck_cols = [d[0] for d in duck.description]
     duck_rows = duck.fetchall()
-    duck_cols = sorted(duck_cols_raw)
-    if spark_cols != duck_cols:
-        return [f"column mismatch: spark={spark_cols} duck={duck_cols}"]
+    names = sorted(spark_df.columns)
+    if names != sorted(duck_cols):
+        return None, [f"column mismatch: spark={names} duck={sorted(duck_cols)}"]
     if len(spark_rows) != len(duck_rows):
-        return [f"row count mismatch: spark={len(spark_rows)} duck={len(duck_rows)}"]
-    duck_idx = [duck_cols_raw.index(c) for c in duck_cols]
-    s = sorted(tuple(_repr_cell(r[c]) for c in spark_cols) for r in spark_rows)
-    d = sorted(tuple(_repr_cell(r[i]) for i in duck_idx) for r in duck_rows)
+        return None, [f"row count mismatch: spark={len(spark_rows)} duck={len(duck_rows)}"]
+    return (spark_df.columns, spark_rows, duck_cols, duck_rows), []
+
+
+def _band_equal(a, b, band: float) -> bool:
+    """Ints and floats equal within ``rel_tol=band`` (so -0.0 == 0.0 and
+    ulp drift pass); every other cell equal as its canonical string."""
+    if all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in (a, b)):
+        return (math.isnan(a) and math.isnan(b)) or math.isclose(
+            a, b, rel_tol=band, abs_tol=1e-9
+        )
+    return _repr_cell(a) == _repr_cell(b)
+
+
+def _mismatches(sides, band) -> list[str]:
+    """Pair the rows in canonical order and list the cells that differ:
+    as canonical strings (the strict compare) when ``band`` is None,
+    else by ``_band_equal`` (the band compare)."""
+    spark_cols, spark_rows, duck_cols, duck_rows = sides
+    s = sorted(_in_name_order(spark_cols, spark_rows), key=_render)
+    d = sorted(_in_name_order(duck_cols, duck_rows), key=_render)
+    names, problems = sorted(spark_cols), []
     for i, (sr, dr) in enumerate(zip(s, d)):
-        if sr != dr:
-            for c, sv, dv in zip(spark_cols, sr, dr):
-                if sv != dv:
-                    problems.append(f"row {i} col {c}: spark={sv!r} duck={dv!r}")
+        problems += [
+            f"row {i} col {c}: spark={_repr_cell(sv)!r} duck={_repr_cell(dv)!r}"
+            for c, sv, dv in zip(names, sr, dr)
+            if not (
+                _repr_cell(sv) == _repr_cell(dv)
+                if band is None
+                else _band_equal(sv, dv, band)
+            )
+        ]
         if len(problems) > 8:
-            problems.append("...")
-            break
+            return problems + ["..."]
     return problems
 
 
-def compare_query(spark_df, con, sql: str, rel_tol: float = 1e-9) -> list[str]:
-    """Returns a list of human-readable diffs; empty == match.
-
-    ``rel_tol`` loosens the numeric comparison for approximate-estimator
-    queries whose EngineQuery carries a documented tolerance band (e.g.
-    sk01's HLL estimate past its sparse-exact regime): floats AND
-    integer estimates compare within the band instead of exactly. The
-    default keeps the strict behavior (ints exact, floats 1e-9)."""
-    problems: list[str] = []
-    spark_rows = spark_df.collect()
-    spark_cols = sorted(spark_df.columns)
-    duck = con.execute(sql)
-    duck_cols_raw = [d[0] for d in duck.description]
-    duck_rows = duck.fetchall()
-    duck_cols = sorted(duck_cols_raw)
-    if spark_cols != duck_cols:
-        problems.append(f"column mismatch: spark={spark_cols} duck={duck_cols}")
-        return problems
-    if len(spark_rows) != len(duck_rows):
-        problems.append(f"row count mismatch: spark={len(spark_rows)} duck={len(duck_rows)}")
-        return problems
-    s = sorted(
-        (tuple(_norm_cell(r[c]) for c in spark_cols) for r in spark_rows), key=_sort_key
-    )
-    duck_idx = [duck_cols_raw.index(c) for c in duck_cols]
-    d = sorted(
-        (tuple(_norm_cell(r[i]) for i in duck_idx) for r in duck_rows), key=_sort_key
-    )
-    for i, (sr, dr) in enumerate(zip(s, d)):
-        for c, (sv, dv) in zip(spark_cols, zip(sr, dr)):
-            if isinstance(sv, float) and isinstance(dv, float):
-                if not (
-                    (math.isnan(sv) and math.isnan(dv))
-                    or math.isclose(sv, dv, rel_tol=rel_tol, abs_tol=1e-9)
-                ):
-                    problems.append(f"row {i} col {c}: spark={sv!r} duck={dv!r}")
-            elif (
-                rel_tol > 1e-9
-                and isinstance(sv, (int, float))
-                and isinstance(dv, (int, float))
-                and not isinstance(sv, bool)
-                and not isinstance(dv, bool)
-            ):
-                if not math.isclose(sv, dv, rel_tol=rel_tol):
-                    problems.append(f"row {i} col {c}: spark={sv!r} duck={dv!r}")
-            elif sv != dv:
-                problems.append(f"row {i} col {c}: spark={sv!r} duck={dv!r}")
-        if len(problems) > 8:
-            problems.append("...")
-            break
-    return problems
+def check(query, df, con) -> tuple[str, list[str]]:
+    """Compare ``df`` to ``query.oracle`` on ``con`` at the driver's
+    strictness: canonical rows, zero tolerance. Returns ``("hash", [])``
+    on a match. When the strict compare fails and ``query.band`` is set
+    (an approximate estimator past its exact regime, e.g. sk01's HLL),
+    the same collected rows are compared within the band instead and
+    the kind is ``"band"``. Non-empty problems == mismatch."""
+    sides, problems = _collect_sides(df, con, query.oracle)
+    if problems:
+        return "hash", problems
+    problems = _mismatches(sides, None)
+    if problems and query.band is not None:
+        return "band", _mismatches(sides, query.band)
+    return "hash", problems

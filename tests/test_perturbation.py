@@ -54,6 +54,20 @@ def _run(config: dict, sf: str, out: str, only: str | None = None) -> dict:
         return json.load(f)
 
 
+def test_hash_catalog_fails_loudly(tmp_path):
+    """An unknown --only name exits 2; an entry that raised is written
+    as ``ERROR:…`` and the run exits 1, so two equal errors on a
+    parent/change pair never diff clean."""
+    def run(*args):
+        return subprocess.run([sys.executable, HASHCAT, *args], capture_output=True, cwd=REPO_ROOT)
+
+    assert run("--only", "no_such_entry").returncode == 2
+    out = tmp_path / "err.json"
+    missing = str(tmp_path / "missing_sf")
+    assert run("--sf", missing, "--only", "q01_pricing_summary", "--out", str(out)).returncode == 1
+    assert json.loads(out.read_text())["q01_pricing_summary"].startswith("ERROR:")
+
+
 def _assert_same(a: dict, b: dict) -> None:
     assert sorted(a) == sorted(b)
     diffs = {k: (a[k], b[k]) for k in a if a[k] != b[k]}
