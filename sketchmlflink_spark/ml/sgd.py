@@ -147,8 +147,9 @@ def _loss_grad(name: str):
 
 def _partial_record_fn():
     """The builder of one partition's leaf record in the merge tree:
-    the serialized sketch plus the scalars the combiner sums. ``bytes``
-    starts at the leaf's own payload. Returned
+    the sketch's wire payload (``SK.to_bytes``, a fixed binary layout)
+    plus the scalars the combiner sums. ``bytes`` starts at the leaf's
+    own payload. Returned
     nested so cloudpickle ships it by value inside the partial fns; a
     reference to a module-level function would make every task's fresh
     Python worker import this module (pandas, pyspark.sql)."""
@@ -208,8 +209,8 @@ def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "s
 
 
 def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
-    """Merge-tree combiner: decompress both sides, dense-add, RE-SKETCH
-    the partial sum (SGD:274) — so every hop of the distributed reduce
+    """Merge-tree combiner: decompress both sides, add in sparse kv form,
+    RE-SKETCH the partial sum (SGD:274) — so every hop of the distributed reduce
     tree ships a sketch, which is the system's raison d'être (P1).
     ``bytes`` accumulates every hop's payload (leaf payloads + each
     re-sketched partial) of the reference's tree, whether or not the

@@ -7,10 +7,12 @@ SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
   * quantile quantization: bucket each nonzero gradient value into one of
     ``BINS`` (255) quantile bins → uint8 bucket ids;
   * grouped MinMaxSketch: bucket ids stored in ``GROUPS`` (2) hash
-    grids of ``SKETCH_ROWS`` (3) rows × ``COL_RATIO`` (0.3) · nnz cols —
+    grids of ``SKETCH_ROWS`` (3) rows × ``COL_RATIO`` (0.3) · n_g cols —
     min-update on insert, max-over-rows on query, so collisions bias
-    the estimate only within a group's value range;
-  * delta key coding: sorted nonzero indices stored as 8-bit deltas
+    the estimate only within a group's value range. Each group keeps
+    its own sorted key list beside its grid, so group membership is
+    implicit and costs no bytes on the wire;
+  * delta key coding: each group's sorted keys stored as 8-bit deltas
     (SGD:346 keyBits=8) with a 4-byte escape. The byte format is fixed
     (one byte per delta; a delta ≥ 0xFF is 0xFF + little-endian uint32)
     and both directions are vectorized numpy; the golden-digest and spec
@@ -18,17 +20,29 @@ SketchGradientDescent.scala:12-17, MLConf construction SGD:340-348):
   * ZeroGradient elision: all-zero gradients never reach the codec
     (SGD:203, SGD:223 — P8 in SURVEY.md §4);
   * ``compression_type="None"``: identity path — exact values flow
-    through the same envelope (SGD:343, README.md:18).
+    through the same wire format (SGD:343, README.md:18).
 
-Observable contract (SURVEY.md §2.6 table): ``decompress(compress(g))``
-≈ g with error bounded by the containing group's value range;
-``merge`` = decompress + sparse add + re-sketch, mirroring the
+Wire format (``to_bytes``/``from_bytes``), little-endian, no pickle:
+
+  header   u8 version (1), u8 kind (0 zero / 1 identity / 2 sketch),
+           u64 dim, u64 nnz
+  identity zlib'd key section, then nnz float64 values
+  sketch   BINS + 1 float64 quantile splits, then per group:
+           u64 n_g, u64 width, zlib'd key section,
+           zlib'd SKETCH_ROWS × width uint8 grid section
+
+A section is a u64 byte length and the bytes. ``from_bytes`` raises
+``ValueError`` on any payload that breaks this layout.
+
+Observable contract (SURVEY.md §2.6 table): ``decompress(compress_kv(k, v))``
+≈ the gradient, with error bounded by the containing group's value
+range; ``merge`` = decompress + sparse add + re-sketch, mirroring the
 in-combiner re-sketch of SGD:274.
 """
 
 from __future__ import annotations
 
-import pickle
+import struct
 import zlib
 from dataclasses import dataclass
 
@@ -132,30 +146,26 @@ def decode_keys(buf: bytes) -> np.ndarray:
     return np.cumsum(deltas)
 
 
+def _width(n_g: int) -> int:
+    """Grid columns of a group holding ``n_g`` keys."""
+    return max(1, int(np.ceil(COL_RATIO * max(n_g, 1))))
+
+
 @dataclass
 class SketchedGradient:
     """A gradient in transit (sparse/sketched message, dense accumulate —
-    P9 in SURVEY.md §4)."""
+    P9 in SURVEY.md §4). ``keys`` holds sorted int64 key arrays: one per
+    group on the sketch path, where ``keys[g]`` is queried against
+    ``sketches[g]``; a single one on the identity path, whose values are
+    ``exact_values``. The wire size is ``len(to_bytes(sg))``."""
 
     dim: int
-    key_buf: bytes  # delta-encoded nonzero indices
-    nnz: int
+    keys: list[np.ndarray]
     # identity path ("None" compression): exact values; else None
     exact_values: np.ndarray | None
-    # sketch path: quantile splits, per-key group ids (one int8 each),
-    # one MinMaxSketch per group; the wire size is len(to_bytes(sg))
+    # sketch path: BINS + 1 quantile splits and one MinMaxSketch per group
     splits: np.ndarray | None
-    group_ids: np.ndarray | None
     sketches: list[MinMaxSketch] | None
-
-
-def compress(values: np.ndarray, cfg: SketchConfig, dim: int | None = None) -> SketchedGradient | None:
-    """Dense float64 vector → sketched gradient. Returns None for the
-    all-zero vector (ZeroGradient elision, SGD:203/223)."""
-    values = np.asarray(values, dtype=np.float64)
-    dim = dim if dim is not None else values.shape[0]
-    keys = np.nonzero(np.abs(values) > EPS)[0]
-    return compress_kv(keys, values[keys], cfg, dim)
 
 
 def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
@@ -163,7 +173,8 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     a dim-sized buffer — the SparseDoubleGradient branch of the reference
     (SketchGradientDescent.scala:198-217). ``keys`` must be sorted and
     unique (np.unique output qualifies); near-zero entries are elided
-    like the dense path's nnz test (SGD:356-362)."""
+    like the reference's nnz test (SGD:356-362). Returns None when no
+    entry is left (ZeroGradient elision, SGD:203/223)."""
     keys = np.asarray(keys, dtype=np.int64)
     vals = np.asarray(vals, dtype=np.float64)
     live = np.abs(vals) > EPS
@@ -171,9 +182,8 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
         keys, vals = keys[live], vals[live]
     if keys.size == 0:
         return None
-    key_buf = encode_keys(keys)
     if cfg.compression_type == "None" or keys.size < cfg.auto_fallback_nnz:
-        return SketchedGradient(dim, key_buf, keys.size, vals.copy(), None, None, None)
+        return SketchedGradient(dim, [keys.copy()], vals.copy(), None, None)
 
     qs = np.linspace(0.0, 1.0, BINS + 1)
     # one sort serves both the quantiles (a function of the order
@@ -187,44 +197,56 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, BINS - 1)
     # group by bucket range: similar-magnitude values share a grid so a
     # collision costs at most the group's value range
-    group_ids = (buckets.astype(np.int64) * GROUPS // BINS).astype(np.int8)
-    sketches = []
+    group_of = buckets.astype(np.int64) * GROUPS // BINS
+    group_keys, sketches = [], []
     for g in range(GROUPS):
-        mask = group_ids == g
-        n_g = int(mask.sum())
-        width = max(1, int(np.ceil(COL_RATIO * max(n_g, 1))))
-        sketches.append(MinMaxSketch.build(keys[mask], buckets[mask], width))
-    return SketchedGradient(dim, key_buf, keys.size, None, splits, group_ids, sketches)
+        mask = group_of == g
+        kg = keys[mask]
+        group_keys.append(kg)
+        sketches.append(MinMaxSketch.build(kg, buckets[mask], _width(kg.size)))
+    return SketchedGradient(dim, group_keys, None, splits, sketches)
+
+
+def _runs(sg: SketchedGradient) -> list[tuple[np.ndarray, np.ndarray]]:
+    """The gradient as (keys, values) runs, each sorted by key and their
+    keys disjoint: one per group on the sketch path, where a value is
+    the midpoint of the bucket its group's grid reports."""
+    if sg.exact_values is not None:
+        return [(sg.keys[0], sg.exact_values)]
+    bins = sg.splits.shape[0] - 1
+    runs = []
+    for keys, sketch in zip(sg.keys, sg.sketches):
+        b = sketch.query(keys).astype(np.int64)
+        runs.append((keys, 0.5 * (sg.splits[b] + sg.splits[np.minimum(b + 1, bins)])))
+    return runs
+
+
+def _union(runs: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenate sorted (keys, values) runs and put them in key order.
+    The runs are sorted, so the stable sort is a merge of runs; a key
+    shared by two runs keeps their order, earlier run first."""
+    keys = np.concatenate([k for k, _ in runs])
+    vals = np.concatenate([v for _, v in runs])
+    order = np.argsort(keys, kind="stable")
+    return keys[order], vals[order]
 
 
 def decompress_kv(sg: SketchedGradient) -> tuple[np.ndarray, np.ndarray]:
     """Sketched gradient → sparse (keys, values) without a dim-sized
-    buffer. Keys come back sorted-unique (the codec stores them that
-    way)."""
-    keys = decode_keys(sg.key_buf)
-    if sg.exact_values is not None:
-        return keys, sg.exact_values.astype(np.float64, copy=True)
-    vals = np.zeros(keys.shape[0], dtype=np.float64)
-    bins = sg.splits.shape[0] - 1
-    for g, sketch in enumerate(sg.sketches):
-        mask = sg.group_ids == g
-        if not mask.any():
-            continue
-        b = sketch.query(keys[mask]).astype(np.int64)
-        vals[mask] = 0.5 * (sg.splits[b] + sg.splits[np.minimum(b + 1, bins)])
-    return keys, vals
+    buffer. Keys come back sorted-unique; the arrays are the caller's."""
+    return _union(_runs(sg))
 
 
 def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarray:
     """Sketched gradient → dense float64 (``toAuto``/``toDense`` analog,
-    SGD:244/276)."""
+    SGD:244/276), scattered run by run."""
     if sg is None:
         if dim is None:
             raise ValueError("cannot densify ZeroGradient without dim")
         return np.zeros(dim, dtype=np.float64)
     out = np.zeros(sg.dim, dtype=np.float64)
-    keys, vals = decompress_kv(sg)
-    out[keys] = vals
+    for keys, vals in _runs(sg):
+        out[keys] = vals
     return out
 
 
@@ -233,30 +255,130 @@ def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchCon
     so every hop of the reduce tree ships a sketch — the
     in-combiner re-sketch of SGD:274 (P1 in SURVEY.md §4).
 
-    The add runs in sparse kv form (concat + unique-sum), so a combine
-    costs O(nnz_a + nnz_b), not O(dim) — the property that keeps the
-    reduce tree cheap on very wide sparse gradients (SGD:198-217's
-    SparseVector branch is the reference analog)."""
+    The add runs in sparse kv form (union of the up-to-four sorted runs
+    + unique-sum), so a combine costs O(nnz_a + nnz_b), not O(dim) — the
+    property that keeps the reduce tree cheap on very wide sparse
+    gradients (SGD:198-217's SparseVector branch is the reference
+    analog)."""
     if a is None:
         return b
     if b is None:
         return a
-    ka, va = decompress_kv(a)
-    kb, vb = decompress_kv(b)
-    # both key lists are sorted, so a stable sort of their concatenation
-    # is a linear merge; a key present in both sums as va + vb
-    keys = np.concatenate([ka, kb])
-    order = np.argsort(keys, kind="stable")
-    keys = keys[order]
+    # a key present in both sums as va + vb: a's runs come first
+    keys, vals = _union(_runs(a) + _runs(b))
     starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
-    uk = keys[starts]
-    vals = np.add.reduceat(np.concatenate([va, vb])[order], starts)
-    return compress_kv(uk, vals, cfg, dim)
+    return compress_kv(keys[starts], np.add.reduceat(vals, starts), cfg, dim)
+
+
+_VERSION = 1
+_ZERO, _IDENTITY, _SKETCH = 0, 1, 2
+_HEADER = struct.Struct("<BBQQ")  # version, kind, dim, nnz
+_GROUP = struct.Struct("<QQ")  # n_g, width
+_LEN = struct.Struct("<Q")
+
+
+def _section(raw: bytes) -> bytes:
+    blob = zlib.compress(raw, 1)
+    return _LEN.pack(len(blob)) + blob
 
 
 def to_bytes(sg: SketchedGradient | None) -> bytes:
-    return zlib.compress(pickle.dumps(sg), 1)
+    """The gradient's wire payload (layout in the module docstring)."""
+    if sg is None:
+        return _HEADER.pack(_VERSION, _ZERO, 0, 0)
+    nnz = sum(k.size for k in sg.keys)
+    if sg.exact_values is not None:
+        return b"".join([
+            _HEADER.pack(_VERSION, _IDENTITY, sg.dim, nnz),
+            _section(encode_keys(sg.keys[0])),
+            sg.exact_values.astype("<f8", copy=False).tobytes(),
+        ])
+    parts = [_HEADER.pack(_VERSION, _SKETCH, sg.dim, nnz), sg.splits.astype("<f8", copy=False).tobytes()]
+    for keys, sketch in zip(sg.keys, sg.sketches):
+        parts += [
+            _GROUP.pack(keys.size, sketch.grid.shape[1]),
+            _section(encode_keys(keys)),
+            _section(sketch.grid.tobytes()),
+        ]
+    return b"".join(parts)
+
+
+class _Reader:
+    """Cursor over a payload; every read past its end is a ValueError."""
+
+    def __init__(self, buf: bytes):
+        self.buf = memoryview(buf)
+        self.pos = 0
+
+    def take(self, n: int) -> memoryview:
+        if n > len(self.buf) - self.pos:
+            raise ValueError(f"from_bytes: truncated payload ({n} bytes wanted at offset {self.pos} of {len(self.buf)})")
+        self.pos += n
+        return self.buf[self.pos - n : self.pos]
+
+    def unpack(self, fmt: struct.Struct) -> tuple:
+        return fmt.unpack(self.take(fmt.size))
+
+    def section(self, limit: int) -> bytes:
+        """One zlib'd section, inflated to at most ``limit`` bytes."""
+        (n,) = self.unpack(_LEN)
+        inflater = zlib.decompressobj()
+        try:
+            raw = inflater.decompress(self.take(n), limit)
+        except zlib.error as e:
+            raise ValueError(f"from_bytes: corrupt section at offset {self.pos - n}: {e}") from None
+        if not inflater.eof or inflater.unused_data or inflater.unconsumed_tail:
+            raise ValueError(
+                f"from_bytes: section at offset {self.pos - n} is not one zlib stream of at most {limit} bytes"
+            )
+        return raw
+
+    def keys(self, count: int, dim: int) -> np.ndarray:
+        # a delta takes at most 5 bytes
+        keys = decode_keys(self.section(5 * count))
+        if keys.size != count:
+            raise ValueError(f"from_bytes: key section holds {keys.size} keys, expected {count}")
+        if keys.size and (keys[-1] >= dim or (keys.size > 1 and np.diff(keys).min() == 0)):
+            raise ValueError(f"from_bytes: keys must be unique and below dim {dim}")
+        return keys
 
 
 def from_bytes(buf: bytes) -> SketchedGradient | None:
-    return pickle.loads(zlib.decompress(buf))
+    """Parse a ``to_bytes`` payload. Raises ValueError on an unknown
+    version or kind, a truncated or corrupt section, trailing bytes,
+    group sizes that do not sum to nnz, a grid whose shape is not the
+    one ``compress_kv`` derives from its group size, or a key ≥ dim."""
+    r = _Reader(buf)
+    version, kind, dim, nnz = r.unpack(_HEADER)
+    if version != _VERSION:
+        raise ValueError(f"from_bytes: unknown wire version {version} (this codec reads {_VERSION})")
+    if kind == _ZERO:
+        if dim or nnz:
+            raise ValueError("from_bytes: a zero payload carries no dim or nnz")
+        sg = None
+    elif kind == _IDENTITY:
+        keys = r.keys(nnz, dim)
+        vals = np.frombuffer(r.take(8 * nnz), dtype="<f8").astype(np.float64)
+        sg = SketchedGradient(dim, [keys], vals, None, None)
+    elif kind == _SKETCH:
+        splits = np.frombuffer(r.take(8 * (BINS + 1)), dtype="<f8").astype(np.float64)
+        group_keys, sketches = [], []
+        for _ in range(GROUPS):
+            n_g, width = r.unpack(_GROUP)
+            if n_g > nnz - sum(k.size for k in group_keys):
+                raise ValueError(f"from_bytes: group sizes exceed nnz {nnz}")
+            if width != _width(n_g):
+                raise ValueError(f"from_bytes: grid width {width} for a group of {n_g} keys (expected {_width(n_g)})")
+            group_keys.append(r.keys(n_g, dim))
+            grid = r.section(SKETCH_ROWS * width)
+            if len(grid) != SKETCH_ROWS * width:
+                raise ValueError(f"from_bytes: grid of {len(grid)} bytes, expected {SKETCH_ROWS} x {width}")
+            sketches.append(MinMaxSketch(np.frombuffer(grid, dtype=np.uint8).reshape(SKETCH_ROWS, width), BINS))
+        if sum(k.size for k in group_keys) != nnz:
+            raise ValueError(f"from_bytes: group sizes do not sum to nnz {nnz}")
+        sg = SketchedGradient(dim, group_keys, None, splits, sketches)
+    else:
+        raise ValueError(f"from_bytes: unknown payload kind {kind}")
+    if r.pos != len(r.buf):
+        raise ValueError(f"from_bytes: {len(r.buf) - r.pos} trailing bytes after the payload")
+    return sg

@@ -207,9 +207,9 @@ def m08_csvline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     queryable engine metric. On THIS dim-64 dense input the ratio reads
     1.0 by design: nnz=64 < auto_fallback_nnz=512, so the sketch arm
     correctly ships exact payloads (sketching small dense gradients
-    LOSES bytes — PROBE_r07_ml measured 2.7× worse at dim 16; the ratio
-    exceeds 1 in the wide-sparse regime m05/m09 exercise, growing
-    4.3→6.5× across three decades). Rows-only: total/per-epoch timings and the
+    LOSES bytes: the 256 float64 quantile splits alone take 2 KB, four
+    times a 64-value exact payload; the ratio exceeds 1 only in the
+    wide-sparse regime m05/m09 exercise). Rows-only: total/per-epoch timings and the
     float-order-sensitive error sums can't be SQL-reproduced; the error
     bound itself is pytest-pinned against closed-form OLS."""
     from sketchmlflink_spark.ml.regression import MultipleLinearRegression

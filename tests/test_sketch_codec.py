@@ -17,6 +17,12 @@ CFG = SketchConfig(auto_fallback_nnz=0)
 IDENTITY = SketchConfig(compression_type="None")
 
 
+def compress(g: np.ndarray, cfg: SketchConfig):
+    """Dense gradient → sketched gradient through the sparse codec."""
+    keys = np.flatnonzero(np.abs(g) > SK.EPS)
+    return SK.compress_kv(keys, g[keys], cfg, g.shape[0])
+
+
 def group_error_bound(values: np.ndarray) -> float:
     """Worst-case codec error: a MinMaxSketch collision stays within the
     value range of one quantile group (SURVEY.md §2.6)."""
@@ -34,7 +40,7 @@ def test_roundtrip_bounded_error(dim):
     g[rng.random(dim) < 0.5] = 0.0  # sparsify
     if not (np.abs(g) > SK.EPS).any():
         g[0] = 1.0
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     ghat = SK.decompress(sg, dim)
     # nnz key set preserved exactly (keys are delta-coded, not sketched)
     assert set(np.nonzero(ghat)[0]) == set(np.nonzero(np.abs(g) > SK.EPS)[0])
@@ -48,7 +54,7 @@ def test_heavy_tailed_and_uniform_values():
     heavy = rng.standard_cauchy(5000)
     uniform = np.full(100, 3.14)
     for g in (heavy, uniform):
-        sg = SK.compress(g, CFG)
+        sg = compress(g, CFG)
         ghat = SK.decompress(sg, g.shape[0])
         assert ghat.shape == g.shape
         # uniform (degenerate quantiles) must round-trip exactly
@@ -59,21 +65,21 @@ def test_heavy_tailed_and_uniform_values():
 def test_single_nnz():
     g = np.zeros(1000)
     g[123] = -2.5
-    ghat = SK.decompress(SK.compress(g, CFG), 1000)
+    ghat = SK.decompress(compress(g, CFG), 1000)
     assert np.nonzero(ghat)[0].tolist() == [123]
     assert abs(ghat[123] + 2.5) < 1e-9
 
 
 def test_zero_gradient_elision():
     # all-zero never reaches the codec: compress returns None (SGD:203)
-    assert SK.compress(np.zeros(50), CFG) is None
+    assert compress(np.zeros(50), CFG) is None
     assert SK.decompress(None, 50).tolist() == [0.0] * 50
 
 
 def test_identity_compression_exact():
     rng = np.random.default_rng(1)
     g = rng.standard_normal(256)
-    ghat = SK.decompress(SK.compress(g, IDENTITY), 256)
+    ghat = SK.decompress(compress(g, IDENTITY), 256)
     np.testing.assert_allclose(ghat, g, rtol=0, atol=0)
 
 
@@ -81,7 +87,7 @@ def test_merge_approximates_sum_and_is_commutative():
     rng = np.random.default_rng(3)
     a = rng.standard_normal(500)
     b = rng.standard_normal(500)
-    sa, sb = SK.compress(a, CFG), SK.compress(b, CFG)
+    sa, sb = compress(a, CFG), compress(b, CFG)
     m1 = SK.decompress(SK.merge(sa, sb, CFG, 500), 500)
     m2 = SK.decompress(SK.merge(sb, sa, CFG, 500), 500)
     # commutative within tolerance (both arms re-sketch the same sum)
@@ -93,7 +99,7 @@ def test_merge_approximates_sum_and_is_commutative():
 def test_merge_with_zero_is_identity():
     rng = np.random.default_rng(4)
     a = rng.standard_normal(64)
-    sa = SK.compress(a, CFG)
+    sa = compress(a, CFG)
     assert SK.merge(sa, None, CFG, 64) is sa
     assert SK.merge(None, sa, CFG, 64) is sa
 
@@ -110,7 +116,7 @@ def test_payload_smaller_than_dense():
     rng = np.random.default_rng(5)
     dim = 100_000
     g = np.where(rng.random(dim) < 0.9, rng.standard_normal(dim), 0.0)
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     dense_bytes = dim * 8
     assert len(SK.to_bytes(sg)) < dense_bytes / 4, (
         f"sketch {len(SK.to_bytes(sg))}B vs dense {dense_bytes}B"
@@ -120,7 +126,7 @@ def test_payload_smaller_than_dense():
 def test_serialization_roundtrip():
     rng = np.random.default_rng(6)
     g = rng.standard_normal(128)
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     sg2 = SK.from_bytes(SK.to_bytes(sg))
     np.testing.assert_allclose(SK.decompress(sg2, 128), SK.decompress(sg, 128))
     assert SK.from_bytes(SK.to_bytes(None)) is None

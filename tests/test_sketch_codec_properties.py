@@ -8,6 +8,7 @@ observable contract; SketchGradientDescent.scala:220-282 call sites).
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import numpy as np
 import pytest
@@ -20,6 +21,13 @@ from sketchmlflink_spark.config import SketchConfig
 
 CFG = SketchConfig()
 IDENTITY = SketchConfig(compression_type="None")
+SKETCH = SketchConfig(auto_fallback_nnz=0)
+
+
+def compress(g: np.ndarray, cfg: SketchConfig):
+    """Dense gradient → sketched gradient through the sparse codec."""
+    keys = np.flatnonzero(np.abs(g) > SK.EPS)
+    return SK.compress_kv(keys, g[keys], cfg, g.shape[0])
 
 # gradients: modest dims (codec behavior doesn't depend on dim beyond
 # key coding, which gets its own test), mixed scales, many exact zeros
@@ -43,7 +51,7 @@ def _group_error_bound(g: np.ndarray) -> float:
 @given(grad)
 @SETTLE
 def test_roundtrip_keys_exact_and_error_bounded(g):
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     nz = np.nonzero(np.abs(g) > SK.EPS)[0]
     if nz.size == 0:
         assert sg is None  # ZeroGradient elision
@@ -58,7 +66,7 @@ def test_roundtrip_keys_exact_and_error_bounded(g):
 @given(grad)
 @SETTLE
 def test_identity_codec_is_lossless(g):
-    sg = SK.compress(g, IDENTITY)
+    sg = compress(g, IDENTITY)
     ghat = SK.decompress(sg, g.shape[0])
     np.testing.assert_array_equal(ghat, np.where(np.abs(g) > SK.EPS, g, 0.0))
 
@@ -69,7 +77,7 @@ def test_merge_commutes(a, b):
     dim = max(a.shape[0], b.shape[0])
     a = np.pad(a, (0, dim - a.shape[0]))
     b = np.pad(b, (0, dim - b.shape[0]))
-    sa, sb = SK.compress(a, CFG), SK.compress(b, CFG)
+    sa, sb = compress(a, CFG), compress(b, CFG)
     ab = SK.decompress(SK.merge(sa, sb, CFG, dim), dim)
     ba = SK.decompress(SK.merge(sb, sa, CFG, dim), dim)
     # quantile splits of the SAME decompress-sum are order-independent
@@ -79,7 +87,7 @@ def test_merge_commutes(a, b):
 @given(grad)
 @SETTLE
 def test_merge_with_zero_is_identity(g):
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     assert SK.merge(sg, None, CFG, g.shape[0]) is sg
     assert SK.merge(None, sg, CFG, g.shape[0]) is sg
 
@@ -87,7 +95,7 @@ def test_merge_with_zero_is_identity(g):
 @given(grad)
 @SETTLE
 def test_wire_roundtrip_preserves_decompression(g):
-    sg = SK.compress(g, CFG)
+    sg = compress(g, CFG)
     back = SK.from_bytes(SK.to_bytes(sg))
     if sg is None:
         assert back is None
@@ -162,6 +170,198 @@ def test_decode_keys_rejects_truncated_escape():
         SK.decode_keys(bytes.fromhex("01 ff 0001"))
 
 
+def _spec_compress_kv(keys, vals, cfg, dim):
+    """The codec's executable spec: ``compress_kv`` as it was when every
+    key carried an int8 group id beside one sorted key list. Returns
+    (keys, exact values, splits, group ids, sketches), or None."""
+    keys = np.asarray(keys, dtype=np.int64)
+    vals = np.asarray(vals, dtype=np.float64)
+    live = np.abs(vals) > SK.EPS
+    keys, vals = keys[live], vals[live]
+    if keys.size == 0:
+        return None
+    if cfg.compression_type == "None" or keys.size < cfg.auto_fallback_nnz:
+        return keys, vals.copy(), None, None, None
+    order = np.argsort(vals)
+    sorted_vals = vals[order]
+    splits = np.quantile(sorted_vals, np.linspace(0.0, 1.0, SK.BINS + 1))
+    buckets = np.empty(vals.shape[0], dtype=np.int16)
+    buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, SK.BINS - 1)
+    group_ids = (buckets.astype(np.int64) * SK.GROUPS // SK.BINS).astype(np.int8)
+    sketches = []
+    for g in range(SK.GROUPS):
+        mask = group_ids == g
+        width = max(1, int(np.ceil(SK.COL_RATIO * max(int(mask.sum()), 1))))
+        sketches.append(SK.MinMaxSketch.build(keys[mask], buckets[mask], width))
+    return keys, None, splits, group_ids, sketches
+
+
+def _spec_decompress_kv(sg):
+    keys, exact, splits, group_ids, sketches = sg
+    if exact is not None:
+        return keys, exact.astype(np.float64, copy=True)
+    vals = np.zeros(keys.shape[0], dtype=np.float64)
+    bins = splits.shape[0] - 1
+    for g, sketch in enumerate(sketches):
+        mask = group_ids == g
+        if not mask.any():
+            continue
+        b = sketch.query(keys[mask]).astype(np.int64)
+        vals[mask] = 0.5 * (splits[b] + splits[np.minimum(b + 1, bins)])
+    return keys, vals
+
+
+def _spec_merge(a, b, cfg, dim):
+    if a is None:
+        return b
+    if b is None:
+        return a
+    ka, va = _spec_decompress_kv(a)
+    kb, vb = _spec_decompress_kv(b)
+    keys = np.concatenate([ka, kb])
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
+    vals = np.add.reduceat(np.concatenate([va, vb])[order], starts)
+    return _spec_compress_kv(keys[starts], vals, cfg, dim)
+
+
+def _assert_bit_identical(got, want):
+    """Equal (keys, values) pairs, float64 bit for bit (-0.0 != 0.0)."""
+    assert got[0].dtype == want[0].dtype == np.int64 and got[1].dtype == want[1].dtype == np.float64
+    assert got[0].tobytes() == want[0].tobytes()
+    assert got[1].tobytes() == want[1].tobytes()
+
+
+@st.composite
+def sparse_grads(draw, n=2):
+    """``n`` sparse (keys, values) gradients over one dim: a narrow dim
+    makes keys shared between gradients, a wide one forces escapes."""
+    dim = draw(st.sampled_from([300, 1 << 20]))
+    out = []
+    for _ in range(n):
+        keys = np.array(sorted(draw(st.sets(st.integers(0, dim - 1), max_size=300))), dtype=np.int64)
+        vals = draw(hnp.arrays(np.float64, keys.size, elements=st.floats(-1e6, 1e6, allow_nan=False, width=64)))
+        out.append((keys, np.where(np.abs(vals) < 0.5, 0.0, vals)))
+    return dim, out
+
+
+# auto_fallback_nnz=64 sends some operands of one merge down the
+# identity path and others down the sketch path
+CODECS = st.sampled_from([SKETCH, IDENTITY, SketchConfig(auto_fallback_nnz=64)])
+
+
+def _wire(sg):
+    return SK.from_bytes(SK.to_bytes(sg))
+
+
+@given(sparse_grads(), CODECS)
+@SETTLE
+def test_wire_roundtrip_and_merge_bit_identical_to_spec(grads, cfg):
+    """Per-group key lists change the layout, not the numbers: a wire
+    round trip decodes to the spec's (keys, values), and a merge of two
+    decoded payloads re-sketches to the spec's merge, bit for bit."""
+    dim, [(ka, va), (kb, vb)] = grads
+    a, b = SK.compress_kv(ka, va, cfg, dim), SK.compress_kv(kb, vb, cfg, dim)
+    sa, sb = _spec_compress_kv(ka, va, cfg, dim), _spec_compress_kv(kb, vb, cfg, dim)
+    for sg, spec in ((a, sa), (b, sb)):
+        assert (sg is None) == (spec is None)
+        if sg is not None:
+            _assert_bit_identical(SK.decompress_kv(_wire(sg)), _spec_decompress_kv(spec))
+    merged, spec = _wire(SK.merge(_wire(a), _wire(b), cfg, dim)), _spec_merge(sa, sb, cfg, dim)
+    assert (merged is None) == (spec is None)
+    if merged is not None:
+        _assert_bit_identical(SK.decompress_kv(merged), _spec_decompress_kv(spec))
+        keys, vals = _spec_decompress_kv(spec)
+        dense = np.zeros(dim)
+        dense[keys] = vals
+        assert SK.decompress(merged, dim).tobytes() == dense.tobytes()
+
+
+@given(sparse_grads(n=1), st.sampled_from([SKETCH, IDENTITY]))
+@settings(max_examples=30, deadline=None)
+def test_every_proper_prefix_of_a_payload_raises(grads, cfg):
+    dim, [(keys, vals)] = grads
+    buf = SK.to_bytes(SK.compress_kv(keys, vals, cfg, dim))
+    for n in range(len(buf)):
+        with pytest.raises(ValueError):
+            SK.from_bytes(buf[:n])
+
+
+def _sketched():
+    rng = np.random.default_rng(11)
+    keys = np.unique(rng.integers(0, 5000, 800))
+    return SK.compress_kv(keys, rng.standard_normal(keys.size), SKETCH, 5000)
+
+
+_NNZ = sum(k.size for k in _sketched().keys)
+
+
+def _with_header(buf: bytes, **fields) -> bytes:
+    """``buf`` with header fields (version, kind, dim, nnz) replaced."""
+    head = dict(zip(("version", "kind", "dim", "nnz"), struct.unpack_from("<BBQQ", buf)))
+    head.update(fields)
+    return struct.pack("<BBQQ", *head.values()) + buf[struct.calcsize("<BBQQ"):]
+
+
+def _with_first_grid(change) -> bytes:
+    """The sketched payload with its first group's grid replaced."""
+    sg = _sketched()
+    sg.sketches[0] = SK.MinMaxSketch(change(sg.sketches[0].grid), SK.BINS)
+    return SK.to_bytes(sg)
+
+
+def _with_dim_at_largest_key() -> bytes:
+    sg = _sketched()
+    sg.dim = int(max(k[-1] for k in sg.keys))
+    return SK.to_bytes(sg)
+
+
+def _with_corrupt_key_section() -> bytes:
+    buf = SK.to_bytes(_sketched())
+    # the first group's key section starts after the header, the
+    # splits, n_g, width and the section length
+    at = struct.calcsize("<BBQQ") + 8 * (SK.BINS + 1) + 24
+    return buf[:at] + bytes(16) + buf[at + 16:]
+
+
+def _identity(keys: list[int]) -> bytes:
+    return SK.to_bytes(SK.SketchedGradient(10, [np.array(keys)], np.ones(len(keys)), None, None))
+
+
+MALFORMED = {
+    "unknown version": (lambda: _with_header(SK.to_bytes(_sketched()), version=2), "version"),
+    "unknown kind": (lambda: _with_header(SK.to_bytes(_sketched()), kind=7), "kind"),
+    "zero payload with nnz": (lambda: _with_header(SK.to_bytes(None), nnz=1), "zero payload"),
+    "trailing bytes": (lambda: SK.to_bytes(_sketched()) + b"\0", "trailing"),
+    "section past the end": (lambda: SK.to_bytes(_sketched())[:-1], "truncated"),
+    "corrupt zlib section": (_with_corrupt_key_section, "corrupt"),
+    "group sizes below nnz": (lambda: _with_header(SK.to_bytes(_sketched()), nnz=_NNZ + 1), "sum to nnz"),
+    "group sizes above nnz": (lambda: _with_header(SK.to_bytes(_sketched()), nnz=_NNZ - 1), "exceed nnz"),
+    "grid width not derived from n_g": (lambda: _with_first_grid(lambda g: g[:, :-1]), "width"),
+    "grid length not rows x width": (lambda: _with_first_grid(lambda g: g[:-1]), "grid of"),
+    "key not below dim": (_with_dim_at_largest_key, "below dim"),
+    "identity key not below dim": (lambda: _identity([3, 10]), "below dim"),
+    "duplicate key": (lambda: _identity([3, 3]), "unique"),
+}
+
+
+@pytest.mark.parametrize("case", list(MALFORMED))
+def test_malformed_payload_raises_value_error(case):
+    make, match = MALFORMED[case]
+    with pytest.raises(ValueError, match=match):
+        SK.from_bytes(make())
+
+
+def test_well_formed_payloads_parse():
+    """The malformed cases above start from these payloads."""
+    sg = _sketched()
+    _assert_bit_identical(SK.decompress_kv(SK.from_bytes(SK.to_bytes(sg))), SK.decompress_kv(sg))
+    assert SK.from_bytes(SK.to_bytes(None)) is None
+    ok = SK.from_bytes(_identity([3, 9]))
+    assert ok.keys[0].tolist() == [3, 9] and ok.exact_values.tolist() == [1.0, 1.0]
+
+
 def _wide_partition_gradient(seed: int, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """~44k sorted keys in 2^20 dims, like one partition's gradient in
     the wide sketch benchmark; the cut before dim - 1 forces escapes."""
@@ -172,24 +372,34 @@ def _wide_partition_gradient(seed: int, dim: int) -> tuple[np.ndarray, np.ndarra
 
 
 def test_wire_bytes_match_golden_digests():
-    """Pins the shipped bytes of a compressed partition gradient and of
-    a 6 -> 2 -> 1 re-sketching merge tree over contiguous halves
+    """Pins a 6 -> 2 -> 1 re-sketching merge tree over contiguous halves
     {0,1,2} and {3,4,5} (the wide benchmark's treeReduce groups are
-    {0,2,4} and {1,3,5}; the digests pin this fold). The digests cover
-    the pickled envelope, so they hold for this repository's pinned
-    numpy/Python versions."""
+    {0,2,4} and {1,3,5}; the digests pin this fold): the shipped bytes
+    of a leaf and of the root, the byte total of the tree's 11 payloads
+    (6 leaves, 4 partial folds, the root), and the decoded root. The
+    decoded digest predates the current wire layout: a layout change
+    may move the bytes, never the decoded gradient."""
     dim = 1 << 20
     leaves = [SK.compress_kv(*_wide_partition_gradient(s, dim), CFG, dim) for s in range(6)]
-
-    def digest(sg):
-        return hashlib.sha256(SK.to_bytes(sg)).hexdigest()
+    payloads = [SK.to_bytes(sg) for sg in leaves]
 
     def fold(parts):
         acc = parts[0]
         for sg in parts[1:]:
             acc = SK.merge(acc, sg, CFG, dim)
+            payloads.append(SK.to_bytes(acc))
         return acc
 
     root = SK.merge(fold(leaves[:3]), fold(leaves[3:]), CFG, dim)
-    assert digest(leaves[0]) == "71eabb790dd1e73f1234fcf5a781305137fe293b8792abb298015110782c0103"
-    assert digest(root) == "71df381b0f432681aaa8c8faab66140dccfbafd67f8a9d41042da38775f182d4"
+    payloads.append(SK.to_bytes(root))
+    decoded = SK.decompress(SK.from_bytes(payloads[-1]), dim)
+    assert hashlib.sha256(decoded.tobytes()).hexdigest() == (
+        "78adfe0b76666c13aa52d475e8f6d9a797506e6ac0eb733f53e561ff675b64c6"
+    )
+    assert hashlib.sha256(payloads[0]).hexdigest() == (
+        "f272344ec4b6823205f6a8037d8f0c8f69acd0b47dd97f3d64c1c587a2100c3e"
+    )
+    assert hashlib.sha256(payloads[-1]).hexdigest() == (
+        "f4ec73f2d8e6035658f7b93f593818f76d135a2eb374cbbb1b992c5cb1b70403"
+    )
+    assert len(payloads) == 11 and sum(map(len, payloads)) == 1_396_291
