@@ -43,13 +43,17 @@ and a 2-task one 0.14 s (0.62-0.66 s and 0.36-0.40 s before), so the
 saving is now about 0.2 s per epoch. It is a win while the P/L - 1 extra
 serial leaf gradients cost less than that. It was measured a win, with
 the larger overhead, on 4 cores at P = 6 with 250 wide rows
-(dim 2^20, Sketch) per partition (leaf 17 ms, merge 82 ms; the wide
-benchmark), 4000 wide rows (leaf 218 ms, merge 545 ms) and 10000 dense
-64-feature rows (leaf 59 ms, merge 0.4 ms); with the smaller overhead
-the 4000-row margin was not re-measured. Heavier leaves were not
-measured; there the epoch can slow by up to P/L - 1 leaf times. Loss is
-fused into the gradient pass (the reference pays a full extra pass per
-epoch when convergence checking — SGD:125; we get it free).
+(dim 2^20, Sketch) per partition (the wide benchmark), 4000 wide rows
+and 10000 dense 64-feature rows (leaf 59 ms, merge 0.4 ms); with the
+smaller overhead the 4000-row margin was not re-measured. The wide
+costs, re-measured in numpy alone on 4 cores for a first epoch (a leaf
+is one partition's gradient pass, compress and encode; a group task
+runs 2 merges, the driver 1): 250 rows, leaf 4.8 ms, a task's merges
+30 ms, the driver's 33 ms; 4000 rows, leaf 68 ms, merges 264 ms and
+160 ms. Heavier leaves were not measured; there the epoch can slow by
+up to P/L - 1 leaf times. Loss is fused into the gradient pass (the
+reference pays a full extra pass per epoch when convergence checking —
+SGD:125; we get it free).
 """
 
 from __future__ import annotations
@@ -218,8 +222,7 @@ def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
     count as the reference's pairwise reduce ships them."""
 
     def combine(p: dict, q: dict) -> dict:
-        merged = SK.merge(SK.from_bytes(p["payload"]), SK.from_bytes(q["payload"]), sketch_cfg, dim)
-        payload = SK.to_bytes(merged)
+        payload = SK.merge_payloads(p["payload"], q["payload"], sketch_cfg, dim)
         return {
             "payload": payload,
             "intercept_sum": p["intercept_sum"] + q["intercept_sum"],

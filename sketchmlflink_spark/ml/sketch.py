@@ -37,13 +37,16 @@ A section is a u64 byte length and the bytes. ``from_bytes`` raises
 Observable contract (SURVEY.md §2.6 table): ``decompress(compress_kv(k, v))``
 ≈ the gradient, with error bounded by the containing group's value
 range; ``merge`` = decompress + sparse add + re-sketch, mirroring the
-in-combiner re-sketch of SGD:274.
+in-combiner re-sketch of SGD:274; ``merge_payloads`` is that hop from
+two wire payloads to one, the merge tree's combiner.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
@@ -68,8 +71,22 @@ _ROW_A = np.array([1103515245, 214013, 69069, 1664525, 22695477, 1013904223], dt
 _ROW_B = np.array([12345, 2531011, 362437, 1013904223, 1, 11], dtype=np.int64)
 
 
-def _positions(keys: np.ndarray, row: int, width: int) -> np.ndarray:
-    return ((keys.astype(np.int64) * _ROW_A[row] + _ROW_B[row]) % _HASH_P) % width
+def _hashes(keys: np.ndarray) -> np.ndarray:
+    """Each row's width-free hash ``(k·A + B) mod P`` of every key, as a
+    (SKETCH_ROWS, n) uint32 array; a key's grid column in row ``r`` is
+    ``_hashes(keys)[r] % width``. ``k·A + B`` wraps in int64, and
+    ``x − (x // P)·P`` equals numpy's ``x % P`` for every int64 ``x``
+    (both floor), but the floor division by a constant is vectorized."""
+    keys = keys.astype(np.int64, copy=False)
+    out = np.empty((SKETCH_ROWS, keys.size), dtype=np.uint32)
+    for r in range(SKETCH_ROWS):
+        x = keys * _ROW_A[r]
+        x += _ROW_B[r]
+        q = x // _HASH_P
+        q *= _HASH_P
+        x -= q
+        out[r] = x
+    return out
 
 
 @dataclass
@@ -83,19 +100,31 @@ class MinMaxSketch:
 
     @classmethod
     def build(cls, keys: np.ndarray, buckets: np.ndarray, width: int) -> "MinMaxSketch":
+        return cls._build(_hashes(keys), buckets, width)
+
+    @classmethod
+    def _build(cls, hashes: np.ndarray, buckets: np.ndarray, width: int) -> "MinMaxSketch":
         grid = np.full((SKETCH_ROWS, width), BINS, dtype=np.uint8)
+        buckets = buckets.astype(np.uint8, copy=False)
         for r in range(SKETCH_ROWS):
-            np.minimum.at(grid[r], _positions(keys, r, width), buckets.astype(np.uint8))
+            np.minimum.at(grid[r], hashes[r] % np.uint32(width), buckets)
         return cls(grid=grid, sentinel=BINS)
 
     def query(self, keys: np.ndarray) -> np.ndarray:
+        """Each key's bucket id (0 where every row's cell is empty)."""
+        est = self._shifted_ids(_hashes(keys))
+        return np.maximum(est, 1) - 1
+
+    def _shifted_ids(self, hashes: np.ndarray) -> np.ndarray:
+        """The max over rows of each key's cell plus one, in uint8: the
+        empty sentinel BINS (255) wraps to 0, below every id + 1, so 0
+        means no row holds the key and ``i + 1`` means bucket ``i``."""
         rows, width = self.grid.shape
-        est = np.full(keys.shape, -1, dtype=np.int16)
-        for r in range(rows):
-            v = self.grid[r, _positions(keys, r, width)].astype(np.int16)
-            v = np.where(v == self.sentinel, -1, v)
-            est = np.maximum(est, v)
-        return np.clip(est, 0, self.sentinel - 1)
+        shifted = self.grid + np.uint8(1)
+        est = np.take(shifted[0], hashes[0] % np.uint32(width))
+        for r in range(1, rows):
+            np.maximum(est, np.take(shifted[r], hashes[r] % np.uint32(width)), out=est)
+        return est
 
 
 _ESC = 0xFF  # escape marker: the next 4 bytes hold the delta as <u4
@@ -168,6 +197,43 @@ class SketchedGradient:
     sketches: list[MinMaxSketch] | None
 
 
+_QS = np.linspace(0.0, 1.0, BINS + 1)
+# bucket id -> group: similar-magnitude values share a grid, so a
+# collision costs at most the group's value range
+_GROUP_OF = (np.arange(BINS) * GROUPS // BINS).astype(np.uint8)
+
+
+def _sorted_quantiles(s: np.ndarray) -> np.ndarray:
+    """``np.quantile(s, _QS)`` for ascending, NaN-free ``s``, read off by
+    index. numpy 1.26's default ("linear") method partitions a copy of
+    ``s`` and interpolates between the order statistics at
+    ``floor((n - 1)·q)`` and the next; on sorted input those are already
+    in place. The indexes, weights and lerp below are numpy's, operation
+    for operation, so the result is bit-identical."""
+    n = s.shape[0]
+    virtual = (n - 1) * _QS
+    prev = np.floor(virtual)
+    nxt = prev + 1
+    top = virtual >= n - 1  # numpy reads the last value there
+    prev[top] = -1
+    nxt[top] = -1
+    prev, nxt = prev.astype(np.intp), nxt.astype(np.intp)
+    gamma = virtual - prev
+    a, b = s[prev], s[nxt]
+    diff = b - a
+    out = a + diff * gamma
+    np.subtract(b, diff * (1 - gamma), out=out, where=gamma >= 0.5)
+    return out
+
+
+def _group_indexes(buckets: np.ndarray) -> list[np.ndarray]:
+    """Each group's positions in ``buckets`` (uint8 bucket ids), in
+    ascending order. A stable sort of uint8 is numpy's radix sort, so
+    one sort splits the groups and keeps each in key order."""
+    group_of = _GROUP_OF[buckets]
+    return np.split(np.argsort(group_of, kind="stable"), np.cumsum(np.bincount(group_of, minlength=GROUPS))[:-1])
+
+
 def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
     """Sparse (keys, values) gradient → sketched gradient, never touching
     a dim-sized buffer — the SparseDoubleGradient branch of the reference
@@ -175,66 +241,72 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     unique (np.unique output qualifies); near-zero entries are elided
     like the reference's nnz test (SGD:356-362). Returns None when no
     entry is left (ZeroGradient elision, SGD:203/223)."""
-    keys = np.asarray(keys, dtype=np.int64)
-    vals = np.asarray(vals, dtype=np.float64)
+    return _compress(np.asarray(keys, dtype=np.int64), np.asarray(vals, dtype=np.float64), None, cfg, dim)
+
+
+def _compress(keys: np.ndarray, vals: np.ndarray, hashes: np.ndarray | None, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
+    """``compress_kv``, given the keys' ``_hashes`` when the caller has
+    them (None: hashed here)."""
     live = np.abs(vals) > EPS
     if not live.all():
         keys, vals = keys[live], vals[live]
+        if hashes is not None:
+            hashes = hashes[:, live]
     if keys.size == 0:
         return None
     if cfg.compression_type == "None" or keys.size < cfg.auto_fallback_nnz:
         return SketchedGradient(dim, [keys.copy()], vals.copy(), None, None)
 
-    qs = np.linspace(0.0, 1.0, BINS + 1)
-    # one sort serves both the quantiles (a function of the order
-    # statistics only) and the bucket search, which runs far faster
-    # over ascending values than over values in key order
+    # one sort serves both the quantiles (read off the sorted values) and
+    # the bucket search, which runs far faster over ascending values
+    # than over values in key order
     order = np.argsort(vals)
     sorted_vals = vals[order]
-    splits = np.quantile(sorted_vals, qs)
+    splits = _sorted_quantiles(sorted_vals)
     # bucket i covers [splits[i], splits[i+1])
-    buckets = np.empty(vals.shape[0], dtype=np.int16)
+    buckets = np.empty(keys.size, dtype=np.uint8)
     buckets[order] = np.clip(np.searchsorted(splits, sorted_vals, side="right") - 1, 0, BINS - 1)
-    # group by bucket range: similar-magnitude values share a grid so a
-    # collision costs at most the group's value range
-    group_of = buckets.astype(np.int64) * GROUPS // BINS
     group_keys, sketches = [], []
-    for g in range(GROUPS):
-        mask = group_of == g
-        kg = keys[mask]
+    for idx in _group_indexes(buckets):
+        kg = keys[idx]
+        hg = _hashes(kg) if hashes is None else np.take(hashes, idx, axis=1)
         group_keys.append(kg)
-        sketches.append(MinMaxSketch.build(kg, buckets[mask], _width(kg.size)))
+        sketches.append(MinMaxSketch._build(hg, buckets[idx], _width(kg.size)))
     return SketchedGradient(dim, group_keys, None, splits, sketches)
 
 
-def _runs(sg: SketchedGradient) -> list[tuple[np.ndarray, np.ndarray]]:
-    """The gradient as (keys, values) runs, each sorted by key and their
-    keys disjoint: one per group on the sketch path, where a value is
-    the midpoint of the bucket its group's grid reports."""
+def _runs(sg: SketchedGradient) -> list[tuple[np.ndarray, np.ndarray, np.ndarray | None]]:
+    """The gradient as (keys, values, hashes) runs, each sorted by key
+    and their keys disjoint: one per group on the sketch path, where a
+    value is the midpoint of the bucket its group's grid reports and
+    ``hashes`` are the keys' ``_hashes``; one run with hashes None on
+    the identity path."""
     if sg.exact_values is not None:
-        return [(sg.keys[0], sg.exact_values)]
-    bins = sg.splits.shape[0] - 1
+        return [(sg.keys[0], sg.exact_values, None)]
+    mid = 0.5 * (sg.splits[:-1] + sg.splits[1:])  # bucket i's midpoint
+    by_shifted_id = np.concatenate([mid[:1], mid])  # see _shifted_ids
     runs = []
     for keys, sketch in zip(sg.keys, sg.sketches):
-        b = sketch.query(keys).astype(np.int64)
-        runs.append((keys, 0.5 * (sg.splits[b] + sg.splits[np.minimum(b + 1, bins)])))
+        hashes = _hashes(keys)
+        runs.append((keys, np.take(by_shifted_id, sketch._shifted_ids(hashes)), hashes))
     return runs
 
 
-def _union(runs: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate sorted (keys, values) runs and put them in key order.
-    The runs are sorted, so the stable sort is a merge of runs; a key
-    shared by two runs keeps their order, earlier run first."""
-    keys = np.concatenate([k for k, _ in runs])
-    vals = np.concatenate([v for _, v in runs])
+def _order(runs: list) -> tuple[np.ndarray, np.ndarray]:
+    """The runs' keys concatenated and put in key order, with the
+    order. The runs are sorted, so the stable sort is a merge of runs; a
+    key shared by two runs keeps their order, earlier run first."""
+    keys = np.concatenate([r[0] for r in runs])
     order = np.argsort(keys, kind="stable")
-    return keys[order], vals[order]
+    return keys[order], order
 
 
 def decompress_kv(sg: SketchedGradient) -> tuple[np.ndarray, np.ndarray]:
     """Sketched gradient → sparse (keys, values) without a dim-sized
     buffer. Keys come back sorted-unique; the arrays are the caller's."""
-    return _union(_runs(sg))
+    runs = _runs(sg)
+    keys, order = _order(runs)
+    return keys, np.concatenate([r[1] for r in runs])[order]
 
 
 def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarray:
@@ -245,9 +317,24 @@ def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarra
             raise ValueError("cannot densify ZeroGradient without dim")
         return np.zeros(dim, dtype=np.float64)
     out = np.zeros(sg.dim, dtype=np.float64)
-    for keys, vals in _runs(sg):
+    for keys, vals, _ in _runs(sg):
         out[keys] = vals
     return out
+
+
+def _sum_runs(runs: list, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
+    """Re-sketch the sum of the runs of two gradients: the union of the
+    sorted runs + a unique-sum, so a combine costs O(nnz_a + nnz_b),
+    not O(dim). A key present in both sums as va + vb. The keys'
+    hashes ride along when every run has them, so no key is hashed
+    twice in one hop."""
+    keys, order = _order(runs)
+    starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
+    vals = np.add.reduceat(np.concatenate([r[1] for r in runs])[order], starts)
+    hashes = None
+    if all(r[2] is not None for r in runs):
+        hashes = np.take(np.concatenate([r[2] for r in runs], axis=1), order[starts], axis=1)
+    return _compress(keys[starts], vals, hashes, cfg, dim)
 
 
 def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchConfig, dim: int) -> SketchedGradient | None:
@@ -255,19 +342,68 @@ def merge(a: SketchedGradient | None, b: SketchedGradient | None, cfg: SketchCon
     so every hop of the reduce tree ships a sketch — the
     in-combiner re-sketch of SGD:274 (P1 in SURVEY.md §4).
 
-    The add runs in sparse kv form (union of the up-to-four sorted runs
-    + unique-sum), so a combine costs O(nnz_a + nnz_b), not O(dim) — the
-    property that keeps the reduce tree cheap on very wide sparse
-    gradients (SGD:198-217's SparseVector branch is the reference
-    analog)."""
+    The add runs in sparse kv form (``_sum_runs``), so a combine costs
+    O(nnz_a + nnz_b), not O(dim) — the property that keeps the reduce
+    tree cheap on very wide sparse gradients (SGD:198-217's
+    SparseVector branch is the reference analog)."""
     if a is None:
         return b
     if b is None:
         return a
-    # a key present in both sums as va + vb: a's runs come first
-    keys, vals = _union(_runs(a) + _runs(b))
-    starts = np.flatnonzero(np.concatenate([[True], keys[1:] != keys[:-1]]))
-    return compress_kv(keys[starts], np.add.reduceat(vals, starts), cfg, dim)
+    return _sum_runs(_runs(a) + _runs(b), cfg, dim)
+
+
+def _decode(buf: bytes) -> tuple[SketchedGradient | None, list | None]:
+    sg = from_bytes(buf)
+    return sg, None if sg is None else _runs(sg)
+
+
+def _claimed_sketched_keys(buf: bytes) -> int:
+    """The nnz a sketch payload's header claims, 0 for any other payload
+    (``from_bytes`` checks the claim)."""
+    if len(buf) < _HEADER.size:
+        return 0
+    _, kind, _, nnz = _HEADER.unpack_from(buf)
+    return nnz if kind == _SKETCH else 0
+
+
+def merge_payloads(pa: bytes, pb: bytes, cfg: SketchConfig, dim: int) -> bytes:
+    """One hop of the merge tree on wire payloads:
+    ``to_bytes(merge(from_bytes(pa), from_bytes(pb), cfg, dim))``, with
+    the two operands parsed and decompressed on two threads when they
+    are large (``_parallel``)."""
+    sketched_keys = _claimed_sketched_keys(pa) + _claimed_sketched_keys(pb)
+    (a, runs_a), (b, runs_b) = _parallel(_decode, [pa, pb], sketched_keys)
+    if a is None or b is None:
+        return to_bytes(b if a is None else a)
+    return to_bytes(_sum_runs(runs_a + runs_b, cfg, dim))
+
+
+_pool: tuple[int, ThreadPoolExecutor] | None = None
+# Below this many sketched keys a hop stays on one thread. Measured on
+# 4 cores: two 4000-key sketch operands lost 0.08 ms to the hand-off,
+# two 16000-key ones gained 0.3 ms, two 44000-key ones 1.8 ms; identity
+# operands never gained (their decode is mostly a copy), and threaded
+# 64-key identity hops made a sgd_dense_exact epoch 1 ms slower.
+_PARALLEL_MIN_KEYS = 32768
+
+
+def _parallel(fn, items: list, sketched_keys: int) -> list:
+    """``[fn(x) for x in items]``: with at least ``_PARALLEL_MIN_KEYS``
+    sketched keys in the work, the first runs on the calling thread and
+    the rest on a one-thread pool (numpy and zlib release the GIL, so
+    two halves of a hop overlap). The pool is made at first use in each
+    process: the worker daemon forks after import, and a pool made
+    before a fork has no thread in the child. Two threads racing here
+    can each make a pool; the spare one only idles."""
+    if sketched_keys < _PARALLEL_MIN_KEYS:
+        return [fn(x) for x in items]
+    global _pool
+    if _pool is None or _pool[0] != os.getpid():
+        _pool = (os.getpid(), ThreadPoolExecutor(max_workers=1, thread_name_prefix="sketch"))
+    rest = [_pool[1].submit(fn, x) for x in items[1:]]
+    first = fn(items[0])
+    return [first] + [f.result() for f in rest]
 
 
 _VERSION = 1
@@ -293,14 +429,19 @@ def to_bytes(sg: SketchedGradient | None) -> bytes:
             _section(encode_keys(sg.keys[0])),
             sg.exact_values.astype("<f8", copy=False).tobytes(),
         ])
-    parts = [_HEADER.pack(_VERSION, _SKETCH, sg.dim, nnz), sg.splits.astype("<f8", copy=False).tobytes()]
-    for keys, sketch in zip(sg.keys, sg.sketches):
-        parts += [
-            _GROUP.pack(keys.size, sketch.grid.shape[1]),
-            _section(encode_keys(keys)),
-            _section(sketch.grid.tobytes()),
-        ]
-    return b"".join(parts)
+    head = [_HEADER.pack(_VERSION, _SKETCH, sg.dim, nnz), sg.splits.astype("<f8", copy=False).tobytes()]
+    return b"".join(head + _parallel(_group_part, list(zip(sg.keys, sg.sketches)), nnz))
+
+
+def _group_part(group: tuple[np.ndarray, MinMaxSketch]) -> bytes:
+    """One group's part of a sketch payload: n_g, width, the key section
+    and the grid section."""
+    keys, sketch = group
+    return b"".join([
+        _GROUP.pack(keys.size, sketch.grid.shape[1]),
+        _section(encode_keys(keys)),
+        _section(sketch.grid.tobytes()),
+    ])
 
 
 class _Reader:

@@ -8,11 +8,15 @@ observable contract; SketchGradientDescent.scala:220-282 call sites).
 from __future__ import annotations
 
 import hashlib
+import multiprocessing
+import os
 import struct
+import sys
+import threading
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra import numpy as hnp
 
@@ -39,6 +43,10 @@ grad = hnp.arrays(
 
 SETTLE = settings(max_examples=60, deadline=None)
 
+# CFG's auto_fallback_nnz (512) is above ``grad``'s 400 entries, so CFG
+# alone only reaches the identity path; SKETCH sketches every gradient
+PATHS = st.sampled_from([CFG, SKETCH])
+
 
 def _group_error_bound(g: np.ndarray) -> float:
     """A decompressed value is the midpoint of some bucket in its
@@ -48,10 +56,10 @@ def _group_error_bound(g: np.ndarray) -> float:
     return float(np.diff(edges).max() + 1e-9 * max(1.0, np.abs(nz).max()))
 
 
-@given(grad)
+@given(grad, PATHS)
 @SETTLE
-def test_roundtrip_keys_exact_and_error_bounded(g):
-    sg = compress(g, CFG)
+def test_roundtrip_keys_exact_and_error_bounded(g, cfg):
+    sg = compress(g, cfg)
     nz = np.nonzero(np.abs(g) > SK.EPS)[0]
     if nz.size == 0:
         assert sg is None  # ZeroGradient elision
@@ -71,31 +79,31 @@ def test_identity_codec_is_lossless(g):
     np.testing.assert_array_equal(ghat, np.where(np.abs(g) > SK.EPS, g, 0.0))
 
 
-@given(grad, grad)
+@given(grad, grad, PATHS)
 @SETTLE
-def test_merge_commutes(a, b):
+def test_merge_commutes(a, b, cfg):
     dim = max(a.shape[0], b.shape[0])
     a = np.pad(a, (0, dim - a.shape[0]))
     b = np.pad(b, (0, dim - b.shape[0]))
-    sa, sb = compress(a, CFG), compress(b, CFG)
-    ab = SK.decompress(SK.merge(sa, sb, CFG, dim), dim)
-    ba = SK.decompress(SK.merge(sb, sa, CFG, dim), dim)
+    sa, sb = compress(a, cfg), compress(b, cfg)
+    ab = SK.decompress(SK.merge(sa, sb, cfg, dim), dim)
+    ba = SK.decompress(SK.merge(sb, sa, cfg, dim), dim)
     # quantile splits of the SAME decompress-sum are order-independent
     np.testing.assert_allclose(ab, ba, rtol=1e-12, atol=1e-12)
 
 
-@given(grad)
+@given(grad, PATHS)
 @SETTLE
-def test_merge_with_zero_is_identity(g):
-    sg = compress(g, CFG)
-    assert SK.merge(sg, None, CFG, g.shape[0]) is sg
-    assert SK.merge(None, sg, CFG, g.shape[0]) is sg
+def test_merge_with_zero_is_identity(g, cfg):
+    sg = compress(g, cfg)
+    assert SK.merge(sg, None, cfg, g.shape[0]) is sg
+    assert SK.merge(None, sg, cfg, g.shape[0]) is sg
 
 
-@given(grad)
+@given(grad, PATHS)
 @SETTLE
-def test_wire_roundtrip_preserves_decompression(g):
-    sg = compress(g, CFG)
+def test_wire_roundtrip_preserves_decompression(g, cfg):
+    sg = compress(g, cfg)
     back = SK.from_bytes(SK.to_bytes(sg))
     if sg is None:
         assert back is None
@@ -276,6 +284,169 @@ def test_wire_roundtrip_and_merge_bit_identical_to_spec(grads, cfg):
         dense = np.zeros(dim)
         dense[keys] = vals
         assert SK.decompress(merged, dim).tobytes() == dense.tobytes()
+
+
+# Each fast primitive of the codec against the expression it replaced.
+
+QS = np.linspace(0.0, 1.0, SK.BINS + 1)
+HUGE = [1e308, -1e308, 1.7976931348623157e308, -1.7976931348623157e308]
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.floats(allow_nan=False, width=64),
+            st.sampled_from([0.0, -0.0, 1.0, -1.0, 5e-324, *HUGE, np.inf, -np.inf]),
+        ),
+        min_size=1,
+        max_size=600,
+    )
+)
+@settings(max_examples=400, deadline=None)
+def test_sorted_quantiles_bit_identical_to_np_quantile(values):
+    """Read off sorted values, the splits are numpy's, bit for bit:
+    n = 1 and 2, ties, ±0.0, infinities and overflow near 1e308."""
+    s = np.sort(np.array(values, dtype=np.float64))
+    with np.errstate(all="ignore"):
+        assert SK._sorted_quantiles(s).tobytes() == np.quantile(s, QS).tobytes()
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 256, 257, 100_001])
+def test_sorted_quantiles_small_and_large_n(n):
+    s = np.sort(np.random.default_rng(n).standard_normal(n))
+    assert SK._sorted_quantiles(s).tobytes() == np.quantile(s, QS).tobytes()
+
+
+P = 2147483647
+# keys where a row's int64 k·A + B crosses 2^63 and wraps, P's
+# multiples, 32-bit edges and the largest int64 key
+WRAP_EDGES = [
+    (2**63 - 1 - int(b)) // int(a) + d for a, b in zip(SK._ROW_A, SK._ROW_B) for d in (-1, 0, 1, 2)
+]
+EDGE_KEYS = [0, 1, P - 1, P, P + 1, 2 * P, 2**31, 2**32 - 1, 2**32, 2**33, *WRAP_EDGES, 2**63 - 1]
+
+
+@given(
+    st.lists(st.one_of(st.integers(0, 2**63 - 1), st.sampled_from(EDGE_KEYS)), min_size=1, max_size=200),
+    st.one_of(st.integers(1, 300), st.integers(1, 2**31 - 1)),
+)
+@example(EDGE_KEYS, 7919)
+@settings(max_examples=300, deadline=None)
+def test_hashed_positions_equal_int64_expression(keys, width):
+    """``_hashes(k)[r] % width`` is ``((k·A + B) % P) % width`` in int64,
+    wrap and all, for every row and any key the wire format can carry
+    (int64 keys below a u64 dim)."""
+    keys = np.array(sorted(set(keys)), dtype=np.int64)
+    hashes = SK._hashes(keys)
+    assert hashes.dtype == np.uint32 and hashes.shape == (SK.SKETCH_ROWS, keys.size)
+    for r in range(SK.SKETCH_ROWS):
+        with np.errstate(over="ignore"):
+            want = ((keys * SK._ROW_A[r] + SK._ROW_B[r]) % P) % width
+        np.testing.assert_array_equal((hashes[r] % np.uint32(width)).astype(np.int64), want)
+
+
+@given(hnp.arrays(np.uint8, st.integers(0, 500), elements=st.integers(0, SK.BINS - 1)))
+@settings(max_examples=200, deadline=None)
+def test_radix_grouping_equals_group_masks(buckets):
+    """One stable uint8 sort gives each group's positions in order,
+    as the ``bucket * GROUPS // BINS == g`` masks did."""
+    groups = SK._group_indexes(buckets)
+    group_of = buckets.astype(np.int64) * SK.GROUPS // SK.BINS
+    assert len(groups) == SK.GROUPS
+    for g, idx in enumerate(groups):
+        np.testing.assert_array_equal(idx, np.flatnonzero(group_of == g))
+
+
+def _hops(a, b, cfg, dim, min_keys):
+    """Both payloads, the payload hop and the object hop, with the
+    codec's thread threshold at ``min_keys`` sketched keys."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SK, "_PARALLEL_MIN_KEYS", min_keys)
+        pa, pb = SK.to_bytes(a), SK.to_bytes(b)
+        return pa, pb, SK.merge_payloads(pa, pb, cfg, dim), SK.to_bytes(SK.merge(a, b, cfg, dim))
+
+
+@given(sparse_grads(), CODECS)
+@SETTLE
+def test_threaded_payloads_equal_serial(grads, cfg):
+    """The two-thread hop writes the bytes a one-thread hop writes."""
+    dim, [(ka, va), (kb, vb)] = grads
+    a, b = SK.compress_kv(ka, va, cfg, dim), SK.compress_kv(kb, vb, cfg, dim)
+    threaded, serial = _hops(a, b, cfg, dim, 0), _hops(a, b, cfg, dim, 1 << 62)
+    assert threaded == serial
+    pa, pb = serial[:2]
+    # merge_payloads is the decode, merge and encode of one combine
+    assert threaded[2] == SK.to_bytes(SK.merge(SK.from_bytes(pa), SK.from_bytes(pb), cfg, dim))
+
+
+def test_small_hops_stay_on_the_calling_thread(monkeypatch):
+    """Below ``_PARALLEL_MIN_KEYS`` sketched keys, and on the identity
+    path at any size, a hop never hands work to the pool."""
+    class NoPool:
+        def submit(self, *args):
+            raise AssertionError("a small hop used the thread pool")
+
+    monkeypatch.setattr(SK, "_pool", (os.getpid(), NoPool()))
+    dim = 1 << 20
+    grads = [_wide_partition_gradient(s, dim) for s in (1, 2)]
+    for cfg in (SKETCH, IDENTITY):
+        small = [SK.compress_kv(k[:2000], v[:2000], cfg, dim) for k, v in grads]
+        _hops(*small, cfg, dim, SK._PARALLEL_MIN_KEYS)
+    _hops(*[SK.compress_kv(k, v, IDENTITY, dim) for k, v in grads], IDENTITY, dim, SK._PARALLEL_MIN_KEYS)
+
+
+def _hop_in_child(conn, pa, pb, dim):
+    conn.send(SK.merge_payloads(pa, pb, SKETCH, dim))
+    conn.close()
+
+
+def test_forked_child_makes_its_own_thread_pool(monkeypatch):
+    """A worker daemon forks after import: a child that inherits a used
+    pool (whose thread did not survive the fork) still merges."""
+    monkeypatch.setattr(SK, "_PARALLEL_MIN_KEYS", 0)
+    dim, [(ka, va), (kb, vb)] = 5000, [_wide_partition_gradient(s, 5000) for s in (1, 2)]
+    pa = SK.to_bytes(SK.compress_kv(ka, va, SKETCH, dim))
+    pb = SK.to_bytes(SK.compress_kv(kb, vb, SKETCH, dim))
+    want = SK.merge_payloads(pa, pb, SKETCH, dim)  # the parent's pool exists now
+    ctx = multiprocessing.get_context("fork")
+    recv, send = ctx.Pipe(duplex=False)
+    child = ctx.Process(target=_hop_in_child, args=(send, pa, pb, dim))
+    child.start()
+    try:
+        assert recv.poll(60), "the forked child's merge did not finish"
+        assert recv.recv() == want
+        child.join(10)
+        assert child.exitcode == 0
+    finally:
+        if child.is_alive():
+            child.kill()
+
+
+def test_concurrent_hops_share_the_pool(monkeypatch):
+    """Callers on more threads than cores share the one-thread pool;
+    each gets its own hop's bytes."""
+    dim = 5000
+    payloads = [SK.to_bytes(SK.compress_kv(*_wide_partition_gradient(s, dim), SKETCH, dim)) for s in range(4)]
+    pairs = [(payloads[i], payloads[(i + 1) % 4]) for i in range(4)] * 4
+    want = [SK.merge_payloads(pa, pb, SKETCH, dim) for pa, pb in pairs]
+    monkeypatch.setattr(SK, "_PARALLEL_MIN_KEYS", 0)
+    got = [None] * len(pairs)
+
+    def hop(i):
+        got[i] = SK.merge_payloads(*pairs[i], SKETCH, dim)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hop, args=(i,)) for i in range(len(pairs))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == want
 
 
 @given(sparse_grads(n=1), st.sampled_from([SKETCH, IDENTITY]))
