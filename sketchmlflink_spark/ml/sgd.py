@@ -2,9 +2,13 @@
 core dataflow (SketchGradientDescent.scala:183-314) re-expressed in
 Spark's execution model (SURVEY.md §3.2 translation):
 
-  cache training DataFrame once, each partition's numpy block moved to
-  its merge-tree group (``prepare_blocks``); per epoch, ONE Spark stage:
-    broadcast (w, b)
+  cache training DataFrame once, each partition's numpy block (with its
+  sorted feature keys and their inverse, found once) moved to its
+  merge-tree group, and each block's positions in the training set's
+  live keys broadcast once (``prepare_blocks``); per epoch, ONE Spark
+  stage:
+    broadcast (w[live], b): only the coordinates some row reads (1.9 of
+      8.39 MB on the wide benchmark, 238k of 2^20 coordinates)
     → each task owns one level-1 group of PySpark's depth-2
       ``treeReduce`` schedule (``_tree_groups``; 6 partitions: {0,2,4}
       and {1,3,5}). For each partition of its group, in partition
@@ -14,17 +18,25 @@ Spark's execution model (SURVEY.md §3.2 translation):
       separate Flink maps); in "reduce" mode (SGD:256-281) the task
       left-folds these leaf records with a re-sketch per combine
     → the driver left-folds the group records, as ``treeReduce`` does;
-      or, in "reduce_group" mode (SGD:238-253), the tasks return the
-      leaf records and the driver decompresses and sums every one in
-      partition order
+      the last hop keeps the root gradient in memory (it still encodes
+      it, so ``bytes`` counts the root's payload, but never parses it
+      back); or, in "reduce_group" mode (SGD:238-253), the tasks return
+      the leaf records and the driver decompresses and sums every one
+      in partition order
     → driver applies 1/count scaling, eta_t = eta0/sqrt(t) schedule,
-      regularization step, separate intercept update (SGD:283-313)
+      regularization step, separate intercept update (SGD:283-313);
+      with no regularization the step touches only the root's keys, in
+      place, and l1/l2 (dense by definition) and "reduce_group" step
+      densely
 
 The merge tree is the one ``treeReduce(depth=2)`` builds, so every
 re-sketch sees the same operands in the same order and the model is
 bit-identical to it; only the shuffle stage between the leaves and the
 level-1 merges is gone (the regroup happens once, in
-``prepare_blocks``).
+``prepare_blocks``). The cached keys, the live broadcast and the
+in-memory root gather and sum the same floats in the same order as a
+dense broadcast, a per-epoch ``np.unique`` and a parsed root with a
+dense step, so they leave models and bytes bit-identical too.
 
 Scale notes: the compression applies exactly where the reference
 applies it, before a partition's gradient enters the merge tree, and every
@@ -50,16 +62,19 @@ costs, re-measured in numpy alone on 4 cores for a first epoch (a leaf
 is one partition's gradient pass, compress and encode; a group task
 runs 2 merges, the driver 1): 250 rows, leaf 4.8 ms, a task's merges
 30 ms, the driver's 33 ms; 4000 rows, leaf 68 ms, merges 264 ms and
-160 ms. Heavier leaves were not measured; there the epoch can slow by
-up to P/L - 1 leaf times. Loss is fused into the gradient pass (the
-reference pays a full extra pass per epoch when convergence checking —
-SGD:125; we get it free).
+160 ms. With the keys cached, a leaf on one core, with its block's
+unpickling, takes 4.9 ms at 250 rows (5.8 ms with a per-epoch
+``np.unique``) and 61 ms at 4000 rows (82 ms). Heavier leaves were not
+measured; there the epoch can slow by up to P/L - 1 leaf times. Loss
+is fused into the gradient pass (the reference pays a full extra pass
+per epoch when convergence checking — SGD:125; we get it free).
 """
 
 from __future__ import annotations
 
 import functools
 import math
+import pickle
 import time
 from dataclasses import dataclass, field
 
@@ -81,11 +96,15 @@ class TrainResult:
     n_train: int = 0
     epoch_times_ms: list[float] = field(default_factory=list)
     shuffle_bytes: int = 0  # total sketch payload bytes shipped
+    broadcast_bytes: int = 0  # total pickled bytes of the epochs' (w[live], b) broadcasts
 
 
 def _blockify(batches):
     """(indices, values, label) Arrow batches → ONE pickled COO block per
-    partition: (row_ids, idx, val, y) flat numpy arrays.
+    partition: (row_ids, val, y, keys, inv) flat numpy arrays, where
+    ``keys, inv = np.unique(idx, return_inverse=True)`` of the entries'
+    feature indices ``idx`` (so ``idx == keys[inv]``), worked out here
+    once instead of in every epoch; ``row_ids`` and ``inv`` are int32.
 
     Iterating mapInPandas over a cached *DataFrame* re-pays
     InternalRow→Arrow→pandas conversion every epoch; caching the
@@ -97,15 +116,13 @@ def _blockify(batches):
     reference's SparseVector rows (SketchGradientDescent.scala:198-217;
     SparseVector.fromCOO, Test.scala:171). Duplicate indices within a
     row are legal (their contributions sum — a multiset feature map)."""
-    import pickle
-
     rid_parts, idx_parts, val_parts, y_parts = [], [], [], []
     row_base = 0
     for pdf in batches:
         if len(pdf) == 0:
             continue
         lens = np.fromiter((len(a) for a in pdf["indices"]), dtype=np.int64, count=len(pdf))
-        rid_parts.append(np.repeat(np.arange(row_base, row_base + len(pdf)), lens))
+        rid_parts.append(np.repeat(np.arange(row_base, row_base + len(pdf), dtype=np.int32), lens))
         idx_parts.append(np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["indices"]]))
         val_parts.append(
             np.concatenate([np.asarray(a, dtype=np.float64) for a in pdf["values"]])
@@ -113,11 +130,13 @@ def _blockify(batches):
         y_parts.append(pdf["label"].to_numpy(dtype=np.float64))
         row_base += len(pdf)
     if y_parts:
+        keys, inv = np.unique(np.concatenate(idx_parts), return_inverse=True)
         blk = (
             np.concatenate(rid_parts),
-            np.concatenate(idx_parts),
             np.concatenate(val_parts),
             np.concatenate(y_parts),
+            keys,
+            inv.astype(np.int32),
         )
         yield pd.DataFrame({"blob": [pickle.dumps(blk, protocol=5)]})
 
@@ -174,56 +193,55 @@ def _partial_record_fn():
     return partial_record
 
 
-def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
-    """Per-partition gradient pass over cached COO blocks. Nested so
-    cloudpickle ships it by value; touches only numpy + sketch codec.
-    The gradient sum is accumulated SPARSELY (unique feature keys seen
-    in this partition only) and compressed via the codec's kv path — no
-    dim-sized buffer is ever allocated on an executor, so training holds
-    at dim 10^5-10^7 (the reference's actual workload: wide LibSVM
-    swept over --maxDim, runtest.sh:34-36)."""
+def _make_partial_fn(bc, positions, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
+    """``leaf(i, block)``: partition ``i``'s gradient pass over its
+    cached COO block (None for an empty partition), as its leaf record.
+    Nested so cloudpickle ships it by value; touches only numpy + sketch
+    codec. ``bc`` holds ``(w[live], b)`` and ``positions`` each
+    partition's ``PreparedBlocks.positions``, so ``w[live][pos]`` is
+    ``w`` at the block's keys. The gradient sum is accumulated SPARSELY
+    over the block's keys, by their cached inverse ``inv``, and
+    compressed via the codec's kv path — no dim-sized buffer is ever
+    allocated on an executor, so training holds at dim 10^5-10^7 (the
+    reference's actual workload: wide LibSVM swept over --maxDim,
+    runtest.sh:34-36)."""
 
     loss_fn = _loss_grad(loss_name)
     partial_record = _partial_record_fn()
 
-    def fn(blocks):
-        w, b = bc.value
-        idx_parts, contrib_parts = [], []
-        isum = 0.0
-        loss = 0.0
-        n = 0
-        for row_ids, idx, val, y in blocks:
-            # per-row prediction: scatter-sum of val * w[idx] by row
-            pred = np.bincount(row_ids, weights=val * w[idx], minlength=len(y))[: len(y)]
-            g, l = loss_fn(pred + b, y)  # g = dloss/dprediction per example
-            idx_parts.append(idx)
-            contrib_parts.append(val * g[row_ids])
-            isum += float(g.sum())
-            loss += l
-            n += len(y)
-        sg = None
-        if n > 0:
-            idx_cat = np.concatenate(idx_parts)
-            uk, inv = np.unique(idx_cat, return_inverse=True)
-            gv = np.bincount(inv, weights=np.concatenate(contrib_parts), minlength=uk.shape[0])
-            sg = SK.compress_kv(uk, gv, sketch_cfg, dim)  # None if all-zero (P8)
-        yield partial_record(sg, isum, n, loss)
+    def fn(i: int, blk) -> dict:
+        if blk is None:
+            return partial_record(None, 0.0, 0, 0.0)
+        w_live, b = bc.value
+        row_ids, val, y, keys, inv = blk
+        wk = w_live[positions.value[i]]  # w at the block's keys
+        # per-row prediction: scatter-sum of val * w[idx] by row
+        pred = np.bincount(row_ids, weights=val * wk[inv], minlength=len(y))[: len(y)]
+        g, loss = loss_fn(pred + b, y)  # g = dloss/dprediction per example
+        gv = np.bincount(inv, weights=val * g[row_ids], minlength=keys.shape[0])
+        sg = SK.compress_kv(keys, gv, sketch_cfg, dim)  # None if all-zero (P8)
+        # summed from 0.0, so a -0.0 sum (logistic g at huge margins)
+        # reads +0.0, as in any fold of per-block sums
+        return partial_record(sg, 0.0 + float(g.sum()), len(y), loss)
 
     return fn
 
 
-def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
+def _make_combine_fn(dim: int, sketch_cfg: SketchConfig, keep_gradient: bool = False):
     """Merge-tree combiner: decompress both sides, add in sparse kv form,
     RE-SKETCH the partial sum (SGD:274) — so every hop of the distributed reduce
     tree ships a sketch, which is the system's raison d'être (P1).
     ``bytes`` accumulates every hop's payload (leaf payloads + each
     re-sketched partial) of the reference's tree, whether or not the
     hop crosses a process: a group's merges run inside one task, yet
-    count as the reference's pairwise reduce ships them."""
+    count as the reference's pairwise reduce ships them.
+    ``keep_gradient`` (the driver's root hop) also puts the merged
+    ``SketchedGradient`` in the record as ``gradient``, so the driver
+    steps from it without parsing the payload back."""
 
     def combine(p: dict, q: dict) -> dict:
-        payload = SK.merge_payloads(p["payload"], q["payload"], sketch_cfg, dim)
-        return {
+        payload, sg = SK.merge_hop(p["payload"], q["payload"], sketch_cfg, dim)
+        rec = {
             "payload": payload,
             "intercept_sum": p["intercept_sum"] + q["intercept_sum"],
             "n": p["n"] + q["n"],
@@ -231,22 +249,27 @@ def _make_combine_fn(dim: int, sketch_cfg: SketchConfig):
             "loss": p["loss"] + q["loss"],
             "bytes": p["bytes"] + q["bytes"] + len(payload),
         }
+        if keep_gradient:
+            rec["gradient"] = sg
+        return rec
 
     return combine
 
 
-def _run_epoch(groups, leaf, combine=None):
+def _run_epoch(groups, leaf, combine=None, root=None):
     """One epoch as ONE Spark stage over ``PreparedBlocks.groups``: each
     task computes the ``leaf`` record of every partition of its tree
     group, in partition order. With ``combine`` ("reduce") the task
     left-folds them (the level-1 reducer of ``treeReduce``) and the
     driver left-folds the group records into the root record, which is
-    ``leaves.treeReduce(combine, depth=2)`` hop for hop. Without it
-    ("reduce_group") the leaf records come back in partition order.
-    ``task`` is nested so cloudpickle ships it by value."""
+    ``leaves.treeReduce(combine, depth=2)`` hop for hop; ``root``
+    (default ``combine``) makes the fold's last hop, when it has one.
+    Without ``combine`` ("reduce_group") the leaf records come back in
+    partition order. ``task`` is nested so cloudpickle ships it by
+    value."""
 
     def task(records):
-        leaves = ((i, next(leaf(blks))) for i, blks in records)
+        leaves = ((i, leaf(i, blk)) for i, blk in records)
         if combine is None:
             yield from leaves
         else:
@@ -255,7 +278,9 @@ def _run_epoch(groups, leaf, combine=None):
     out = groups.mapPartitions(task).collect()
     if combine is None:
         return [rec for _, rec in sorted(out, key=lambda t: t[0])]
-    return functools.reduce(combine, out)
+    if root is None or len(out) == 1:
+        return functools.reduce(combine, out)
+    return root(functools.reduce(combine, out[:-1]), out[-1])
 
 
 def _sum_partials_group(partials, dim: int):
@@ -295,6 +320,23 @@ def _take_step(w: np.ndarray, grad: np.ndarray, eta: float, cfg: SolverConfig) -
         shrink = eta * cfg.reg_lambda
         w_new = np.sign(w_new) * np.maximum(np.abs(w_new) - shrink, 0.0)
     return w_new
+
+
+def _step(w: np.ndarray, grad, count: int, eta: float, cfg: SolverConfig) -> np.ndarray:
+    """``_take_step(w, dense(grad) / count, eta, cfg)``, where ``grad`` is
+    a dense gradient sum or the root's ``SketchedGradient``. With no
+    regularization the step moves only the gradient's keys, so it
+    scatters the root's runs into ``w`` in place: the same floats as the
+    dense step at those keys, and elsewhere the dense step's
+    ``w - eta * 0.0`` is ``w`` itself (for a finite ``eta > 0``, as every
+    schedule gives). l1 and l2 touch every coordinate: dense step."""
+    if not isinstance(grad, np.ndarray):
+        if cfg.regularization == "none":
+            for keys, vals in SK.runs(grad):
+                w[keys] = w[keys] - eta * (vals / count)
+            return w
+        grad = SK.decompress(grad, w.shape[0])
+    return _take_step(w, grad / count, eta, cfg)
 
 
 def _learning_rate(cfg: SolverConfig, t: int) -> float:
@@ -345,25 +387,35 @@ class PreparedBlocks:
     Content is deterministic for a given input frame, so sharing is
     result-identical to re-preparing.
 
-    ``blocks``: the P-partition RDD of numpy blocks (at most one per
-    partition; the leaves of the merge tree). It is lineage only and not
-    persisted, so a job over it re-reads and re-blockifies the whole
-    input: read its partition count, run no compute on it.
+    ``blocks``: the P-partition RDD of numpy blocks (``_blockify``; at
+    most one per partition; the leaves of the merge tree). It is lineage
+    only and not persisted, so a job over it re-reads and re-blockifies
+    the whole input: read its partition count, run no compute on it.
     ``groups``: the persisted RDD an epoch runs on — partition ``g``
-    holds ``(i, blocks of partition i)`` for every ``i`` of tree group
-    ``g`` (``_tree_groups``), in ascending ``i``. While it is referenced,
-    the regroup's shuffle output keeps a second copy of every block on
-    local disk beside the MEMORY_AND_DISK cache.
+    holds ``(i, block of partition i, or None if it is empty)`` for
+    every ``i`` of tree group ``g`` (``_tree_groups``), in ascending
+    ``i``. While it is referenced, the regroup's shuffle output keeps a
+    second copy of every block on local disk beside the MEMORY_AND_DISK
+    cache.
+    ``live``: the training set's feature keys, sorted (the union of the
+    blocks' keys); an epoch broadcasts ``w[live]``, not ``w``.
+    ``positions``: a broadcast of each partition's int32 positions of
+    its block's keys in ``live`` (None for an empty partition). Epoch
+    tasks read it, so it lives until ``unpersist``.
     """
 
-    def __init__(self, blocks, groups, n_total: int, inferred_dim: int):
+    def __init__(self, blocks, groups, positions, live: np.ndarray, n_total: int):
         self.blocks = blocks
         self.groups = groups
+        self.positions = positions
+        self.live = live
         self.n_total = n_total
-        self.inferred_dim = inferred_dim
+        self.inferred_dim = int(live[-1]) + 1 if live.size else 0
 
     def unpersist(self) -> None:
+        """Release the cached groups and the positions broadcast."""
         self.groups.unpersist()
+        self.positions.destroy()
 
 
 def _coo_columns(df: DataFrame):
@@ -382,11 +434,11 @@ def prepare_blocks(df: DataFrame) -> PreparedBlocks:
     COO by ``_coo_columns``) into numpy blocks, move each partition's
     block to its merge-tree group (``_tree_groups``; one shuffle, here
     instead of in every epoch) and persist the grouped RDD; one job
-    materializes the cache AND yields row count + dimension (S3
-    dimension inference, Test.scala:157-160, fused)."""
+    materializes the cache AND yields the row count and every block's
+    keys, whose union is the live key set (its largest key + 1 is the
+    dimension: S3 dimension inference, Test.scala:157-160, fused). The
+    driver then broadcasts each block's positions in it, once."""
     from pyspark import StorageLevel
-
-    import pickle
 
     indices, values = _coo_columns(df)
     # one numpy block per non-empty partition (P5)
@@ -397,25 +449,28 @@ def prepare_blocks(df: DataFrame) -> PreparedBlocks:
     )
     n_parts = blocks.getNumPartitions()
     n_groups = _tree_groups(n_parts)
-    # an empty partition keeps its record: its leaf still takes its
-    # place in the fold
-    groups = blocks.mapPartitionsWithIndex(lambda i, it: [(i, list(it))])
+    # an empty partition keeps its record (block None): its leaf still
+    # takes its place in the fold
+    groups = blocks.mapPartitionsWithIndex(lambda i, it: [(i, next(it, None))])
     if n_groups < n_parts:
         # partitionBy sends key i to partition i % n_groups
         groups = groups.partitionBy(n_groups, lambda i: i).mapPartitions(
             lambda recs: sorted(recs, key=lambda rec: rec[0]), preservesPartitioning=True
         )
     groups = groups.persist(StorageLevel.MEMORY_AND_DISK)  # cached deserialized (P5)
-    # (row count, local max index + 1) per partition
+    # (partition, row count, block keys) per partition
     stats = groups.map(
-        lambda rec: (
-            sum(len(blk[3]) for blk in rec[1]),
-            max((int(blk[1].max()) + 1 for blk in rec[1] if blk[1].size), default=0),
-        )
+        lambda rec: (rec[0], 0, None) if rec[1] is None else (rec[0], len(rec[1][2]), rec[1][3])
     ).collect()
-    n_total = sum(s[0] for s in stats)
-    inferred_dim = max((s[1] for s in stats), default=0)
-    return PreparedBlocks(blocks, groups, n_total, inferred_dim)
+    n_total = sum(s[1] for s in stats)
+    keys = [s[2] for s in stats if s[2] is not None]
+    live = np.unique(np.concatenate(keys)) if keys else np.zeros(0, dtype=np.int64)
+    positions = [None] * n_parts
+    for i, _, k in stats:
+        if k is not None:
+            positions[i] = np.searchsorted(live, k).astype(np.int32)
+    positions = df.sparkSession.sparkContext.broadcast(positions)
+    return PreparedBlocks(blocks, groups, positions, live, n_total)
 
 
 def train(
@@ -471,20 +526,26 @@ def train(
 
     for t in range(1 + epoch_offset, solver.iterations + 1 + epoch_offset):
         t0 = time.monotonic()
-        bc = sc.broadcast((w, b))
+        down = (w[prepared.live], b)
+        result.broadcast_bytes += len(pickle.dumps(down, protocol=pickle.HIGHEST_PROTOCOL))
+        bc = sc.broadcast(down)
         try:
-            leaf = _make_partial_fn(bc, dim, sketch_cfg, solver.loss)
+            leaf = _make_partial_fn(bc, prepared.positions, dim, sketch_cfg, solver.loss)
             if solver.aggregation == "reduce":
                 # every combine hop ships a re-sketched partial
-                # (SGD:256-281 "Reduce" mode)
-                merged = _run_epoch(prepared.groups, leaf, _make_combine_fn(dim, sketch_cfg))
-                grad_sum = SK.decompress(SK.from_bytes(merged["payload"]), dim)
+                # (SGD:256-281 "Reduce" mode); the root hop keeps the
+                # gradient it encodes
+                merged = _run_epoch(
+                    prepared.groups, leaf, _make_combine_fn(dim, sketch_cfg),
+                    _make_combine_fn(dim, sketch_cfg, keep_gradient=True),
+                )
+                grad = merged["gradient"] if "gradient" in merged else SK.from_bytes(merged["payload"])
                 isum, loss = merged["intercept_sum"], merged["loss"]
                 count = merged["live_n"]
                 result.shuffle_bytes += merged["bytes"]
             else:  # "reduce_group"
                 partials = _run_epoch(prepared.groups, leaf)
-                grad_sum, isum, count, loss, shipped = _sum_partials_group(partials, dim)
+                grad, isum, count, loss, shipped = _sum_partials_group(partials, dim)
                 result.shuffle_bytes += shipped
         finally:
             bc.destroy()
@@ -492,7 +553,7 @@ def train(
             count = n_total
         eta = _learning_rate(solver, t)
         # M3: average; M2: takeStep; M5: separate intercept update (SGD:286-310)
-        w = _take_step(w, grad_sum / count, eta, solver)
+        w = _step(w, grad, count, eta, solver)
         b = b - eta * (isum / count)
         result.epoch_times_ms.append((time.monotonic() - t0) * 1000.0)
         result.losses.append(loss / n_total)

@@ -37,8 +37,9 @@ A section is a u64 byte length and the bytes. ``from_bytes`` raises
 Observable contract (SURVEY.md §2.6 table): ``decompress(compress_kv(k, v))``
 ≈ the gradient, with error bounded by the containing group's value
 range; ``merge`` = decompress + sparse add + re-sketch, mirroring the
-in-combiner re-sketch of SGD:274; ``merge_payloads`` is that hop from
-two wire payloads to one, the merge tree's combiner.
+in-combiner re-sketch of SGD:274; ``merge_hop`` is that hop from two
+wire payloads to one, the merge tree's combiner, and also hands back the
+merged gradient it encoded.
 """
 
 from __future__ import annotations
@@ -309,6 +310,13 @@ def decompress_kv(sg: SketchedGradient) -> tuple[np.ndarray, np.ndarray]:
     return keys, np.concatenate([r[1] for r in runs])[order]
 
 
+def runs(sg: SketchedGradient | None) -> list[tuple[np.ndarray, np.ndarray]]:
+    """The gradient as (keys, values) runs, each sorted by key and their
+    keys disjoint: the values ``decompress`` scatters, without a
+    dim-sized buffer. A ZeroGradient has none."""
+    return [] if sg is None else [(keys, vals) for keys, vals, _ in _runs(sg)]
+
+
 def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarray:
     """Sketched gradient → dense float64 (``toAuto``/``toDense`` analog,
     SGD:244/276), scattered run by run."""
@@ -317,7 +325,7 @@ def decompress(sg: SketchedGradient | None, dim: int | None = None) -> np.ndarra
             raise ValueError("cannot densify ZeroGradient without dim")
         return np.zeros(dim, dtype=np.float64)
     out = np.zeros(sg.dim, dtype=np.float64)
-    for keys, vals, _ in _runs(sg):
+    for keys, vals in runs(sg):
         out[keys] = vals
     return out
 
@@ -367,16 +375,20 @@ def _claimed_sketched_keys(buf: bytes) -> int:
     return nnz if kind == _SKETCH else 0
 
 
-def merge_payloads(pa: bytes, pb: bytes, cfg: SketchConfig, dim: int) -> bytes:
-    """One hop of the merge tree on wire payloads:
-    ``to_bytes(merge(from_bytes(pa), from_bytes(pb), cfg, dim))``, with
-    the two operands parsed and decompressed on two threads when they
-    are large (``_parallel``)."""
+def merge_hop(pa: bytes, pb: bytes, cfg: SketchConfig, dim: int) -> tuple[bytes, SketchedGradient | None]:
+    """One hop of the merge tree on wire payloads: the payload
+    ``to_bytes(merge(from_bytes(pa), from_bytes(pb), cfg, dim))`` and the
+    merged gradient it encodes, with the two operands parsed and
+    decompressed on two threads when they are large (``_parallel``). The
+    gradient equals ``from_bytes`` of the payload, so the hop that makes
+    the root need not parse its own output."""
     sketched_keys = _claimed_sketched_keys(pa) + _claimed_sketched_keys(pb)
     (a, runs_a), (b, runs_b) = _parallel(_decode, [pa, pb], sketched_keys)
     if a is None or b is None:
-        return to_bytes(b if a is None else a)
-    return to_bytes(_sum_runs(runs_a + runs_b, cfg, dim))
+        sg = b if a is None else a
+    else:
+        sg = _sum_runs(runs_a + runs_b, cfg, dim)
+    return to_bytes(sg), sg
 
 
 _pool: tuple[int, ThreadPoolExecutor] | None = None

@@ -5,6 +5,8 @@ Test.scala:43-117); aggregation-strategy toggle parity."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -466,11 +468,16 @@ def test_m07_releases_its_shared_blocks_when_an_arm_fails(spark, monkeypatch):
             raise RuntimeError("arm failed")
         return real_train(*args, prepared=prepared, **kwargs)
 
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
     monkeypatch.setattr(SGD, "train", train)
-    with pytest.raises(RuntimeError, match="arm failed"):
-        ml_queries.m07_lr_schedule_sweep(spark, SF_SMALL)
+    with _recorded_broadcasts(spark, monkeypatch) as made:
+        with pytest.raises(RuntimeError, match="arm failed"):
+            ml_queries.m07_lr_schedule_sweep(spark, SF_SMALL)
     assert len(seen) == 2 and seen[0] is seen[1]
     assert not seen[0].groups.is_cached
+    assert jsc.getPersistentRDDs().size() == persisted
+    assert made and _live(made) == 0  # the positions and the epochs' (w[live], b)
 
 
 def test_tree_groups_match_pyspark_tree_reduce(spark):
@@ -507,35 +514,259 @@ def _wide_frame(spark, parts: int, empty_part: int | None = None):
     return spark.createDataFrame(rdd, "indices array<int>, values array<double>, label double")
 
 
+# --------------------------------------------------------------------------
+# spec: the dense-broadcast leaf and dense step the cached-key epoch
+# replaced. The leaf reads (row_ids, idx, val, y) blocks and the full
+# (w, b), and finds the block's keys with np.unique in every epoch; the
+# driver parses the root payload and steps over all of w. Models and
+# records of ``train`` must equal these byte for byte.
+# --------------------------------------------------------------------------
+def _spec_blocks(blocks):
+    """The prepared leaves as spec blocks: a cached
+    (row_ids, val, y, keys, inv) block is (row_ids, keys[inv], val, y)."""
+    return blocks.map(lambda blk: (blk[0].astype(np.int64), blk[3][blk[4]], blk[1], blk[2]))
+
+
+def _spec_partial_fn(bc, dim, sketch_cfg, loss_name="squared"):
+    loss_fn = SGD._loss_grad(loss_name)
+    partial_record = SGD._partial_record_fn()
+    compress_kv = SGD.SK.compress_kv
+
+    def fn(blocks):
+        w, b = bc.value
+        idx_parts, contrib_parts = [], []
+        isum = 0.0
+        loss = 0.0
+        n = 0
+        for row_ids, idx, val, y in blocks:
+            pred = np.bincount(row_ids, weights=val * w[idx], minlength=len(y))[: len(y)]
+            g, l = loss_fn(pred + b, y)
+            idx_parts.append(idx)
+            contrib_parts.append(val * g[row_ids])
+            isum += float(g.sum())
+            loss += l
+            n += len(y)
+        sg = None
+        if n > 0:
+            idx_cat = np.concatenate(idx_parts)
+            uk, inv = np.unique(idx_cat, return_inverse=True)
+            gv = np.bincount(inv, weights=np.concatenate(contrib_parts), minlength=uk.shape[0])
+            sg = compress_kv(uk, gv, sketch_cfg, dim)
+        yield partial_record(sg, isum, n, loss)
+
+    return fn
+
+
+def _spec_take_step(w, grad, eta, cfg):
+    if cfg.regularization == "l2":
+        grad = grad + cfg.reg_lambda * w
+    w_new = w - eta * grad
+    if cfg.regularization == "l1":
+        shrink = eta * cfg.reg_lambda
+        w_new = np.sign(w_new) * np.maximum(np.abs(w_new) - shrink, 0.0)
+    return w_new
+
+
+def _spec_train(spark, spec_blocks, n_total, dim, solver, cfg, init_weights):
+    """``train``'s epoch loop over the spec leaf: broadcast (w, b),
+    treeReduce the leaves (or collect them for "reduce_group"), decode
+    the root payload, dense step."""
+    from sketchmlflink_spark.ml import sketch as SK
+
+    w = np.zeros(dim) if init_weights is None else init_weights.copy()
+    b = 0.0
+    losses, shipped = [], 0
+    for t in range(1, solver.iterations + 1):
+        bc = spark.sparkContext.broadcast((w, b))
+        try:
+            leaves = spec_blocks.mapPartitions(_spec_partial_fn(bc, dim, cfg, solver.loss))
+            if solver.aggregation == "reduce":
+                merged = leaves.treeReduce(SGD._make_combine_fn(dim, cfg), depth=2)
+                grad_sum = SK.decompress(SK.from_bytes(merged["payload"]), dim)
+                isum, loss, count = merged["intercept_sum"], merged["loss"], merged["live_n"]
+                shipped += merged["bytes"]
+            else:
+                grad_sum, isum, count, loss, hop_bytes = SGD._sum_partials_group(leaves.collect(), dim)
+                shipped += hop_bytes
+        finally:
+            bc.destroy()
+        count = count or n_total
+        eta = SGD._learning_rate(solver, t)
+        w = _spec_take_step(w, grad_sum / count, eta, solver)
+        b = b - eta * (isum / count)
+        losses.append(loss / n_total)
+    return w, b, losses, shipped
+
+
 @pytest.mark.parametrize("parts", [4, 5, 6, 9])
 def test_one_stage_epoch_equals_tree_reduce(spark, parts):
     """One epoch of the grouped one-stage path gives the record
-    ``treeReduce(depth=2)`` gives over the same leaves and broadcast, in
-    all six fields (payload bytes, sums, counts, hop bytes), under both
-    codecs; "reduce_group" gets the leaves in partition order. The
-    9-partition frame has an empty partition, whose leaf still takes
-    its place in the fold."""
+    ``treeReduce(depth=2)`` gives over the spec leaves and the dense
+    broadcast, in all six fields (payload bytes, sums, counts, hop
+    bytes), under both codecs; "reduce_group" gets the leaves in
+    partition order. The 9-partition frame has an empty partition, whose
+    leaf still takes its place in the fold."""
     from sketchmlflink_spark.ml import sketch as SK
 
     dim = 20_000
     prepared = SGD.prepare_blocks(_wide_frame(spark, parts, 2 if parts == 9 else None))
     rng = np.random.default_rng(3)
-    bc = spark.sparkContext.broadcast((rng.normal(0.0, 0.01, dim), 0.1))
+    w = rng.normal(0.0, 0.01, dim)
+    sc = spark.sparkContext
+    bc, spec_bc = sc.broadcast((w[prepared.live], 0.1)), sc.broadcast((w, 0.1))
     try:
         assert prepared.blocks.getNumPartitions() == parts
         for codec in ("None", "Sketch"):
             cfg = SketchConfig(compression_type=codec)
-            leaf = SGD._make_partial_fn(bc, dim, cfg)
+            leaf = SGD._make_partial_fn(bc, prepared.positions, dim, cfg)
             combine = SGD._make_combine_fn(dim, cfg)
-            reference = prepared.blocks.mapPartitions(leaf).treeReduce(combine, depth=2)
+            spec_leaves = _spec_blocks(prepared.blocks).mapPartitions(_spec_partial_fn(spec_bc, dim, cfg))
+            reference = spec_leaves.treeReduce(combine, depth=2)
             assert SGD._run_epoch(prepared.groups, leaf, combine) == reference, codec
-            leaves = prepared.blocks.mapPartitions(leaf).collect()
+            leaves = spec_leaves.collect()
             assert SGD._run_epoch(prepared.groups, leaf) == leaves, codec
             assert len(leaves) == parts
+            # the root hop that keeps its gradient writes the same record
+            rooted = SGD._run_epoch(prepared.groups, leaf, combine, SGD._make_combine_fn(dim, cfg, True))
+            root_grad = rooted.pop("gradient")
+            assert rooted == reference and SK.to_bytes(root_grad) == reference["payload"], codec
         assert SK.from_bytes(reference["payload"]).exact_values is None  # sketched
     finally:
         bc.destroy()
+        spec_bc.destroy()
         prepared.unpersist()
+
+
+def _bits(x) -> bytes:
+    return np.asarray(x, dtype=np.float64).tobytes()
+
+
+@pytest.mark.parametrize("parts", [4, 5, 6, 9])
+def test_train_equals_the_spec_bit_for_bit(spark, parts):
+    """``train`` (cached keys, ``(w[live], b)`` broadcast, root decoded
+    in memory, in-place step without regularization) gives the spec
+    loop's weights, intercept, losses and shipped bytes byte for byte:
+    both codecs, both aggregations, none/l1/l2, from a warm start whose
+    weights are nonzero outside the live keys (the st06 shape) and
+    from zero. ``dim`` is above the data's, so some coordinates are in
+    no row."""
+    dim = 20_011
+    df = _wide_frame(spark, parts, 2 if parts == 9 else None)
+    prepared = SGD.prepare_blocks(df)
+    spec_blocks = _spec_blocks(prepared.blocks).cache()
+    warm = np.random.default_rng(parts).normal(0.0, 0.05, dim)
+    try:
+        assert prepared.live.size < dim  # there are coordinates outside the live set
+        for codec, aggregation, reg, init in [
+            (codec, aggregation, reg, warm)
+            for codec in ("None", "Sketch")
+            for aggregation in ("reduce", "reduce_group")
+            for reg in ("none", "l1", "l2")
+        ] + [("Sketch", "reduce", "none", None), ("None", "reduce_group", "l2", None)]:
+            solver = SolverConfig(iterations=2, step_size=0.5, aggregation=aggregation,
+                                  regularization=reg, reg_lambda=0.01)
+            cfg = SketchConfig(compression_type=codec)
+            res = SGD.train(df, solver, cfg, dim=dim, init_weights=init, prepared=prepared)
+            w, b, losses, shipped = _spec_train(spark, spec_blocks, prepared.n_total, dim, solver, cfg, init)
+            case = (codec, aggregation, reg, init is None)
+            assert _bits(res.weights) == _bits(w), case
+            assert _bits(res.intercept) == _bits(b), case
+            assert _bits(res.losses) == _bits(losses), case
+            assert res.shuffle_bytes == shipped, case
+            if init is not None:
+                assert not np.array_equal(res.weights, warm), case  # the model moved
+    finally:
+        spec_blocks.unpersist()
+        prepared.unpersist()
+
+
+def _live(broadcasts) -> int:
+    """How many of ``broadcasts`` are not destroyed yet."""
+    return sum(bool(bc._jbroadcast.isValid()) for bc in broadcasts)
+
+
+@contextlib.contextmanager
+def _recorded_broadcasts(spark, monkeypatch):
+    """Every broadcast the SparkContext makes inside the block."""
+    made = []
+    cls = type(spark.sparkContext)
+    real = cls.broadcast
+
+    def broadcast(self, value):
+        made.append(real(self, value))
+        return made[-1]
+
+    monkeypatch.setattr(cls, "broadcast", broadcast)
+    try:
+        yield made
+    finally:
+        monkeypatch.setattr(cls, "broadcast", real)
+
+
+def test_unpersist_releases_blocks_and_broadcasts(spark, monkeypatch):
+    """``prepare_blocks`` runs one job and holds one persisted RDD and
+    one broadcast (the positions); every epoch destroys its own
+    broadcast; ``unpersist`` returns both counts to their baseline. A
+    ``train`` that prepares its own blocks leaves nothing behind."""
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    df = _wide_frame(spark, 6)
+    group = "test_sgd_prepare_jobs"
+    with _recorded_broadcasts(spark, monkeypatch) as made:
+        sc.setJobGroup(group, group)
+        try:
+            prepared = SGD.prepare_blocks(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        try:
+            assert jsc.getPersistentRDDs().size() == persisted + 1
+            assert _live(made) == 1
+            for aggregation in ("reduce", "reduce_group"):
+                SGD.train(df, SolverConfig(iterations=2, aggregation=aggregation),
+                          SketchConfig(compression_type="Sketch"), prepared=prepared)
+            assert len(made) == 5 and _live(made) == 1
+        finally:
+            prepared.unpersist()
+        assert jsc.getPersistentRDDs().size() == persisted
+        assert _live(made) == 0
+        SGD.train(df, SolverConfig(iterations=2), SketchConfig(compression_type="Sketch"))
+        assert len(made) == 8 and _live(made) == 0
+    assert jsc.getPersistentRDDs().size() == persisted
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_epoch_broadcast_is_the_live_coordinates(spark):
+    """On a wide frame an epoch broadcasts ``(w[live], b)``: at most 30 %
+    of the pickled dense ``(w, b)``, counted per epoch in
+    ``TrainResult.broadcast_bytes``."""
+    import pickle
+
+    dim = 1 << 17
+    res = SGD.train(_wide_frame(spark, 6), SolverConfig(iterations=3),
+                    SketchConfig(compression_type="Sketch"), dim=dim)
+    dense = len(pickle.dumps((np.zeros(dim), 0.0), protocol=pickle.HIGHEST_PROTOCOL))
+    assert res.epochs_run == 3
+    assert 0 < res.broadcast_bytes / 3 <= 0.3 * dense, (res.broadcast_bytes, dense)
+
+
+def test_m08_report_columns_are_pinned(spark):
+    """m08 is rows-only (two wall-time columns), so its other columns are
+    pinned here at the sf0.001 fixture: the exact and sketch arms train
+    through ``prepare_blocks`` on one split, so any drift in the models
+    or in the shipped bytes shows."""
+    from sketchmlflink_spark import ml_queries
+
+    from tests.conftest import SF_SMALL
+
+    row = ml_queries.m08_csvline_report(spark, SF_SMALL).collect()
+    assert len(row) == 1
+    got = {k: row[0][k] for k in ("absolute_error", "avg_error", "exact_grad_bytes",
+                                  "sketch_grad_bytes", "sketch_byte_ratio")}
+    assert got == {"absolute_error": 55.449338, "avg_error": 0.443595, "exact_grad_bytes": 2750,
+                   "sketch_grad_bytes": 2750, "sketch_byte_ratio": 1.0}
 
 
 def test_epoch_runs_one_job_and_one_stage(spark, training_df):

@@ -363,7 +363,7 @@ def _hops(a, b, cfg, dim, min_keys):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(SK, "_PARALLEL_MIN_KEYS", min_keys)
         pa, pb = SK.to_bytes(a), SK.to_bytes(b)
-        return pa, pb, SK.merge_payloads(pa, pb, cfg, dim), SK.to_bytes(SK.merge(a, b, cfg, dim))
+        return pa, pb, SK.merge_hop(pa, pb, cfg, dim)[0], SK.to_bytes(SK.merge(a, b, cfg, dim))
 
 
 @given(sparse_grads(), CODECS)
@@ -375,8 +375,27 @@ def test_threaded_payloads_equal_serial(grads, cfg):
     threaded, serial = _hops(a, b, cfg, dim, 0), _hops(a, b, cfg, dim, 1 << 62)
     assert threaded == serial
     pa, pb = serial[:2]
-    # merge_payloads is the decode, merge and encode of one combine
+    # merge_hop's payload is the decode, merge and encode of one combine
     assert threaded[2] == SK.to_bytes(SK.merge(SK.from_bytes(pa), SK.from_bytes(pb), cfg, dim))
+
+
+@given(sparse_grads(), CODECS)
+@SETTLE
+def test_merge_hop_keeps_the_gradient_it_encodes(grads, cfg):
+    """``merge_hop``'s gradient is its payload parsed back: it encodes
+    to that payload, and its runs scatter to the same dense values."""
+    dim, [(ka, va), (kb, vb)] = grads
+    pa = SK.to_bytes(SK.compress_kv(ka, va, cfg, dim))
+    pb = SK.to_bytes(SK.compress_kv(kb, vb, cfg, dim))
+    payload, sg = SK.merge_hop(pa, pb, cfg, dim)
+    assert payload == SK.to_bytes(sg)
+    parsed = SK.decompress(SK.from_bytes(payload), dim)
+    assert SK.decompress(sg, dim).tobytes() == parsed.tobytes()
+    scattered = np.zeros(dim)
+    for keys, vals in SK.runs(sg):
+        assert not scattered[keys].any()  # the runs' keys are disjoint
+        scattered[keys] = vals
+    assert scattered.tobytes() == parsed.tobytes()
 
 
 def test_small_hops_stay_on_the_calling_thread(monkeypatch):
@@ -396,7 +415,7 @@ def test_small_hops_stay_on_the_calling_thread(monkeypatch):
 
 
 def _hop_in_child(conn, pa, pb, dim):
-    conn.send(SK.merge_payloads(pa, pb, SKETCH, dim))
+    conn.send(SK.merge_hop(pa, pb, SKETCH, dim)[0])
     conn.close()
 
 
@@ -407,7 +426,7 @@ def test_forked_child_makes_its_own_thread_pool(monkeypatch):
     dim, [(ka, va), (kb, vb)] = 5000, [_wide_partition_gradient(s, 5000) for s in (1, 2)]
     pa = SK.to_bytes(SK.compress_kv(ka, va, SKETCH, dim))
     pb = SK.to_bytes(SK.compress_kv(kb, vb, SKETCH, dim))
-    want = SK.merge_payloads(pa, pb, SKETCH, dim)  # the parent's pool exists now
+    want = SK.merge_hop(pa, pb, SKETCH, dim)[0]  # the forking process's pool exists now
     ctx = multiprocessing.get_context("fork")
     recv, send = ctx.Pipe(duplex=False)
     child = ctx.Process(target=_hop_in_child, args=(send, pa, pb, dim))
@@ -428,12 +447,12 @@ def test_concurrent_hops_share_the_pool(monkeypatch):
     dim = 5000
     payloads = [SK.to_bytes(SK.compress_kv(*_wide_partition_gradient(s, dim), SKETCH, dim)) for s in range(4)]
     pairs = [(payloads[i], payloads[(i + 1) % 4]) for i in range(4)] * 4
-    want = [SK.merge_payloads(pa, pb, SKETCH, dim) for pa, pb in pairs]
+    want = [SK.merge_hop(pa, pb, SKETCH, dim)[0] for pa, pb in pairs]
     monkeypatch.setattr(SK, "_PARALLEL_MIN_KEYS", 0)
     got = [None] * len(pairs)
 
     def hop(i):
-        got[i] = SK.merge_payloads(*pairs[i], SKETCH, dim)
+        got[i] = SK.merge_hop(*pairs[i], SKETCH, dim)[0]
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
